@@ -341,34 +341,21 @@ object Knn {
     // accumulate on driver and executors for the life of the session.
     // The final top-k is then itself checkpointed eagerly so every shard's
     // P·|shard|·k partial blocks can be freed right here — only the Q·k
-    // ANSWER rows stay in block storage (for the session, the repo-wide
-    // truncated-lineage tradeoff; executor loss mid-query is
-    // unrecoverable, rerun the query).
+    // ANSWER rows stay in block storage, until the caller drops the result
+    // (see Materialize for the truncated-lineage tradeoff).
     if (shards.lengthCompare(1) == 0) finalTopK(shardPartials(shards.head)._1)
     else {
       val eagers = shards.map { shard =>
         val (df, bc) = shardPartials(shard)
-        val eager = df.localCheckpoint(eager = true)
+        val eager = Materialize.eager(df)
         bc.destroy()
         eager
       }
-      val result = finalTopK(eagers.reduce(_.unionAll(_)))
-        .localCheckpoint(eager = true)
-      eagers.foreach(freeLocalCheckpoint)
+      val result = Materialize.eager(finalTopK(eagers.reduce(_.unionAll(_))))
+      eagers.foreach(Materialize.release)
       result
     }
   }
-
-  /** Unpersists the RDD blocks behind a `localCheckpoint`'d DataFrame.
-    * `Dataset.unpersist` only clears CacheManager entries, not checkpoint
-    * blocks — those live on the LogicalRDD's backing RDD.
-    */
-  private def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 
   /** Cell-partitioned batch k-NN join — the unbounded-Q form of
     * [[topKJoin]]: the query set stays a DataFrame end to end (nothing is

@@ -114,13 +114,9 @@ object MinHashLSH {
       threshold: Double = 0.5,
       maxDf: Int = 256): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    // Hash once, persist: the posting explode and the two size joins are
-    // separate DAG branches — without the materialization the shingling +
-    // md5 pass (the scan-side hot spot) runs once per branch.
-    val hashed = persistOnce(df.repartition(par).select(col(idCol).as("__id"),
+    val hashed = df.repartition(par).select(col(idCol).as("__id"),
         graft.functions.HashExpressions
           .shingleHash60Array(TF.tokens(col(textCol)), w).as("__th"))
-      .select(col("__id"), col("__th")))
     val e = hashed.select(col("__id"), explode(col("__th")).as("__h"))
     // Postings + df-cut in ONE pass of the posting stream (round-12,
     // guide §2.3/§2.4): CappedList bounds the aggregation buffer of an
@@ -130,7 +126,14 @@ object MinHashLSH {
     // three times (profiled at q61: 3 stages × ~3 s task-time each
     // writing the identical 2.5 MB). An under-cut shingle's list is
     // complete by construction, so the cut semantics are unchanged.
-    val postings = persistOnce(e.groupBy(col("__h"))
+    //
+    // Postings are materialized eagerly (Materialize): their three
+    // consumers (sz, the pair stream, and the sz broadcast builds) are
+    // submitted as CONCURRENT broadcast-future jobs, and a lazy postings
+    // subtree makes each of them re-run the shingle+md5+grouping pass
+    // against the parquet scan (profiled at q61: three overlapping stages
+    // each reading the full documents input).
+    val postings = Materialize.eager(e.groupBy(col("__h"))
       .agg(graft.functions.CappedList.cappedList(col("__id"),
           // maxDf = Int.MaxValue means "cut off": clamp instead of overflow
           if (maxDf >= Int.MaxValue) Int.MaxValue else maxDf + 1)
@@ -138,14 +141,6 @@ object MinHashLSH {
         count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDf)
       .select(col("__h"), sort_array(col("__ds0")).as("ds")))
-    // Materialize the postings cache NOW (round-13): its three consumers
-    // (sz, the pair stream, and the sz broadcast builds) are submitted as
-    // CONCURRENT broadcast-future jobs, and an unpopulated cache makes
-    // each of them re-run the shingle+md5+grouping subtree against the
-    // parquet scan (profiled at q61: three overlapping stages each
-    // reading the full documents input). One count() populates the cache
-    // once; the hashed persist above materializes inside the same job.
-    postings.count()
     // post-cut set size per doc: |retained shingles| — derived from the
     // CUT postings (≡ the former kept-rows count: each kept (doc,
     // shingle) row appears in exactly one under-cut posting); every doc
@@ -165,16 +160,6 @@ object MinHashLSH {
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
-
-  /** persist() unless this exact plan is already cached — benchmark reps
-    * and shared-subtree callers otherwise trip CacheManager's "already
-    * cached" warning and double bookkeeping. `storageLevel` is the public
-    * CacheManager lookup.
-    */
-  private def persistOnce(df: DataFrame): DataFrame =
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
 
   /** Near-dup detection for corpora with large EXACT-duplicate groups — the
     * canonical 100 TB pipeline shape. A group of g byte-identical documents
@@ -263,10 +248,11 @@ object MinHashLSH {
           .shingleHash60Array(TF.tokens(col(textCol)), w).as("__th"))
       .select(col("__id"), size(col("__th")).as("__n"), col("__th"))
     // The banded self-join + the two verification joins would otherwise
-    // re-evaluate the hashing subtree once per reference — cache it (a few
-    // KB per document; at cluster scale this is the natural materialization
-    // point anyway: signatures are written once and reused per batch).
-    val sig = persistOnce(hashed.select(col("__id"), col("__n"), col("__th"),
+    // re-evaluate the hashing subtree once per reference — materialize it
+    // (a few KB per document; at cluster scale this is the natural
+    // materialization point anyway: signatures are written once and reused
+    // per batch).
+    val sig = Materialize.eager(hashed.select(col("__id"), col("__n"), col("__th"),
       graft.functions.HashExpressions
         .minhashSignature(col("__th"), k, A.take(k), B.take(k)).as("__sig")))
 
@@ -298,7 +284,7 @@ object MinHashLSH {
 
     // Exact verification: Jaccard over the hashed shingle sets (linear merge
     // of the sorted arrays; hash collisions would need ~2^61 shingle pairs).
-    val sets = hashed.select(col("__id"), col("__n"), col("__th"))
+    val sets = sig.select(col("__id"), col("__n"), col("__th"))
     val withSets = cand
       .join(sets.select(col("__id").as("doc_a"), col("__n").as("__na"),
         col("__th").as("__ta")), "doc_a")

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed running (prefix) sum — the scale-correct form of
   * `sum(x) OVER (PARTITION BY g ORDER BY o ROWS UNBOUNDED PRECEDING)`
@@ -22,12 +21,12 @@ import org.apache.spark.storage.StorageLevel
   *  3. one bounded-state pass adds offset + local running sum to every
   *     row — no per-group serialization anywhere.
   *
-  * The sorted projection stays persisted (guarded, like MinHashLSH's
-  * signature cache): the offsets were computed against ONE materialized
-  * range partitioning, and a recompute could legally re-sample different
-  * boundaries. Long and Double value columns supported (exact for Long;
-  * Double accumulates left-to-right in sort order, matching the window's
-  * own order of accumulation).
+  * The sorted projection is materialized eagerly ([[Materialize]]): the
+  * offsets are computed against ONE range partitioning, and a recompute
+  * could legally re-sample different boundaries — the checkpoint's
+  * truncated lineage rules a recompute out. Long and Double value columns
+  * supported (exact for Long; Double accumulates left-to-right in sort
+  * order, matching the window's own order of accumulation).
   *
   * Output: the projected (groupCols…, orderCols…, valueCol) rows plus
   * `outCol` = running sum INCLUDING the current row. `orderCols` must be a
@@ -54,12 +53,12 @@ object PrefixSum {
     }
     val keyCols = (groupCols ++ orderCols).map(col)
     val valueCast = col(valueCol).cast(if (isLong) "long" else "double")
-    // The partition id is STAMPED into the persisted projection (not
+    // The partition id is STAMPED into the materialized projection (not
     // re-derived per pass), so both passes read the same pid source; this
     // guards against rdd-index vs spark_partition_id divergence, NOT
-    // against a recompute (a recompute re-stamps __pid too — the persist
-    // above is the real defense against re-sampled range boundaries).
-    val sorted = persistOnce(df
+    // against a recompute (a recompute re-stamps __pid too — the truncated
+    // lineage is the real defense against re-sampled range boundaries).
+    val sorted = Materialize.eager(df
       .select(keyCols :+ valueCast.as("__v"): _*)
       .repartitionByRange(nPart, keyCols: _*)
       .sortWithinPartitions(keyCols: _*)
@@ -120,9 +119,4 @@ object PrefixSum {
     spark.createDataFrame(outRdd, outSchema)
       .withColumnRenamed("__v", valueCol)
   }
-
-  private def persistOnce(df: DataFrame): DataFrame =
-    if (df.storageLevel == StorageLevel.NONE)
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-    else df
 }

@@ -66,7 +66,7 @@ object SignatureStore {
                        maxBucket: Int = 0): DataFrame = {
     val bands = k / rowsPerBand
     val sigCols = Seq("doc_id", "n", "th", "sig").map(col)
-    val batchP = persistOnce(batch.select(sigCols: _*))
+    val batchP = Materialize.eager(batch.select(sigCols: _*))
     val all = store.select(sigCols: _*).unionByName(batchP)
 
     def banded(sigs: DataFrame): DataFrame = sigs.select(col("doc_id"),
@@ -112,9 +112,4 @@ object SignatureStore {
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
-
-  private def persistOnce(df: DataFrame): DataFrame =
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
 }

@@ -78,24 +78,18 @@ object PartitionedStore {
       else None
     }.toMap
 
-    if (plan.nonEmpty) {
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try plan.foreach { case (ym, (_, want)) =>
-        // localCheckpoint = the repo's read-then-overwrite-same-path write
-        // barrier (IncrementalIngest precedent): rows are materialized on
-        // executors before the partition they came from is replaced
-        spark.read.parquet(dir).filter(col("ym") === ym)
-          .repartitionByRange(want, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-          .localCheckpoint()
-          .write.mode("overwrite").partitionBy("ym").parquet(dir)
-      } finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+    plan.foreach { case (ym, (_, want)) =>
+      // localCheckpoint = the repo's read-then-overwrite-same-path write
+      // barrier (IncrementalIngest precedent): rows are materialized on
+      // executors before the partition they came from is replaced
+      spark.read.parquet(dir).filter(col("ym") === ym)
+        .repartitionByRange(want, sortCols.map(col): _*)
+        .sortWithinPartitions(sortCols.map(col): _*)
+        .localCheckpoint()
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ym").parquet(dir)
     }
-    plan.map { case (ym, (before, want)) => ym -> (before, want) }
+    plan
   }
 
   /** Write `df` clustered on the Z-ORDER of two dimension columns (the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.SignatureStore
+import graft.ops.{Materialize, SignatureStore}
 
 /** Continuous corpus dedup: the streaming composition of
   * [[graft.ops.SignatureStore]] — each micro-batch of documents is
@@ -78,8 +78,8 @@ object DedupStream {
     // (twice — banding and verification) AND the store append, and the
     // source files of a streaming batch must not be re-read after the
     // micro-batch ends.
-    val sigs = SignatureStore.signatures(batch, idCol, textCol, w, k)
-      .localCheckpoint(eager = true)
+    val sigs = Materialize.eager(
+      SignatureStore.signatures(batch, idCol, textCol, w, k))
     try {
       if (sigs.isEmpty) return
       val store: DataFrame =
@@ -92,6 +92,6 @@ object DedupStream {
       // Only after the pairs are durably written does the batch join the
       // store — a replayed batch re-reads the same store state.
       sigs.write.mode("append").parquet(storeDir)
-    } finally sigs.unpersist()
+    } finally Materialize.release(sigs)
   }
 }

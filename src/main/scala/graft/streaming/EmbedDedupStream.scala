@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.ops.Materialize
+
 /** Continuous EMBEDDING dedup: the streaming composition of
   * [[graft.ops.Knn.srpIncrementalPairs]] — each micro-batch of vectors is
   * near-dup checked against the PERSISTED vector store (batch-touching
@@ -62,9 +64,8 @@ object EmbedDedupStream {
     // Materialize once: the batch feeds the pair join (banding + verify,
     // both sides) AND the store append; streaming source files must not
     // be re-read after the micro-batch ends.
-    val vecs = batch.select(batch(idCol), batch(vecCol))
-      .filter(batch(vecCol).isNotNull)
-      .localCheckpoint(eager = true)
+    val vecs = Materialize.eager(batch.select(batch(idCol), batch(vecCol))
+      .filter(batch(vecCol).isNotNull))
     try {
       if (vecs.isEmpty) return
       val store: DataFrame =
@@ -78,6 +79,6 @@ object EmbedDedupStream {
       // Only after the pairs are durably written does the batch join the
       // store — a replayed batch re-reads the same store state.
       vecs.write.mode("append").parquet(storeDir)
-    } finally vecs.unpersist()
+    } finally Materialize.release(vecs)
   }
 }

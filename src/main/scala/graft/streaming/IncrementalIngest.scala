@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Materialize}
 
 /** Incremental ingest: the Spark-native restatement of the reference's
   * scheduler loop + checkpoint + upsert storage (SURVEY.md §2.10 T1–T5):
@@ -59,12 +59,16 @@ object IncrementalIngest {
     // real scale: stage-and-swap or a snapshotting table format — the same
     // commit-then-delete discipline as the reference's cache loader,
     // crypto_data_pipeline_clickhouse.py:644-649.)
-    val staged = merged.localCheckpoint(true)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    val staged = Materialize.eager(merged)
+    // dynamic overwrite as a per-write option, never on the session: a
+    // session-wide mode would make every later partitioned overwrite in the
+    // session (e.g. PartitionedStore.write rebuilding a table) keep the
+    // months its input does not cover
     staged.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("ym")
       .parquet(tableDir)
-    staged.unpersist()
+    Materialize.release(staged)
   }
 
   /** One catch-up run: ingest all not-yet-processed files under `srcDir`

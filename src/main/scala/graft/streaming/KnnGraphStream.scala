@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.Knn
+import graft.ops.{Knn, Materialize}
 
 /** Incremental kNN-GRAPH maintenance — the streaming form of the ANN index
   * upkeep q332/q344 audit in batch: each micro-batch of vectors joins the
@@ -79,9 +79,8 @@ object KnnGraphStream {
       k: Int = 5,
       kCells: Int = 4,
       iters: Int = 2): Unit = {
-    val vecs = batch.select(batch(idCol), batch(vecCol))
-      .filter(batch(vecCol).isNotNull)
-      .localCheckpoint(eager = true)
+    val vecs = Materialize.eager(batch.select(batch(idCol), batch(vecCol))
+      .filter(batch(vecCol).isNotNull))
     try {
       if (vecs.isEmpty) return
       def readOr(dir: String, like: DataFrame): DataFrame =
@@ -106,7 +105,7 @@ object KnnGraphStream {
       val newGraph = merged.unionByName(eNew).localCheckpoint(eager = true)
       newGraph.write.mode("overwrite").parquet(graphDir)
       newVecs.write.mode("append").parquet(storeDir)
-    } finally vecs.unpersist()
+    } finally Materialize.release(vecs)
   }
 
   /** Exact kNN graph over one vector frame — the batch-rebuild reference

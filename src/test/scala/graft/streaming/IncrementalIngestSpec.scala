@@ -74,6 +74,32 @@ class IncrementalIngestSpec extends AnyFunSuite {
     assert(parts === Array("ym=202401", "ym=202402"))
   }
 
+  test("upsertBatch leaves the session conf alone; a later table rebuild keeps only its months") {
+    val table = Files.createTempDirectory("graft_upsert_conf").toString + "/table"
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(mode)
+    def mk(rows: Seq[(String, Long, Long, Double)]) =
+      rows.toDF("symbol", "ts_us", "ingest_seq", "close")
+        .withColumn("tstamp", timestamp_micros($"ts_us"))
+    val janUs = 1704067200L * 1000000L  // 2024-01-01
+    val febUs = 1706745600L * 1000000L  // 2024-02-01
+
+    IncrementalIngest.upsertBatch(spark,
+      mk(Seq(("BTC", janUs, 1L, 100.0), ("BTC", febUs, 1L, 110.0))),
+      keys = Seq("symbol", "ts_us"), version = Seq("ingest_seq"),
+      tsCol = "tstamp", tableDir = table)
+    assert(spark.conf.getOption(mode) === before)
+
+    // a full rebuild from February alone replaces the whole table
+    graft.sources.PartitionedStore.write(mk(Seq(("ETH", febUs, 1L, 11.0))),
+      "tstamp", Seq("symbol", "ts_us"), table)
+    val parts = new java.io.File(table).listFiles()
+      .filter(_.isDirectory).map(_.getName).sorted
+    assert(parts === Array("ym=202402"))
+    assert(spark.read.parquet(table).select("symbol").as[String].collect()
+      === Array("ETH"))
+  }
+
   test("continuous trigger: files landed while running flow through watermarked dedup") {
     val root = Files.createTempDirectory("graft_cont").toString
     val src = s"$root/src"; val table = s"$root/table"; val ckpt = s"$root/ckpt"
