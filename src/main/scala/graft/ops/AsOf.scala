@@ -36,42 +36,9 @@ object AsOf {
       leftTs: String,
       rightTs: String,
       valueCols: Seq[String],
-      rightVersion: Seq[String] = Seq.empty): DataFrame = {
-
-    val rv = struct(valueCols.map(col): _*)
-    // Tie-break columns must travel through the union to feed the sort.
-    val vNames = rightVersion.indices.map(i => s"__v$i")
-    val vCols = rightVersion.zip(vNames).map { case (c, n) => col(c).as(n) }
-    val rightTagged = right.select(
-      (keys.map(col) ++ Seq(col(rightTs).as("__t")) ++ vCols :+ rv.as("__rv")): _*)
-    val rvType = rightTagged.schema("__rv").dataType
-    val vTypes = vNames.map(n => rightTagged.schema(n).dataType)
-
-    // __side: right=0 sorts before left=1 at equal time → inclusive backward.
-    val r = rightTagged.withColumn("__side", lit(0))
-    val leftCols = left.columns
-    val lExtra =
-      Seq(col(leftTs).as("__t")) ++
-      vNames.zip(vTypes).map { case (n, t) => lit(null).cast(t).as(n) } ++
-      Seq(lit(null).cast(rvType).as("__rv"), lit(1).as("__side"))
-    val l = left.select((leftCols.map(col) ++ lExtra): _*)
-
-    // Align right's columns to left's shape (missing left cols → null).
-    val rAligned = r.select(
-      (leftCols.map(c => if (keys.contains(c)) col(c) else lit(null).cast(left.schema(c).dataType).as(c))
-        ++ Seq(col("__t")) ++ vNames.map(col) ++ Seq(col("__rv"), col("__side"))): _*)
-
-    val ordCols: Seq[Column] =
-      col("__t") +: col("__side") +: vNames.map(col)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(ordCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    l.unionByName(rAligned)
-      .withColumn("__filled", last(col("__rv"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .select((leftCols.map(col) ++ valueCols.map(c => col(s"__filled.$c").as(c))): _*)
-  }
+      rightVersion: Seq[String] = Seq.empty): DataFrame =
+    join(left, right, keys, leftTs, rightTs, valueCols, rightVersion,
+      forward = false)
 
   /** Forward as-of: for each left row, attach `valueCols` from the EARLIEST
     * right row with `right(rightTs) >= left(leftTs)` within `keys`
@@ -91,9 +58,22 @@ object AsOf {
       leftTs: String,
       rightTs: String,
       valueCols: Seq[String],
-      rightVersion: Seq[String] = Seq.empty): DataFrame = {
+      rightVersion: Seq[String] = Seq.empty): DataFrame =
+    join(left, right, keys, leftTs, rightTs, valueCols, rightVersion,
+      forward = true)
+
+  private def join(
+      left: DataFrame,
+      right: DataFrame,
+      keys: Seq[String],
+      leftTs: String,
+      rightTs: String,
+      valueCols: Seq[String],
+      rightVersion: Seq[String],
+      forward: Boolean): DataFrame = {
 
     val rv = struct(valueCols.map(col): _*)
+    // Tie-break columns must travel through the union to feed the sort.
     val vNames = rightVersion.indices.map(i => s"__v$i")
     val vCols = rightVersion.zip(vNames).map { case (c, n) => col(c).as(n) }
     val rightTagged = right.select(
@@ -101,38 +81,42 @@ object AsOf {
     val rvType = rightTagged.schema("__rv").dataType
     val vTypes = vNames.map(n => rightTagged.schema(n).dataType)
 
-    // __side: in the DESCENDING scan below, right=1 sorts before left=0 at
-    // equal time (side desc), so a same-timestamp right row is already in the
-    // preceding frame when the left row is evaluated: inclusive forward.
-    val r = rightTagged.withColumn("__side", lit(1))
+    // __side: the right row is scanned before the left one at equal time,
+    // so a same-timestamp right row is already in the frame: inclusive.
+    // Backward: right=0 sorts before left=1 ascending; forward: right=1
+    // sorts before left=0 in the DESCENDING scan below (side desc).
+    val (rightSide, leftSide) = if (forward) (1, 0) else (0, 1)
+    val r = rightTagged.withColumn("__side", lit(rightSide))
     val leftCols = left.columns
     val lExtra =
       Seq(col(leftTs).as("__t")) ++
       vNames.zip(vTypes).map { case (n, t) => lit(null).cast(t).as(n) } ++
-      Seq(lit(null).cast(rvType).as("__rv"), lit(0).as("__side"))
+      Seq(lit(null).cast(rvType).as("__rv"), lit(leftSide).as("__side"))
     val l = left.select((leftCols.map(col) ++ lExtra): _*)
 
+    // Align right's columns to left's shape (missing left cols → null).
     val rAligned = r.select(
       (leftCols.map(c => if (keys.contains(c)) col(c) else lit(null).cast(left.schema(c).dataType).as(c))
         ++ Seq(col("__t")) ++ vNames.map(col) ++ Seq(col("__rv"), col("__side"))): _*)
 
-    // Time sorts DESC and the frame is unboundedPreceding→currentRow: Spark's
-    // SlidingWindowFunctionFrame evaluates `last(ignoreNulls)` incrementally
-    // (O(n) per key), whereas a currentRow→unboundedFollowing frame rescans to
-    // partition end for every row (O(n²) per key — a stall on hot keys).
-    // `last` in the descending scan = the right row with the SMALLEST
-    // __t >= leftTs. Versions sort ASC so, within an equal-(t, side) run, the
-    // highest version sits closest to the current row and wins — keep-last
-    // tie semantics, mirroring joinBackward.
+    // Forward sorts time DESC with the same unboundedPreceding→currentRow
+    // frame: Spark's SlidingWindowFunctionFrame evaluates `last(ignoreNulls)`
+    // incrementally (O(n) per key), whereas a currentRow→unboundedFollowing
+    // frame rescans to partition end for every row (O(n²) per key — a stall
+    // on hot keys). `last` in the descending scan = the right row with the
+    // SMALLEST __t >= leftTs. Versions sort ASC in both directions so,
+    // within an equal-(t, side) run, the highest version sits closest to
+    // the current row and wins — keep-last tie semantics.
+    val dir: Column => Column = if (forward) _.desc else identity
     val ordCols: Seq[Column] =
-      col("__t").desc +: col("__side").desc +: vNames.map(n => col(n).asc)
+      dir(col("__t")) +: dir(col("__side")) +: vNames.map(col)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(ordCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
     l.unionByName(rAligned)
       .withColumn("__filled", last(col("__rv"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 0)
+      .filter(col("__side") === leftSide)
       .select((leftCols.map(col) ++ valueCols.map(c => col(s"__filled.$c").as(c))): _*)
   }
 }

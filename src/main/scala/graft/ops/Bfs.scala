@@ -75,13 +75,12 @@ object Bfs {
                     maxHops: Int,
                     driverThreshold: Long = defaultDriverThreshold): DataFrame = {
     require(maxHops >= 0, s"maxHops=$maxHops must be >= 0")
-    // persist the edge projection ONCE (the ShortestPath discipline): the
+    // pin the edge projection ONCE (the ShortestPath discipline): the
     // per-round frontier join otherwise re-runs the caller's whole edge
     // derivation every hop — and rounds grow with the graph, so the
     // round-9 runtime scan audit measured the corpus re-scan count
     // RISING with scale (3 scans at sf0.001 → 5 at sf0.01 on q124)
-    val e = edges.select(col(aCol).as("__a"), col(bCol).as("__b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = Materialize.eager(edges.select(col(aCol).as("__a"), col(bCol).as("__b")))
     try {
       // same id type on both frames: the driver map keys by JVM value
       if (driverThreshold > 0 &&
@@ -92,23 +91,23 @@ object Bfs {
         return driverKHop(edges.sparkSession, g,
           e.schema("__a").dataType, vCol, maxHops)
       }
-      var dist = sources.select(col(vCol).as("__v")).distinct()
-        .withColumn("dist", lit(0L))
-        .localCheckpoint(true)
+      var dist = Materialize.eager(sources.select(col(vCol).as("__v")).distinct()
+        .withColumn("dist", lit(0L)))
       var frontier = dist
       var h = 1L
       while (h <= maxHops && !frontier.isEmpty) {
-        val reachedNow = frontier.join(e, col("__v") === col("__a"))
+        val reachedNow = Materialize.eager(frontier.join(e, col("__v") === col("__a"))
           .select(col("__b").as("__v")).distinct()
           .join(dist.select(col("__v")), Seq("__v"), "left_anti")
-          .withColumn("dist", lit(h))
-          .localCheckpoint(true)
-        dist = dist.unionByName(reachedNow).localCheckpoint(true)
+          .withColumn("dist", lit(h)))
+        val grown = Materialize.eager(dist.unionByName(reachedNow))
+        Materialize.release(dist, frontier)
+        dist = grown
         frontier = reachedNow
         h += 1
       }
-      // checkpointed unions: safe to unpersist e in finally
+      if (frontier ne dist) Materialize.release(frontier)
       dist.select(col("__v").as(vCol), col("dist"))
-    } finally e.unpersist(blocking = false)
+    } finally Materialize.release(e)
   }
 }

@@ -89,9 +89,10 @@ object BpeTrain {
   def train(words: DataFrame, wordCol: String, cntCol: String, rounds: Int)
       : (Seq[Merge], DataFrame) = {
     require(rounds >= 0, s"rounds=$rounds must be >= 0")
-    var st = words.select(col(wordCol).as("w"), col(cntCol).as("cnt"),
-        filter(split(col(wordCol), ""), x => x =!= lit("")).as("syms"))
-      .localCheckpoint(true)
+    var pinned = Materialize.eager(words.select(col(wordCol).as("w"),
+      col(cntCol).as("cnt"),
+      filter(split(col(wordCol), ""), x => x =!= lit("")).as("syms")))
+    var st = pinned
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var r = 1
     var dry = false
@@ -122,7 +123,11 @@ object BpeTrain {
         merges += Merge(r, a, b, wgt, nPt)
         st = st.select(col("w"), col("cnt"),
           applyMergeGreedy(col("syms"), a, b).as("syms"))
-        if (r % 8 == 0) st = st.localCheckpoint(true)
+        if (r % 8 == 0) {
+          st = Materialize.eager(st)
+          Materialize.release(pinned)
+          pinned = st
+        }
         r += 1
       }
     }

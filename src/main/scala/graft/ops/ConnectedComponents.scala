@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an undirected edge list — the step that turns
   * near-duplicate PAIRS (MinHashLSH / SimHash / Knn output) into duplicate
@@ -61,21 +60,19 @@ object ConnectedComponents {
   def runCounted(edges: DataFrame, aCol: String, bCol: String,
                  maxIter: Int = 25,
                  driverThreshold: Long = 1L << 20): (DataFrame, Int) = {
-    // Persist the DIRECTED projection, then mirror it: the symmetric union
+    // Pin the DIRECTED projection, then mirror it: the symmetric union
     // would otherwise embed the caller's edge computation twice (near-dup
     // pair generation is expensive — measured 2× its cost inside q57
-    // before this), whereas the mirror of a cached frame is a cache scan.
-    val e0 = edges.select(col(aCol).as("s"), col(bCol).as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // before this), whereas the mirror of a pinned frame is a block scan.
+    val e0 = Materialize.eager(edges.select(col(aCol).as("s"), col(bCol).as("d")))
     val idType = e0.schema("s").dataType
     val integralIds = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
-    if (integralIds && e0.count() <= driverThreshold)
-      return try (runOnDriver(e0, idType), 0)
-      finally e0.unpersist(blocking = false)
-    val sym = e0.unionAll(e0.select(col("d").as("s"), col("s").as("d")))
     try {
-      // Eager localCheckpoint per iteration, NOT persist: `jumped`
+      if (integralIds && e0.count() <= driverThreshold)
+        return (runOnDriver(e0, idType), 0)
+      val sym = e0.unionAll(e0.select(col("d").as("s"), col("s").as("d")))
+      // Eager checkpoint per iteration, NOT persist: `jumped`
       // references `next` twice (the pointer-jump self-join), so without
       // lineage truncation the logical plan DOUBLES per round and Catalyst
       // re-analysis goes exponential — execution would short-circuit at a
@@ -84,9 +81,8 @@ object ConnectedComponents {
       // each round's plan with its materialized blocks — the standard
       // barrier for iterative DataFrame algorithms (same device as
       // IncrementalIngest's read-overwrite barrier).
-      var labels = sym.select(col("s").as("v")).distinct()
-        .withColumn("comp", col("v"))
-        .localCheckpoint(true)
+      var labels = Materialize.eager(sym.select(col("s").as("v")).distinct()
+        .withColumn("comp", col("v")))
       var iter = 0
       var converged = false
       while (iter < maxIter && !converged) {
@@ -97,20 +93,19 @@ object ConnectedComponents {
           .join(nbrMin.withColumnRenamed("s", "v"), Seq("v"), "left")
           .select(col("v"),
             least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
-        val jumped = next.as("x")
+        val jumped = Materialize.eager(next.as("x")
           .join(next.select(col("v").as("comp"), col("comp").as("cc")), Seq("comp"), "left")
-          .select(col("v"), coalesce(col("cc"), col("comp")).as("comp"))
-          .localCheckpoint(true)
+          .select(col("v"), coalesce(col("cc"), col("comp")).as("comp")))
         converged = jumped
           .join(labels.select(col("v"), col("comp").as("__prev")), "v")
           .filter(col("comp") =!= col("__prev"))
           .isEmpty
-        labels.unpersist(blocking = false)
+        Materialize.release(labels)
         labels = jumped
         iter += 1
       }
       (labels, iter)
-    } finally e0.unpersist(blocking = false)
+    } finally Materialize.release(e0)
   }
 
   /** Union-find with path compression, smaller id stays root — so labels

@@ -89,16 +89,15 @@ object Dedup {
     // when this was left lazy (round-9 measured scan audit: q61's grouping
     // pipeline read documents 4×, now 2 — this pin and the canonical-text
     // fetch)
-    val withFp = df.select(col(idCol).as("member_id"), fp.as("__fp"))
-      .localCheckpoint()
+    val withFp = Materialize.eager(
+      df.select(col(idCol).as("member_id"), fp.as("__fp")))
     // pin canon too (round-13): it has TWO lazy consumers — the
     // membership join and the canonical-row semi-join — so the group-min
     // aggregate over withFp ran twice (profiled at q117: two ~3.3 s-task-
     // time stages computing identical ~3.6k rows); one row per distinct
     // content, so the materialization is tiny
-    val canon = withFp.groupBy(col("__fp"))
-      .agg(min(col("member_id")).as("canonical_id"))
-      .localCheckpoint()
+    val canon = Materialize.eager(withFp.groupBy(col("__fp"))
+      .agg(min(col("member_id")).as("canonical_id")))
     val membership = withFp.join(canon, "__fp")
       .select(col("canonical_id"), col("member_id"))
     val canonicalRows = df.join(

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Greedy maximum-coverage selection: per group, pick `k` items one at a
   * time, each maximizing the number of tokens NOT yet covered by earlier
@@ -15,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
   * partition-order-free, and replayable by another engine as k unrolled
   * argmax CTEs.
   *
-  * Scale shape: the (item, token) incidence explodes ONCE and persists;
+  * Scale shape: the (item, token) incidence explodes ONCE and is pinned;
   * each of the k rounds is two anti-joins (drop picked items, drop covered
   * tokens) plus a combinable count aggregation and a combinable
   * max-of-struct argmax per group — all hash-partitioned, nothing driver-
@@ -36,18 +35,16 @@ object GreedyCover {
     require(k >= 1, s"k=$k must be >= 1")
     val base = items.select(col(gCol).as("__g"), col(idCol).as("__id"),
       array_distinct(col(toksCol)).as("__ts"))
-    val ex = base
-      .select(col("__g"), col("__id"), explode(col("__ts")).as("__t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ex = Materialize.eager(base
+      .select(col("__g"), col("__id"), explode(col("__ts")).as("__t")))
     // The eligible-item list must come from `base`, not `ex` (zero-token
     // items have no explode rows but stay pickable) — pinned ONCE: deriving
     // it lazily re-scanned the source corpus in every round's argmax
     // (round-9 measured scan audit: k=4 cost 9 corpus scans; now 2 — this
-    // pin and the `ex` cache build).
-    val ids = base.select(col("__g"), col("__id")).localCheckpoint(true)
+    // pin and the `ex` pin).
+    val ids = Materialize.eager(base.select(col("__g"), col("__id")))
     try {
-      var covered = ex.select(col("__g"), col("__t")).limit(0)
-        .localCheckpoint(true)
+      var covered = Materialize.eager(ex.select(col("__g"), col("__t")).limit(0))
       var picked: DataFrame = null
       for (step <- 1 to k) {
         def unpicked(df: DataFrame): DataFrame =
@@ -66,21 +63,26 @@ object GreedyCover {
             .as("__w"))
           .select(col("__g"), (-col("__w.__nid")).as("__id"),
             col("__w.__gain").as("__gain"), lit(step).as("step"))
-        picked = (if (picked == null) pick else picked.unionByName(pick))
-          .localCheckpoint(true)
+        val next = Materialize.eager(
+          if (picked == null) pick else picked.unionByName(pick))
+        if (picked != null) Materialize.release(picked)
+        picked = next
         // read this round's pick back from the CHECKPOINT: the lazy `pick`
         // frame re-runs the whole argmax derivation when the covered-set
         // update below materializes (the second of the two per-round
         // replays the measured audit caught)
         val pickNow = picked.filter(col("step") === lit(step))
-        covered = covered.unionByName(
+        val nextCovered = Materialize.eager(covered.unionByName(
             ex.join(pickNow.select(col("__g"), col("__id")),
               Seq("__g", "__id"))
               .select(col("__g"), col("__t")))
-          .distinct().localCheckpoint(true)
+          .distinct())
+        Materialize.release(covered)
+        covered = nextCovered
       }
+      Materialize.release(covered)
       picked.select(col("__g").as(gCol), col("__id").as(idCol),
         col("step"), col("__gain").as("gain"))
-    } finally ex.unpersist(blocking = false)
+    } finally Materialize.release(ex, ids)
   }
 }

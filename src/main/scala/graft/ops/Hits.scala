@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed HITS (Kleinberg's hubs & authorities) over an edge list,
   * in the same scaled-integer discipline as [[PageRank]].
@@ -118,8 +117,8 @@ object Hits {
     * hub = scale (the normalization anchors).
     *
     * At or below `driverThreshold` edges (counted after the one-time
-    * distributed dedup, which also materializes the persist) the
-    * half-steps run on the driver — see [[defaultDriverThreshold]].
+    * distributed dedup) the half-steps run on the driver — see
+    * [[defaultDriverThreshold]].
     */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
             iterations: Int = 4,
@@ -127,28 +126,9 @@ object Hits {
             driverThreshold: Long = defaultDriverThreshold): DataFrame = {
     require(iterations >= 1 && scale > 0,
       s"need iterations >= 1 and scale > 0, got $iterations, $scale")
-    val e = edges
+    val e = Materialize.eager(edges
       .select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .filter(col("s") =!= col("d")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (driverThreshold > 0) {
-      val nE = e.count()
-      require(nE > 0, "HITS over an empty graph")
-      if (nE <= driverThreshold) {
-        val g = new DriverGraph.DenseGraph(e.collect())
-        val out = driverRanks(edges.sparkSession, g,
-          e.schema("s").dataType, iterations, scale)
-        e.unpersist(blocking = false)
-        return out
-      }
-    }
-    val verts = e.select(col("s").as("v"))
-      .union(e.select(col("d").as("v"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // loud-by-design on an empty graph: the max-normalization divides by
-    // the largest raw score, which only exists when there is ≥ 1 edge.
-    val nEdges = e.limit(1).count()
-    require(nEdges > 0, "HITS over an empty graph")
+      .filter(col("s") =!= col("d")).distinct())
 
     /** One half-step: raw = Σ over `joinKey` of the partner score along
       * the edge, then rescale to max = `scale`. outKey is the grouped
@@ -172,37 +152,46 @@ object Hits {
     }
 
     try {
-      var hub = verts.withColumn("hub", lit(scale)).localCheckpoint(true)
-      var auth: DataFrame = null
-      var iter = 0
-      while (iter < iterations) {
-        // intermediate auths feed exactly one consumer (the hub half-step
-        // of the same iteration), so only the LAST auth — referenced by
-        // both the final hub step and the output join — is checkpointed;
-        // hub checkpoints every iteration, keeping lineage depth at two
-        // half-steps. (Checkpointing both halves measured 3.8 s at sf0.1
-        // vs 2.6 s for this shape — eager materializations, not plans.)
-        auth = halfStep(hub, "hub", "s", "d", "auth")
-        if (iter == iterations - 1) auth = auth.localCheckpoint(true)
-        val nextHub =
-          halfStep(auth, "auth", "d", "s", "hub").localCheckpoint(true)
-        hub.unpersist(blocking = false)
-        hub = nextHub
-        iter += 1
-      }
-      // materialized (|V| rows) BEFORE the finally releases e/verts — a
-      // lazy result over unpersisted parents would re-scan the corpus at
-      // evaluation time (the q177-advice hazard, same device as KCore).
-      verts
-        .join(auth, Seq("v"), "left")
-        .join(hub, Seq("v"), "left")
-        .select(col("v"),
-          coalesce(col("auth"), lit(0L)).as("auth"),
-          coalesce(col("hub"), lit(0L)).as("hub"))
-        .localCheckpoint(true)
-    } finally {
-      e.unpersist(blocking = false)
-      verts.unpersist(blocking = false)
-    }
+      // loud-by-design on an empty graph: the max-normalization divides by
+      // the largest raw score, which only exists when there is ≥ 1 edge.
+      val nE = e.count()
+      require(nE > 0, "HITS over an empty graph")
+      if (driverThreshold > 0 && nE <= driverThreshold)
+        return driverRanks(edges.sparkSession,
+          new DriverGraph.DenseGraph(e.collect()),
+          e.schema("s").dataType, iterations, scale)
+      val verts = Materialize.eager(e.select(col("s").as("v"))
+        .union(e.select(col("d").as("v"))).distinct())
+      try {
+        var hub = Materialize.eager(verts.withColumn("hub", lit(scale)))
+        var auth: DataFrame = null
+        var iter = 0
+        while (iter < iterations) {
+          // intermediate auths feed exactly one consumer (the hub half-step
+          // of the same iteration), so only the LAST auth — referenced by
+          // both the final hub step and the output join — is checkpointed;
+          // hub checkpoints every iteration, keeping lineage depth at two
+          // half-steps. (Checkpointing both halves measured 3.8 s at sf0.1
+          // vs 2.6 s for this shape — eager materializations, not plans.)
+          auth = halfStep(hub, "hub", "s", "d", "auth")
+          if (iter == iterations - 1) auth = Materialize.eager(auth)
+          val nextHub =
+            Materialize.eager(halfStep(auth, "auth", "d", "s", "hub"))
+          Materialize.release(hub)
+          hub = nextHub
+          iter += 1
+        }
+        // materialized (|V| rows) BEFORE the finally releases e/verts — a
+        // lazy result over released parents fails at evaluation time
+        val out = Materialize.eager(verts
+          .join(auth, Seq("v"), "left")
+          .join(hub, Seq("v"), "left")
+          .select(col("v"),
+            coalesce(col("auth"), lit(0L)).as("auth"),
+            coalesce(col("hub"), lit(0L)).as("hub")))
+        Materialize.release(auth, hub)
+        out
+      } finally Materialize.release(verts)
+    } finally Materialize.release(e)
   }
 }

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Bounded k-core peeling over an undirected edge list.
   *
@@ -23,7 +22,7 @@ import org.apache.spark.storage.StorageLevel
   * corpora co-occurrence graphs is single-digit.
   *
   * Scale shape: the EDGE LIST IS NEVER REWRITTEN — it is symmetrized,
-  * de-duplicated and persisted once, and each round restricts it with two
+  * de-duplicated and pinned once, and each round restricts it with two
   * semi-joins against the LIVE VERTEX SET (|V| rows, broadcast-sized in
   * any graph whose vertex set fits the usual dimension budget) before one
   * map-side-combinable degree count (the shuffle carries ≤ |V| partial
@@ -100,7 +99,7 @@ object KCore {
     * result, not an error.
     *
     * At or below `driverThreshold` edges (counted AFTER the one-time
-    * distributed symmetrize+dedup, which also materializes the persist)
+    * distributed symmetrize+dedup)
     * the peel rounds run on the driver — see [[defaultDriverThreshold]].
     */
   def peel(edges: DataFrame, srcCol: String, dstCol: String,
@@ -117,11 +116,11 @@ object KCore {
     // bothDirections input is just a doubled multiset of the same
     // canonical edges, so the flag no longer changes the computation and
     // is kept only for caller compatibility.
-    val canon = edges
+    val canon = Materialize.eager(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val e = canon.union(canon.select(col("b").as("a"), col("a").as("b")))
     try {
       if (driverThreshold > 0 && 2L * canon.count() <= driverThreshold) {
@@ -133,24 +132,20 @@ object KCore {
         .join(live.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
         .join(live.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
         .groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
-      var live = e.select(col("a").as("v")).distinct().localCheckpoint(true)
+      var live = Materialize.eager(e.select(col("a").as("v")).distinct())
       var r = 0
       while (r < rounds) {
-        val next = liveDegrees(live).filter(col("deg") >= k)
-          .select(col("v")).localCheckpoint(true)
-        live.unpersist(blocking = false)
+        val next = Materialize.eager(
+          liveDegrees(live).filter(col("deg") >= k).select(col("v")))
+        Materialize.release(live)
         live = next
         r += 1
       }
-      // materialize the (≤ |V|-row) result BEFORE releasing canon —
-      // returning a lazy plan over an unpersisted canon would silently
-      // recompute the canonicalize+distinct at evaluation time (the
-      // q177-advice hazard).
-      val out = liveDegrees(live).localCheckpoint(true)
-      live.unpersist(blocking = false)
+      // materialize the (≤ |V|-row) result BEFORE releasing canon — a
+      // lazy plan over a released canon fails at evaluation time
+      val out = Materialize.eager(liveDegrees(live))
+      Materialize.release(live)
       out
-    } finally {
-      canon.unpersist(blocking = false)
-    }
+    } finally Materialize.release(canon)
   }
 }

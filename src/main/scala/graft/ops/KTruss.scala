@@ -93,12 +93,12 @@ object KTruss {
            driverThreshold: Long = defaultDriverThreshold): DataFrame = {
     require(k >= 3 && rounds >= 1, s"need k >= 3, rounds >= 1, got $k, $rounds")
     val need = (k - 2).toLong
-    val tri0 = Triangles.enumerate(edges, srcCol, dstCol)
-      .localCheckpoint(false)
+    val tri0 = Materialize.lazily(Triangles.enumerate(edges, srcCol, dstCol))
     val nTri = tri0.count()
     if (nTri <= driverThreshold) {
       collectLongTriangles(tri0) match {
         case Some(arr0) =>
+          Materialize.release(tri0)
           var tris = arr0
           var support = driverSupportOf(tris)
           var r = 1
@@ -120,7 +120,9 @@ object KTruss {
     while (r < rounds) {
       val removed = support.filter(col("support") < need)
         .select(col("a"), col("b"))
-      tri = Triangles.peelTriangles(tri, removed).localCheckpoint(true)
+      val next = Materialize.eager(Triangles.peelTriangles(tri, removed))
+      Materialize.release(tri)
+      tri = next
       support = Triangles.edgeSupportOf(tri)
       r += 1
     }
@@ -150,8 +152,8 @@ object KTruss {
     * convention, measured both ways in SCALING.md round-12. The
     * distributed loop below is the path for triangle lists that don't
     * fit one machine; its job shape per removal round: ONE Spark job. Both the peeled
-    * triangle list and its support re-group are marked with a LAZY
-    * `localCheckpoint(false)` (lineage truncation keeps the plan
+    * triangle list and its support re-group are pinned with
+    * [[Materialize.lazily]] (lineage truncation keeps the plan
     * constant-size across tens of rounds, storage is the plain RDD
     * cache — cheaper than `persist()`'s columnar re-encode), and the
     * below-threshold `count` that decides convergence is the job that
@@ -160,7 +162,8 @@ object KTruss {
     * as they stream past. The round-11 shape paid three jobs here —
     * two eager checkpoints plus a separate `isEmpty` probe. The final
     * no-removal round costs zero jobs: its below-count was already
-    * computed when its support materialized.
+    * computed when its support materialized. A round's frames are
+    * released once the next round's count has materialized its own.
     *
     * Loop shuffle width: a fixpoint loop re-plans its shuffles every
     * round at the SESSION width, but iterates a frame whose size is
@@ -188,13 +191,13 @@ object KTruss {
     require(k >= 3 && maxRounds >= 1,
       s"need k >= 3, maxRounds >= 1, got $k, $maxRounds")
     val need = (k - 2).toLong
-    var tri = Triangles.enumerate(edges, srcCol, dstCol)
-      .localCheckpoint(false)
+    var tri = Materialize.lazily(Triangles.enumerate(edges, srcCol, dstCol))
     val spark = edges.sparkSession
     val nTri = tri.count() // materializes the checkpoint; bounded scalar
     if (nTri <= driverThreshold) {
       collectLongTriangles(tri) match {
         case Some(arr0) =>
+          Materialize.release(tri)
           // driver peel: the identical recurrence over the collected
           // bounded triangle list — tens of rounds with zero scheduled
           // jobs (measured: the 81-round nChain-160 probe drops from
@@ -221,7 +224,7 @@ object KTruss {
         case None => // non-Long ids: distributed below
       }
     }
-    var support = Triangles.edgeSupportOf(tri).localCheckpoint(false)
+    var support = Materialize.lazily(Triangles.edgeSupportOf(tri))
     var nBelow = support.filter(col("support") < need).count()
     val spKey = "spark.sql.shuffle.partitions"
     val sessionSp =
@@ -237,13 +240,17 @@ object KTruss {
         else {
           val removed = support.filter(col("support") < need)
             .select(col("a"), col("b"))
-          tri = Triangles.peelTriangles(tri, removed).localCheckpoint(false)
-          support = Triangles.edgeSupportOf(tri).localCheckpoint(false)
+          val done = Seq(tri, support)
+          tri = Materialize.lazily(Triangles.peelTriangles(tri, removed))
+          support = Materialize.lazily(Triangles.edgeSupportOf(tri))
           nBelow = support.filter(col("support") < need).count()
+          Materialize.release(done: _*)
         }
         r += 1
       }
     } finally if (loopSp < sessionSp) spark.conf.set(spKey, sessionSp)
+    // the materialized support no longer reads the triangle list
+    Materialize.release(tri)
     FixpointResult(support.filter(col("support") >= need), converged, r)
   }
 

@@ -352,7 +352,7 @@ object Knn {
         eager
       }
       val result = Materialize.eager(finalTopK(eagers.reduce(_.unionAll(_))))
-      eagers.foreach(Materialize.release)
+      Materialize.release(eagers: _*)
       result
     }
   }
@@ -461,7 +461,7 @@ object Knn {
     * quantizer that [[ivfTopK]] consumes. Returns the k centroids
     * (index = cell id).
     *
-    * Shape per iteration: one scan of the (persisted, narrow) training
+    * Shape per iteration: one scan of the (pinned, narrow) training
     * projection assigning each vector to its best centroid via a compiled
     * argmax-of-k expression (k inline cosines — no UDF, no shuffle), then
     * the per-cell elementwise mean: a (cell, pos) hash aggregate with
@@ -478,7 +478,7 @@ object Knn {
     * to k-center, and k-means++'s deterministic cousin): seed with the
     * min-hash vector, then k−1 times take the vector whose best cosine to
     * any chosen centroid is LOWEST (hash tie-break). Each step is one scan
-    * + `limit(1)` over the persisted training projection — k tiny jobs,
+    * + `limit(1)` over the pinned training projection — k tiny jobs,
     * reproducible across runs (no seed-sensitive sampling in the plan),
     * and well-separated clusters are guaranteed one seed each (random
     * init can double-seed a cluster, and Lloyd's can never un-merge).
@@ -494,13 +494,12 @@ object Knn {
     // accessors statically per side, so no per-scan array cast is needed.
     val base = emb.select(col(vecCol).as("__v"))
       .filter(col("__v").isNotNull)    // null-vector exclusion (see topKJoin)
-    val train0 = if (trainFraction < 1.0)
-      base.sample(withReplacement = false, trainFraction, seed = 42) else base
-    val train = train0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val train = Materialize.eager(if (trainFraction < 1.0)
+      base.sample(withReplacement = false, trainFraction, seed = 42) else base)
     try {
       // Farthest-point seeding, one collect job per seed. Measured against
       // a single-job hash-ordered seed batch: total training time was
-      // UNCHANGED (the k-1 jobs are not the bottleneck on a cached sample)
+      // UNCHANGED (the k-1 jobs are not the bottleneck on a pinned sample)
       // while the spread seeding holds a visibly better worst-case recall
       // margin (min_hit 5-6 vs 4 at nProbe=kCells/2) — so the extra jobs
       // earn their latency.
@@ -535,7 +534,7 @@ object Knn {
         it += 1
       }
       cents
-    } finally train.unpersist(blocking = false)
+    } finally Materialize.release(train)
   }
 
   /** Adds the trained quantizer's cell id (`cellCol`) to every row — the

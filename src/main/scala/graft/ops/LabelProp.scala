@@ -101,11 +101,10 @@ object LabelProp {
                   rounds: Int,
                   driverThreshold: Long = defaultDriverThreshold): DataFrame = {
     require(rounds >= 0, s"rounds=$rounds must be >= 0")
-    // persist the edge projection once — the per-round join otherwise
+    // pin the edge projection once — the per-round join otherwise
     // re-runs the caller's edge derivation `rounds`+1 times (the round-9
     // measured scan audit's Bfs finding; same fix)
-    val e = edges.select(col(aCol).as("__a"), col(bCol).as("__b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = Materialize.eager(edges.select(col(aCol).as("__a"), col(bCol).as("__b")))
     try {
       val ordering = DriverGraph.sparkOrdering(e.schema("__a").dataType)
       if (driverThreshold > 0 && ordering.isDefined &&
@@ -115,11 +114,10 @@ object LabelProp {
           e.schema("__a").dataType, ordering.get, rounds)
           .select(col("v"), col("label"))
       }
-      var labels = e.select(col("__a").as("__v"))
+      var labels = Materialize.eager(e.select(col("__a").as("__v"))
         .union(e.select(col("__b")))
         .distinct()
-        .withColumn("__lab", col("__v"))
-        .localCheckpoint(true)
+        .withColumn("__lab", col("__v")))
       for (_ <- 1 to rounds) {
         val nbr = e.join(labels, col("__a") === col("__v"))
           .select(col("__b").as("__v"), col("__lab"))
@@ -133,12 +131,13 @@ object LabelProp {
             .maxScoreMinKey(col("__c"), col("__lab")).as("__new"))
         // a vertex with no in-neighbors keeps its label (only possible on
         // directed input; a symmetrized graph always adopts)
-        labels = labels.join(adopted, Seq("__v"), "left")
+        val next = Materialize.eager(labels.join(adopted, Seq("__v"), "left")
           .select(col("__v"),
-            coalesce(col("__new"), col("__lab")).as("__lab"))
-          .localCheckpoint(true)
+            coalesce(col("__new"), col("__lab")).as("__lab")))
+        Materialize.release(labels)
+        labels = next
       }
       labels.select(col("__v").as("v"), col("__lab").as("label"))
-    } finally e.unpersist(blocking = false)
+    } finally Materialize.release(e)
   }
 }

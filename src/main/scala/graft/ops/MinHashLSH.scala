@@ -185,7 +185,7 @@ object MinHashLSH {
       k: Int = 64,
       rowsPerBand: Int = 2,
       threshold: Double = 0.5): (DataFrame, DataFrame) = {
-    val (canonicalDocs, membership) = collapseByContent(df, idCol, textCol)
+    val (canonicalDocs, membership) = Dedup.collapseByContent(df, Seq(textCol), idCol)
     (nearDuplicates(canonicalDocs, idCol, textCol, w, k, rowsPerBand, threshold),
       membership)
   }
@@ -202,14 +202,10 @@ object MinHashLSH {
       w: Int = 3,
       threshold: Double = 0.5,
       maxDf: Int = 256): (DataFrame, DataFrame) = {
-    val (canonicalDocs, membership) = collapseByContent(df, idCol, textCol)
+    val (canonicalDocs, membership) = Dedup.collapseByContent(df, Seq(textCol), idCol)
     (exactNearDuplicates(canonicalDocs, idCol, textCol, w, threshold, maxDf),
       membership)
   }
-
-  private def collapseByContent(
-      df: DataFrame, idCol: String, textCol: String): (DataFrame, DataFrame) =
-    Dedup.collapseByContent(df, Seq(textCol), idCol)
 
   /** Near-duplicate pairs with exact Jaccard ≥ `threshold` over `w`-token
     * shingles, candidates generated by (k, rowsPerBand) LSH.

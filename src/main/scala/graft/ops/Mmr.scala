@@ -150,8 +150,7 @@ object Mmr {
         .select(col("__q"), (-col("__w.__nid")).as("__id"),
           col("__w.__rel").as("__rel"), lit(step).as("step"))
 
-    var picked = pick(c.withColumn("__score", col("__rel")), 1)
-      .localCheckpoint(true)
+    var picked = Materialize.eager(pick(c.withColumn("__score", col("__rel")), 1))
 
     for (step <- 2 to k) {
       val unpicked = c.join(picked.select(col("__q"), col("__id")),
@@ -168,8 +167,9 @@ object Mmr {
         // candidates disjoint from every pick (no sim row) diversify freely
         .withColumn("__score",
           col("__rel") - coalesce(col("__maxsim"), lit(0L)))
-      picked = picked.unionByName(pick(scored, step))
-        .localCheckpoint(true)
+      val next = Materialize.eager(picked.unionByName(pick(scored, step)))
+      Materialize.release(picked)
+      picked = next
     }
     picked.select(col("__q").as(qCol), col("__id").as(idCol),
       col("__rel").as(relCol), col("step"))

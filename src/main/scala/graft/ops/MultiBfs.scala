@@ -105,37 +105,39 @@ object MultiBfs {
     // materialize the edge list ONCE: every round joins against it, and an
     // expensive upstream derivation (a fuzzy join, an LSH bucket pass)
     // would otherwise re-execute per round — measured 18 s → 2 s on the
-    // q204 fuzzy graph at sf0.1. ([[Bfs]]/[[LabelProp]] now persist their
+    // q204 fuzzy graph at sf0.1. ([[Bfs]]/[[LabelProp]] now pin their
     // edges too: the round-9 runtime scan audit measured their re-scan
     // count rising with graph diameter.)
-    val e = edges.select(col(aCol).as("__a"), col(bCol).as("__b"))
-      .localCheckpoint(true)
-    if (driverThreshold > 0 &&
-        sources.schema(vCol).dataType == e.schema("__a").dataType &&
-        e.count() <= driverThreshold) {
-      val srcRows = sources.select(col(vCol)).distinct().collect()
-      val g = new DriverGraph.DenseGraph(e.collect(), srcRows)
-      if (srcRows.length.toLong * g.nVerts <= (1L << 24))
-        return driverPerSource(edges.sparkSession, g,
-          e.schema("__a").dataType, vCol, maxHops)
-    }
-    var dist = sources.select(col(vCol).as("__s")).distinct()
-      .select(col("__s"), col("__s").as("__v"))
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
-    var frontier = dist
-    var h = 1L
-    while (h <= maxHops && !frontier.isEmpty) {
-      val reachedNow = frontier.join(e, col("__v") === col("__a"))
-        .select(col("__s"), col("__b").as("__v")).distinct()
-        .join(dist.select(col("__s"), col("__v")), Seq("__s", "__v"),
-          "left_anti")
-        .withColumn("dist", lit(h))
-        .localCheckpoint(true)
-      dist = dist.unionByName(reachedNow).localCheckpoint(true)
-      frontier = reachedNow
-      h += 1
-    }
-    dist.select(col("__s").as("src"), col("__v").as(vCol), col("dist"))
+    val e = Materialize.eager(edges.select(col(aCol).as("__a"), col(bCol).as("__b")))
+    try {
+      if (driverThreshold > 0 &&
+          sources.schema(vCol).dataType == e.schema("__a").dataType &&
+          e.count() <= driverThreshold) {
+        val srcRows = sources.select(col(vCol)).distinct().collect()
+        val g = new DriverGraph.DenseGraph(e.collect(), srcRows)
+        if (srcRows.length.toLong * g.nVerts <= (1L << 24))
+          return driverPerSource(edges.sparkSession, g,
+            e.schema("__a").dataType, vCol, maxHops)
+      }
+      var dist = Materialize.eager(sources.select(col(vCol).as("__s")).distinct()
+        .select(col("__s"), col("__s").as("__v"))
+        .withColumn("dist", lit(0L)))
+      var frontier = dist
+      var h = 1L
+      while (h <= maxHops && !frontier.isEmpty) {
+        val reachedNow = Materialize.eager(frontier.join(e, col("__v") === col("__a"))
+          .select(col("__s"), col("__b").as("__v")).distinct()
+          .join(dist.select(col("__s"), col("__v")), Seq("__s", "__v"),
+            "left_anti")
+          .withColumn("dist", lit(h)))
+        val grown = Materialize.eager(dist.unionByName(reachedNow))
+        Materialize.release(dist, frontier)
+        dist = grown
+        frontier = reachedNow
+        h += 1
+      }
+      if (frontier ne dist) Materialize.release(frontier)
+      dist.select(col("__s").as("src"), col("__v").as(vCol), col("dist"))
+    } finally Materialize.release(e)
   }
 }

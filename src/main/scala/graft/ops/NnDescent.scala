@@ -32,7 +32,7 @@ object NnDescent {
 
   /** Seed kNN graph: top-`k` of the ±`window` sorted-neighborhood
     * candidates per vector, by exact cosine. `v` = (vec_id, label,
-    * v: array&lt;double&gt;). Eagerly pinned (localCheckpoint): every
+    * v: array&lt;double&gt;). Eagerly pinned ([[Materialize]]): every
     * consumer fans out on it at least twice (the neighbor-of-neighbor
     * self-join), and the seed's own derivation holds a rank window that
     * must not re-run per branch (the round-8 scan-audit class).
@@ -49,9 +49,8 @@ object NnDescent {
         col("vec_id").as("cb"), col("v").as("vb")), Seq("label", "rn"))
       .select(col("qa"), col("cb"),
         round(HashExpressions.cosineSim(col("va"), col("vb")), 6).as("cos"))
-    c0.withColumn("rn", row_number().over(byQuery))
-      .filter(col("rn") <= k).select(col("qa"), col("cb"), col("cos"))
-      .localCheckpoint()
+    Materialize.eager(c0.withColumn("rn", row_number().over(byQuery))
+      .filter(col("rn") <= k).select(col("qa"), col("cb"), col("cos")))
   }
 
   /** One refinement round over an existing (qa, cb, cos) graph: each

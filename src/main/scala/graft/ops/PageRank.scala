@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed PageRank over an edge list, in scaled-integer (fixed-point)
   * arithmetic.
@@ -28,7 +27,7 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape: per iteration, one equi-join pr⋈outDeg on the source
   * vertex, one equi-join onto the edge list, one hash aggregation on the
   * destination, and a 1-row cross join carrying the dangling mass (never
-  * a driver round-trip). Edge list and degrees are persisted once;
+  * a driver round-trip). Edge list and degrees are pinned once;
   * per-iteration results are eagerly `localCheckpoint`ed — the standard
   * lineage barrier for iterative DataFrame algorithms (same device as
   * [[ConnectedComponents]]; without it Catalyst re-analysis grows with
@@ -105,8 +104,8 @@ object PageRank {
     * directed graph is what gets ranked.
     *
     * At or below `driverThreshold` edges (counted after the one-time
-    * distributed dedup, which also materializes the persist) the
-    * iterations run on the driver — see [[defaultDriverThreshold]].
+    * distributed dedup) the iterations run on the driver — see
+    * [[defaultDriverThreshold]].
     */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
             iterations: Int = 4,
@@ -116,59 +115,51 @@ object PageRank {
     require(iterations >= 1 && dampNum > 0 && dampNum < dampDen,
       s"need iterations >= 1 and 0 < dampNum < dampDen, got " +
         s"$iterations, $dampNum/$dampDen")
-    val e = edges
+    val e = Materialize.eager(edges
       .select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .filter(col("s") =!= col("d")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (driverThreshold > 0 && e.count() <= driverThreshold) {
-      val g = new DriverGraph.DenseGraph(e.collect())
-      val out = driverRanks(edges.sparkSession, g,
-        e.schema("s").dataType, iterations, dampNum, dampDen, scale)
-      e.unpersist(blocking = false)
-      return out
-    }
-    val verts = e.select(col("s").as("v"))
-      .union(e.select(col("d").as("v"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // N is the one driver scalar (bounded bookkeeping); p0/base are the
-    // same integer expressions the oracle derives from ITS count — equal
-    // because both count the same graph.
-    val n = verts.count()
-    require(n > 0, "PageRank over an empty graph")
-    val p0 = scale / n
-    val base = ((dampDen - dampNum) * p0) / dampDen
-    val outDeg = e.groupBy(col("s").as("v")).agg(count(lit(1)).as("__deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .filter(col("s") =!= col("d")).distinct())
     try {
-      var pr = verts.withColumn("pr", lit(p0)).localCheckpoint(true)
-      var iter = 0
-      while (iter < iterations) {
-        val contribs = e
-          .join(pr.join(outDeg, "v")
-              .select(col("v").as("s"), expr("pr div __deg").as("__c")),
-            "s")
-          .groupBy(col("d").as("v")).agg(sum(col("__c")).as("__cin"))
-        val dangling = pr.join(outDeg, Seq("v"), "left_anti")
-          .agg(coalesce(sum(col("pr")), lit(0L)).as("__dang"))
-        val next = verts
-          .join(contribs, Seq("v"), "left")
-          .crossJoin(dangling)
-          .withColumn("__recv",
-            coalesce(col("__cin"), lit(0L)) + expr(s"__dang div ${n}L"))
-          .select(col("v"),
-            (lit(base) + expr(s"(${dampNum}L * __recv) div ${dampDen}L"))
-              .as("pr"))
-          .localCheckpoint(true)
-        pr.unpersist(blocking = false)
-        pr = next
-        iter += 1
-      }
-      pr
-    } finally {
-      e.unpersist(blocking = false)
-      verts.unpersist(blocking = false)
-      outDeg.unpersist(blocking = false)
-    }
+      if (driverThreshold > 0 && e.count() <= driverThreshold)
+        return driverRanks(edges.sparkSession,
+          new DriverGraph.DenseGraph(e.collect()),
+          e.schema("s").dataType, iterations, dampNum, dampDen, scale)
+      val verts = Materialize.eager(e.select(col("s").as("v"))
+        .union(e.select(col("d").as("v"))).distinct())
+      val outDeg = Materialize.eager(
+        e.groupBy(col("s").as("v")).agg(count(lit(1)).as("__deg")))
+      try {
+        // N is the one driver scalar (bounded bookkeeping); p0/base are the
+        // same integer expressions the oracle derives from ITS count — equal
+        // because both count the same graph.
+        val n = verts.count()
+        require(n > 0, "PageRank over an empty graph")
+        val p0 = scale / n
+        val base = ((dampDen - dampNum) * p0) / dampDen
+        var pr = Materialize.eager(verts.withColumn("pr", lit(p0)))
+        var iter = 0
+        while (iter < iterations) {
+          val contribs = e
+            .join(pr.join(outDeg, "v")
+                .select(col("v").as("s"), expr("pr div __deg").as("__c")),
+              "s")
+            .groupBy(col("d").as("v")).agg(sum(col("__c")).as("__cin"))
+          val dangling = pr.join(outDeg, Seq("v"), "left_anti")
+            .agg(coalesce(sum(col("pr")), lit(0L)).as("__dang"))
+          val next = Materialize.eager(verts
+            .join(contribs, Seq("v"), "left")
+            .crossJoin(dangling)
+            .withColumn("__recv",
+              coalesce(col("__cin"), lit(0L)) + expr(s"__dang div ${n}L"))
+            .select(col("v"),
+              (lit(base) + expr(s"(${dampNum}L * __recv) div ${dampDen}L"))
+                .as("pr")))
+          Materialize.release(pr)
+          pr = next
+          iter += 1
+        }
+        pr
+      } finally Materialize.release(verts, outDeg)
+    } finally Materialize.release(e)
   }
 
   /** [[driverRanks]]' weighted twin: contribution per share row is
@@ -265,64 +256,55 @@ object PageRank {
     // cannot overflow for any int64 weight; `div` (IntegralDivide)
     // returns BIGINT and share ≤ shareScale, so the per-hop arithmetic
     // below stays pure long.
-    val shares = e0.join(outW, "s")
+    val shares = Materialize.eager(e0.join(outW, "s")
       .select(col("s"), col("d"),
         expr(s"(CAST(w AS DECIMAL(38,0)) * ${shareScale}L) div __W")
-          .as("__sh"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Driver fallback (see [[defaultDriverThreshold]]): the one-off
-    // share normalization is distributed either way; below threshold
-    // the hop recurrence — pure long arithmetic over the share list —
-    // runs in memory. Share rows carry (s, d, __sh) so the dense graph
-    // collects the weighted edge list directly.
-    if (driverThreshold > 0 && shares.count() <= driverThreshold) {
-      val rows = shares.collect()
-      val g = new DriverGraph.DenseGraph(rows)
-      val sh = new Array[Long](rows.length)
-      var i = 0
-      while (i < rows.length) { sh(i) = rows(i).getLong(2); i += 1 }
-      val out = driverRanksWeighted(edges.sparkSession, g, sh,
-        shares.schema("s").dataType, iterations, dampNum, dampDen,
-        scale, shareScale)
-      shares.unpersist(blocking = false)
-      return out
-    }
-    val verts = shares.select(col("s").as("v"))
-      .union(shares.select(col("d").as("v"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+          .as("__sh")))
     try {
-      val n = verts.count()
-      require(n > 0, "weighted PageRank over an empty graph")
-      val p0 = scale / n
-      val base = ((dampDen - dampNum) * p0) / dampDen
-      val hasOut = shares.select(col("s").as("v")).distinct()
-      var pr = verts.withColumn("pr", lit(p0)).localCheckpoint(true)
-      var iter = 0
-      while (iter < iterations) {
-        val contribs = shares
-          .join(pr.select(col("v").as("s"), col("pr")), "s")
-          .select(col("d").as("v"),
-            expr(s"(pr * __sh) div ${shareScale}L").as("__c"))
-          .groupBy(col("v")).agg(sum(col("__c")).as("__cin"))
-        val dangling = pr.join(hasOut, Seq("v"), "left_anti")
-          .agg(coalesce(sum(col("pr")), lit(0L)).as("__dang"))
-        val next = verts
-          .join(contribs, Seq("v"), "left")
-          .crossJoin(dangling)
-          .withColumn("__recv",
-            coalesce(col("__cin"), lit(0L)) + expr(s"__dang div ${n}L"))
-          .select(col("v"),
-            (lit(base) + expr(s"(${dampNum}L * __recv) div ${dampDen}L"))
-              .as("pr"))
-          .localCheckpoint(true)
-        pr.unpersist(blocking = false)
-        pr = next
-        iter += 1
+      // Driver fallback (see [[defaultDriverThreshold]]): the one-off
+      // share normalization is distributed either way; below threshold
+      // the hop recurrence — pure long arithmetic over the share list —
+      // runs in memory. Share rows carry (s, d, __sh) so the dense graph
+      // collects the weighted edge list directly.
+      if (driverThreshold > 0 && shares.count() <= driverThreshold) {
+        val rows = shares.collect()
+        return driverRanksWeighted(edges.sparkSession,
+          new DriverGraph.DenseGraph(rows), rows.map(_.getLong(2)),
+          shares.schema("s").dataType, iterations, dampNum, dampDen,
+          scale, shareScale)
       }
-      pr
-    } finally {
-      shares.unpersist(blocking = false)
-      verts.unpersist(blocking = false)
-    }
+      val verts = Materialize.eager(shares.select(col("s").as("v"))
+        .union(shares.select(col("d").as("v"))).distinct())
+      try {
+        val n = verts.count()
+        require(n > 0, "weighted PageRank over an empty graph")
+        val p0 = scale / n
+        val base = ((dampDen - dampNum) * p0) / dampDen
+        val hasOut = shares.select(col("s").as("v")).distinct()
+        var pr = Materialize.eager(verts.withColumn("pr", lit(p0)))
+        var iter = 0
+        while (iter < iterations) {
+          val contribs = shares
+            .join(pr.select(col("v").as("s"), col("pr")), "s")
+            .select(col("d").as("v"),
+              expr(s"(pr * __sh) div ${shareScale}L").as("__c"))
+            .groupBy(col("v")).agg(sum(col("__c")).as("__cin"))
+          val dangling = pr.join(hasOut, Seq("v"), "left_anti")
+            .agg(coalesce(sum(col("pr")), lit(0L)).as("__dang"))
+          val next = Materialize.eager(verts
+            .join(contribs, Seq("v"), "left")
+            .crossJoin(dangling)
+            .withColumn("__recv",
+              coalesce(col("__cin"), lit(0L)) + expr(s"__dang div ${n}L"))
+            .select(col("v"),
+              (lit(base) + expr(s"(${dampNum}L * __recv) div ${dampDen}L"))
+                .as("pr")))
+          Materialize.release(pr)
+          pr = next
+          iter += 1
+        }
+        pr
+      } finally Materialize.release(verts)
+    } finally Materialize.release(shares)
   }
 }

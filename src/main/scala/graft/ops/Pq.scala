@@ -93,10 +93,8 @@ object Pq {
     val dim = dimRow.head.getInt(0)
     require(dim % m == 0, s"vector dim $dim not divisible into $m subspaces")
     val subDim = dim / m
-    val train0 = if (trainFraction < 1.0)
-      base.sample(withReplacement = false, trainFraction, seed = 42) else base
-    val train = train0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val train = Materialize.eager(if (trainFraction < 1.0)
+      base.sample(withReplacement = false, trainFraction, seed = 42) else base)
     try {
       val seeds = train.distinct().orderBy(hash(col("__v")).asc).limit(ksub)
         .collect().map(_.getSeq[Double](0).toIndexedSeq)
@@ -124,7 +122,7 @@ object Pq {
           cs.indices.map(c => means.getOrElse((s, c), cs(c))).toIndexedSeq }
       }
       Codebook(m, subDim, cents)
-    } finally train.unpersist(blocking = false)
+    } finally Materialize.release(train)
   }
 
   /** (idCol, codes array<int> of length m) — the stored PQ representation. */

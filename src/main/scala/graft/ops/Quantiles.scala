@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed EXACT quantiles (linear interpolation — `quantile_cont` /
   * Spark `percentile` semantics) that never buffer a group.
@@ -27,7 +26,7 @@ import org.apache.spark.storage.StorageLevel
   *     role as a broadcast dimension). From them: each group's total n,
   *     each (partition, group)'s global-rank offset, and each quantile's
   *     interpolation-neighbor ranks ⌊1+q(n−1)⌋ and ⌈…⌉.
-  *  3. **Selection pass**: one more scan of the (persisted) sorted data;
+  *  3. **Selection pass**: one more scan of the (pinned) sorted data;
   *     each task keeps ONE running counter for the group currently
   *     streaming past (rows arrive group-clustered because the sort key
   *     leads with the group) and emits only rows whose global rank is a
@@ -38,7 +37,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * Cost model at scale: one range shuffle + sort of (group, value) pairs
   * (narrow — two columns, never the full row), one re-read from the
-  * persisted sort, O(|partitions|·|groups|) driver state. Memory per task
+  * pinned sort, O(|partitions|·|groups|) driver state. Memory per task
   * is O(1) beyond the sort's own spill-able pages.
   *
   * Nulls in the value column are excluded (quantile semantics); `n` in
@@ -64,7 +63,7 @@ object Quantiles {
     val nG = groupCols.length
 
     val sortCols = groupCols.map(col) :+ col("__v")
-    val narrow = df
+    val narrow = Materialize.eager(df
       .select((groupCols.map(col) :+ col(valueCol).cast("double").as("__v")): _*)
       .filter(col("__v").isNotNull)
       // The one full-data exchange: range partitioning spreads each group
@@ -72,16 +71,15 @@ object Quantiles {
       // order (range boundaries are non-overlapping).
       .repartitionByRange(nPart, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
-      // Persisted so the counting pass and the selection pass see the SAME
+      // Pinned so the counting pass and the selection pass see the SAME
       // physical partitioning (range split points are sampled; a recompute
       // could legally re-draw them). Narrow columns only — this is a
       // (group, double) projection, not the source rows. The partition id
       // is STAMPED into the projection so both passes read the same pid
       // source (guards rdd-index vs spark_partition_id divergence; a
-      // recompute re-stamps __pid too, so the persist is the real defense
+      // recompute re-stamps __pid too, so the pin is the real defense
       // against re-sampled range boundaries).
-      .withColumn("__pid", spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__pid", spark_partition_id()))
     val pidIdx = nG + 1
 
     try {
@@ -190,7 +188,7 @@ object Quantiles {
             org.apache.spark.sql.types.LongType, nullable = false)))
       spark.createDataFrame(
         spark.sparkContext.parallelize(out, 1), schema)
-    } finally narrow.unpersist(blocking = false)
+    } finally Materialize.release(narrow)
   }
 
   /** Per-group median + median-absolute-deviation in ONE source scan.
@@ -198,13 +196,13 @@ object Quantiles {
     * The naive composition (`exact` for the median, join, `exact` again for
     * the deviation median) reads — and re-derives — the source twice; when
     * the value is computed (tokenize + score), that doubles the expensive
-    * part. Here the narrow (group…, value) projection is persisted once:
+    * part. Here the narrow (group…, value) projection is pinned once:
     * the median selection, the deviation derivation, and the MAD selection
-    * all read the cached two-column projection, so the source is scanned
+    * all read the pinned two-column projection, so the source is scanned
     * exactly once. The MAD still requires its own range sort (deviation
-    * order is not value order), but that sort reads the cache, not the
+    * order is not value order), but that sort reads the pin, not the
     * source. Both `exact` calls are eager (driver-side selection), so the
-    * cache is dropped before returning — the result is a tiny driver-local
+    * pin is released before returning — the result is a tiny driver-local
     * frame (one row per group), broadcast-join it downstream.
     *
     * `roundTo` rounds the median BEFORE deviations are formed (and the
@@ -215,10 +213,9 @@ object Quantiles {
     */
   def medianAbsDev(df: DataFrame, groupCols: Seq[String], valueCol: String,
                    roundTo: Int = 6, partitions: Int = 0): DataFrame = {
-    val narrow = df
+    val narrow = Materialize.eager(df
       .select((groupCols.map(col) :+ col(valueCol).cast("double").as("__v")): _*)
-      .filter(col("__v").isNotNull)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .filter(col("__v").isNotNull))
     try {
       val med = exact(narrow, groupCols, "__v", Seq(0.5), partitions)
         .select(groupCols.map(col) :+
@@ -230,8 +227,8 @@ object Quantiles {
           round(element_at(col("quantiles"), 1), roundTo).as("mad"),
           col("n")): _*)
       // med and mad are both driver-built one-row-per-group frames by now;
-      // the join is trivial and references nothing persisted.
+      // the join is trivial and references nothing pinned.
       med.join(mad, groupCols.toSeq)
-    } finally narrow.unpersist(blocking = false)
+    } finally Materialize.release(narrow)
   }
 }

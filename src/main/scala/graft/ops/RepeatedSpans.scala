@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   *     where every lattice row matches ≤ 1 verdict row (no fan-out);
   *   - interval merge is a per-document gaps-and-islands window —
   *     O(doc) state, never O(corpus);
-  *   - the lattice is localCheckpoint'd because it feeds both the
+  *   - the lattice is pinned (Materialize) because it feeds both the
   *     count agg and the join-back (the q331/q338 re-tokenize lesson).
   */
 object RepeatedSpans {
@@ -58,12 +58,11 @@ object RepeatedSpans {
                  width: Int): DataFrame = {
     require(width >= 2, s"width must be >= 2: $width")
     val base = docs.select(col(idCol), col(toksCol).as("__toks"))
-    val wnd = base
+    val wnd = Materialize.eager(base
       .select(col(idCol), posexplode(graft.functions.HashExpressions
         .positionalShingleHash60(col("__toks"), width))
         .as(Seq("__p0", "__h")))
-      .select(col(idCol), (col("__p0") + 1).as("pos"), col("__h"))
-      .localCheckpoint()
+      .select(col(idCol), (col("__p0") + 1).as("pos"), col("__h")))
     // corpus-wide occurrence count — plain count, NOT countDistinct(doc):
     // a passage repeated inside one document is a duplicate too
     val dupH = wnd.groupBy(col("__h")).agg(count(lit(1)).as("__c"))

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Bounded-hop single-source shortest paths by Bellman–Ford relaxation,
   * in pure long arithmetic.
@@ -25,7 +24,7 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape per round: one equi-join frontier⋈edges hash-partitioned on
   * the source vertex and one min-aggregation hash-partitioned on the
   * destination — both map-side combinable (min is algebraic). The edge list
-  * is persisted once; per-round results are eagerly `localCheckpoint`ed,
+  * is pinned once; per-round results are eagerly `localCheckpoint`ed,
   * the standard lineage barrier for iterative DataFrame algorithms
   * (without it Catalyst re-analyzes a plan that doubles per round).
   *
@@ -58,14 +57,12 @@ object ShortestPath {
                    driverThreshold: Long = defaultDriverThreshold)
       : DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    val e = edges
+    val e = Materialize.eager(edges
       .select(col(srcCol).as("s"), col(dstCol).as("d"),
         col(weightCol).cast("long").as("w"))
-      .groupBy(col("s"), col("d")).agg(min(col("w")).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("s"), col("d")).agg(min(col("w")).as("w")))
     try {
-      // Fail loud up front (and materialize the persisted edge list in the
-      // same pass) rather than returning a silently wrong bounded prefix.
+      // fail loud rather than return a silently wrong bounded prefix
       val neg = e.filter(col("w") < 0).limit(1).count()
       require(neg == 0, "boundedPaths requires non-negative edge weights")
       if (driverThreshold > 0 &&
@@ -98,21 +95,19 @@ object ShortestPath {
               org.apache.spark.sql.Row(v, d) })
         }
       }
-      var dist = source.select(col("v"), lit(0L).as("dist"))
-        .localCheckpoint(true)
+      var dist = Materialize.eager(source.select(col("v"), lit(0L).as("dist")))
       var iter = 0
       while (iter < rounds) {
         val relaxed = dist.select(col("v").as("s"), col("dist"))
           .join(e, "s")
           .select(col("d").as("v"), (col("dist") + col("w")).as("dist"))
-        val next = dist.unionByName(relaxed)
-          .groupBy(col("v")).agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-        dist.unpersist(blocking = false)
+        val next = Materialize.eager(dist.unionByName(relaxed)
+          .groupBy(col("v")).agg(min(col("dist")).as("dist")))
+        Materialize.release(dist)
         dist = next
         iter += 1
       }
       dist
-    } finally e.unpersist(blocking = false)
+    } finally Materialize.release(e)
   }
 }

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
+
 /** The engine's at-rest layout — the Spark analog of the reference's
   * ClickHouse DDL semantics (SURVEY.md §1.3):
   *
@@ -79,15 +81,15 @@ object PartitionedStore {
     }.toMap
 
     plan.foreach { case (ym, (_, want)) =>
-      // localCheckpoint = the repo's read-then-overwrite-same-path write
+      // an eager checkpoint = the repo's read-then-overwrite-same-path write
       // barrier (IncrementalIngest precedent): rows are materialized on
       // executors before the partition they came from is replaced
-      spark.read.parquet(dir).filter(col("ym") === ym)
+      val rows = Materialize.eager(spark.read.parquet(dir).filter(col("ym") === ym)
         .repartitionByRange(want, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)
-        .localCheckpoint()
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .sortWithinPartitions(sortCols.map(col): _*))
+      try rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("ym").parquet(dir)
+      finally Materialize.release(rows)
     }
     plan
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.{BpeTrain, Dedup}
+import graft.ops.{BpeTrain, Dedup, Materialize}
 
 /** Incrementally-maintained word-count store + tokenizer refresh — the
   * streaming producer for q349/q350's trainer: documents stream in, the
@@ -56,11 +56,10 @@ object BpeStream {
       batchId: Long,
       textCol: String,
       storeDir: String): Unit = {
-    val bp = batch
+    val bp = Materialize.eager(batch
       .select(explode(graft.functions.TextFunctions
         .tokens(coalesce(col(textCol), lit("")))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .persist()
+      .groupBy(col("w")).agg(count(lit(1)).as("cnt")))
     try {
       val merged =
         if (!Files.exists(Paths.get(storeDir))) bp
@@ -74,7 +73,7 @@ object BpeStream {
         }
       merged.withColumn("__v", lit(batchId))
         .write.mode("append").parquet(storeDir)
-    } finally bp.unpersist()
+    } finally Materialize.release(bp)
   }
 
   /** The live (word, count) table: keep-last per word. */
@@ -118,13 +117,15 @@ object BpeStream {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val df = batch.toDF().localCheckpoint(true)
-        processBatch(spark, df, id, textCol, storeDir)
-        val (merges, _) = trainCurrent(spark, storeDir, rounds)
-        df.select(col(idCol),
-            encodeText(col(textCol), merges).as("enc"))
-          .withColumn("__v", lit(id))
-          .write.mode("append").parquet(encDir)
+        val df = Materialize.eager(batch.toDF())
+        try {
+          processBatch(spark, df, id, textCol, storeDir)
+          val (merges, _) = trainCurrent(spark, storeDir, rounds)
+          df.select(col(idCol),
+              encodeText(col(textCol), merges).as("enc"))
+            .withColumn("__v", lit(id))
+            .write.mode("append").parquet(encDir)
+        } finally Materialize.release(df)
       }
       .start()
 
@@ -204,57 +205,59 @@ object BpeStream {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val df = batch.toDF().localCheckpoint(true)
-        processBatch(spark, df, id, textCol, storeDir)
-        val (merges, _) = trainCurrent(spark, storeDir, rounds)
-        val m = merges.map(x => (x.symA, x.symB))
-        val docTok = df.select(col(langCol).as("lang"),
-            col(idCol).cast("long").as("doc_id"),
-            aggregate(graft.functions.TextFunctions
-              .tokens(coalesce(col(textCol), lit(""))), lit(0L),
-              (acc, w) => acc +
-                size(graft.functions.BpeFunctions.bpeEncode(w, m))
-                  .cast("long")).as("ntok"))
-        // pre-batch offsets: |langs|-bounded keep-last read (empty on
-        // the first batch and on a fresh offset store)
-        val pre: Map[String, Long] =
-          if (!Files.exists(Paths.get(offDir))) Map.empty
-          else Dedup.keepLast(
-              spark.read.parquet(offDir).filter(col("__v") < id),
-              Seq("lang"), Seq("__v"))
-            .select(col("lang"), col("cum"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val preOff = coalesce(
-          element_at(typedlit(pre), col("lang")), lit(0L))
-        val byLang = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("lang")).orderBy(col("doc_id"))
-        val withStart = docTok
-          .withColumn("__start",
-            preOff + sum(col("ntok")).over(byLang) - col("ntok"))
-        val slices = withStart
-          .withColumn("__first",
-            floor(col("__start") / lit(seqLen)).cast("long"))
-          .withColumn("__last", floor(
-            (col("__start") + greatest(col("ntok"), lit(1L)) - lit(1L)) /
-              lit(seqLen)).cast("long"))
-          .withColumn("seq_id", explode(sequence(col("__first"), col("__last"))))
-          .withColumn("__lo",
-            greatest(col("__start"), col("seq_id") * lit(seqLen)))
-          .withColumn("__hi", least(col("__start") + col("ntok"),
-            (col("seq_id") + lit(1L)) * lit(seqLen)))
-          .select(col("lang"), col("doc_id"), col("ntok"), col("seq_id"),
-            (col("__lo") - col("__start")).as("doc_tok_start"),
-            (col("__lo") - col("seq_id") * lit(seqLen)).as("seq_tok_start"),
-            (col("__hi") - col("__lo")).as("n_tok"))
-        slices.withColumn("__v", lit(id))
-          .write.mode("append").parquet(packDir)
-        docTok.groupBy(col("lang"))
-          .agg(sum(col("ntok")).as("__batch_tok"))
-          .select(col("lang"),
-            (coalesce(element_at(typedlit(pre), col("lang")), lit(0L)) +
-              col("__batch_tok")).as("cum"))
-          .withColumn("__v", lit(id))
-          .write.mode("append").parquet(offDir)
+        val df = Materialize.eager(batch.toDF())
+        try {
+          processBatch(spark, df, id, textCol, storeDir)
+          val (merges, _) = trainCurrent(spark, storeDir, rounds)
+          val m = merges.map(x => (x.symA, x.symB))
+          val docTok = df.select(col(langCol).as("lang"),
+              col(idCol).cast("long").as("doc_id"),
+              aggregate(graft.functions.TextFunctions
+                .tokens(coalesce(col(textCol), lit(""))), lit(0L),
+                (acc, w) => acc +
+                  size(graft.functions.BpeFunctions.bpeEncode(w, m))
+                    .cast("long")).as("ntok"))
+          // pre-batch offsets: |langs|-bounded keep-last read (empty on
+          // the first batch and on a fresh offset store)
+          val pre: Map[String, Long] =
+            if (!Files.exists(Paths.get(offDir))) Map.empty
+            else Dedup.keepLast(
+                spark.read.parquet(offDir).filter(col("__v") < id),
+                Seq("lang"), Seq("__v"))
+              .select(col("lang"), col("cum"))
+              .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          val preOff = coalesce(
+            element_at(typedlit(pre), col("lang")), lit(0L))
+          val byLang = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("lang")).orderBy(col("doc_id"))
+          val withStart = docTok
+            .withColumn("__start",
+              preOff + sum(col("ntok")).over(byLang) - col("ntok"))
+          val slices = withStart
+            .withColumn("__first",
+              floor(col("__start") / lit(seqLen)).cast("long"))
+            .withColumn("__last", floor(
+              (col("__start") + greatest(col("ntok"), lit(1L)) - lit(1L)) /
+                lit(seqLen)).cast("long"))
+            .withColumn("seq_id", explode(sequence(col("__first"), col("__last"))))
+            .withColumn("__lo",
+              greatest(col("__start"), col("seq_id") * lit(seqLen)))
+            .withColumn("__hi", least(col("__start") + col("ntok"),
+              (col("seq_id") + lit(1L)) * lit(seqLen)))
+            .select(col("lang"), col("doc_id"), col("ntok"), col("seq_id"),
+              (col("__lo") - col("__start")).as("doc_tok_start"),
+              (col("__lo") - col("seq_id") * lit(seqLen)).as("seq_tok_start"),
+              (col("__hi") - col("__lo")).as("n_tok"))
+          slices.withColumn("__v", lit(id))
+            .write.mode("append").parquet(packDir)
+          docTok.groupBy(col("lang"))
+            .agg(sum(col("ntok")).as("__batch_tok"))
+            .select(col("lang"),
+              (coalesce(element_at(typedlit(pre), col("lang")), lit(0L)) +
+                col("__batch_tok")).as("cum"))
+            .withColumn("__v", lit(id))
+            .write.mode("append").parquet(offDir)
+        } finally Materialize.release(df)
       }
       .start()
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Materialize}
 
 /** Incrementally-maintained time-decay engagement scores (q198's
   * streaming form): per key, the half-life-weighted activity score stays
@@ -75,13 +75,12 @@ object DecayStream {
       batchId: Long,
       keyCol: String,
       storeDir: String): Unit = {
-    val bp = batch
+    val bp = Materialize.eager(batch
       .select(col(keyCol).as("__k"),
         expr("(ts div 1000) div 86400000000").as("__day"),
         floor(col("value") * 100).cast("long").as("__cents"))
       .groupBy(col("__k"), col("__day"))
-      .agg(sum(col("__cents")).as("__cents"))
-      .persist()
+      .agg(sum(col("__cents")).as("__cents")))
     try {
       val combined =
         if (!Files.exists(Paths.get(storeDir))) bp
@@ -105,7 +104,7 @@ object DecayStream {
           struct(col("__day"), col("__cents")))).as("__ledger"))
       merged.withColumn("__v", lit(batchId))
         .write.mode("append").parquet(storeDir)
-    } finally bp.unpersist()
+    } finally Materialize.release(bp)
   }
 
   /** Resolved per-key decayed scores, anchored at the store's global max

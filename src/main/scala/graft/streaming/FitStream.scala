@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Materialize}
 
 /** Online linear-probe maintenance — the streaming form of q346's
   * normal-equations fit: the nine moment sums (n, Σx1, Σx2, Σy, Σx1²,
@@ -81,7 +81,7 @@ object FitStream {
       batch: DataFrame,
       batchId: Long,
       storeDir: String): Unit = {
-    val bp = moments(features(batch)).persist()
+    val bp = Materialize.eager(moments(features(batch)))
     try {
       val merged =
         if (!Files.exists(Paths.get(storeDir))) bp
@@ -97,7 +97,7 @@ object FitStream {
         }
       merged.withColumn("__v", lit(batchId))
         .write.mode("append").parquet(storeDir)
-    } finally bp.unpersist()
+    } finally Materialize.release(bp)
   }
 
   /** The live per-language moment table: keep-last per lang. */

@@ -79,16 +79,21 @@ object KnnGraphStream {
       k: Int = 5,
       kCells: Int = 4,
       iters: Int = 2): Unit = {
-    val vecs = Materialize.eager(batch.select(batch(idCol), batch(vecCol))
-      .filter(batch(vecCol).isNotNull))
+    var pinned = List.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      val m = Materialize.eager(df)
+      pinned ::= m
+      m
+    }
     try {
+      val vecs = pin(batch.select(batch(idCol), batch(vecCol))
+        .filter(batch(vecCol).isNotNull))
       if (vecs.isEmpty) return
       def readOr(dir: String, like: DataFrame): DataFrame =
         if (new java.io.File(dir).exists()) spark.read.parquet(dir)
         else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], like.schema)
       val store = readOr(storeDir, vecs)
-      val newVecs = vecs.join(store.select(col(idCol)), Seq(idCol), "left_anti")
-        .localCheckpoint(eager = true)
+      val newVecs = pin(vecs.join(store.select(col(idCol)), Seq(idCol), "left_anti"))
       if (newVecs.isEmpty) return    // full replay: both writes already landed
       val all = store.unionByName(newVecs)
       val eNew = topK(Knn.cellTopKJoin(newVecs, all, idCol, vecCol,
@@ -99,13 +104,13 @@ object KnnGraphStream {
         .select(col("query_id").as("qa"), col("vec_id").as("cb"), col("cos"))
       // eager read BEFORE the overwrite below (the IncrementalIngest
       // read-overwrite barrier)
-      val oldGraph = readOr(graphDir, eUpd).localCheckpoint(eager = true)
+      val oldGraph = pin(readOr(graphDir, eUpd))
       val merged = topK(oldGraph.unionByName(eUpd)
         .select(col("qa").as("query_id"), col("cb").as("vec_id"), col("cos")), k)
-      val newGraph = merged.unionByName(eNew).localCheckpoint(eager = true)
+      val newGraph = pin(merged.unionByName(eNew))
       newGraph.write.mode("overwrite").parquet(graphDir)
       newVecs.write.mode("append").parquet(storeDir)
-    } finally Materialize.release(vecs)
+    } finally Materialize.release(pinned: _*)
   }
 
   /** Exact kNN graph over one vector frame — the batch-rebuild reference

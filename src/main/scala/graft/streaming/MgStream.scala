@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Materialize}
 
 /** Incrementally-maintained heavy-hitters store — bounded-state frequent
   * items per key via the MERGEABLE Misra–Gries summary: at most `k`
@@ -69,10 +69,9 @@ object MgStream {
     require(k >= 1, s"k must be >= 1, got $k")
     val keys = keyCols.map(col)
     // batch partial: exact (key, item) counts — map-side combinable
-    val bp = batch
+    val bp = Materialize.eager(batch
       .groupBy(keys :+ col(itemCol).as("__item"): _*)
-      .agg(count(lit(1)).as("__cnt"))
-      .persist()
+      .agg(count(lit(1)).as("__cnt")))
     try {
       val combined =
         if (!Files.exists(Paths.get(storeDir))) bp
@@ -108,7 +107,7 @@ object MgStream {
               (col("__cnt") - col("__d")).as("__cnt"))))).as("__mg"))
       merged.withColumn("__v", lit(batchId))
         .write.mode("append").parquet(storeDir)
-    } finally bp.unpersist()
+    } finally Materialize.release(bp)
   }
 
   /** Resolved (key, item, count) counters — keep-last state, exploded. */

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Materialize}
 
 /** Incrementally-maintained materialized view: the OHLCV resample
   * ([[graft.ops.Resample]], the reference's kline build A5) kept fresh by
@@ -97,8 +97,8 @@ object MvStream {
       valueCol: String,
       interval: String,
       mvDir: String): Unit = {
-    val bp = partials(batch, keyCols, tsCol, tieBreak, valueCol, interval)
-      .persist()
+    val bp = Materialize.eager(
+      partials(batch, keyCols, tsCol, tieBreak, valueCol, interval))
     try {
       val merged =
         if (!Files.exists(Paths.get(mvDir))) merge(bp, keyCols)
@@ -114,7 +114,7 @@ object MvStream {
         }
       merged.withColumn("__v", lit(batchId))
         .write.mode("append").parquet(mvDir)
-    } finally bp.unpersist()
+    } finally Materialize.release(bp)
   }
 
   /** The resolved, finalized view — same shape as `Resample.ohlcv`. */

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.{Dedup, Scd}
+import graft.ops.{Dedup, Materialize, Scd}
 
 /** Continuous SCD Type-2 maintenance: the streaming composition of
   * [[graft.ops.Scd]] — each micro-batch of change-log rows (key, ts,
@@ -73,13 +73,12 @@ object ScdStream {
       attrCols: Seq[String],
       dimDir: String): Unit = {
     val cols = keyCols ++ Seq(tsCol) ++ attrCols
-    val log0 = batch.select(cols.map(col): _*)
+    val log0 = Materialize.eager(batch.select(cols.map(col): _*)
       // same-instant duplicates within a batch: keep an arbitrary-but-
       // deterministic representative (min attr struct)
       .groupBy((keyCols :+ tsCol).map(col): _*)
       .agg(min(struct(attrCols.map(col): _*)).as("__a"))
-      .select((keyCols :+ tsCol).map(col) :+ col("__a.*"): _*)
-      .persist()
+      .select((keyCols :+ tsCol).map(col) :+ col("__a.*"): _*))
     try {
       val log =
         if (!Files.exists(Paths.get(dimDir))) log0
@@ -103,7 +102,7 @@ object ScdStream {
       Scd.buildType2(log, keyCols, tsCol, attrCols)
         .withColumn("__v", lit(batchId))
         .write.mode("append").parquet(dimDir)
-    } finally log0.unpersist()
+    } finally Materialize.release(log0)
   }
 
   /** Keep-last-resolved dimension: one row per (key, valid_from), the

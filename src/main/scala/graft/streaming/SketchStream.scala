@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Materialize}
 
 /** Incrementally-maintained distinct-count sketch store — the streaming
   * producer of q136's windowed-merge consumer: one HLL sketch per key
@@ -60,9 +60,8 @@ object SketchStream {
       keyCols: Seq[String],
       valueCol: String,
       storeDir: String): Unit = {
-    val bp = batch.groupBy(keyCols.map(col): _*)
-      .agg(hll_sketch_agg(col(valueCol)).as("__sk"))
-      .persist()
+    val bp = Materialize.eager(batch.groupBy(keyCols.map(col): _*)
+      .agg(hll_sketch_agg(col(valueCol)).as("__sk")))
     try {
       val merged =
         if (!Files.exists(Paths.get(storeDir))) bp
@@ -77,7 +76,7 @@ object SketchStream {
         }
       merged.withColumn("__v", lit(batchId))
         .write.mode("append").parquet(storeDir)
-    } finally bp.unpersist()
+    } finally Materialize.release(bp)
   }
 
   /** Resolved estimates per key (keep-last sketch, then estimate). */

@@ -2,13 +2,16 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import graft.TestSpark
 
 /** Operators materialize their shared intermediates call-scoped (eager
   * local checkpoints freed with the result), never as session cache
   * entries: repeated near-dup passes in one long-lived session must not
   * grow the CacheManager, and a repeated call must recompute the same
-  * answer rather than read a leftover cache.
+  * answer rather than read a leftover cache. The iterative graph loops
+  * release each finished round and their pinned inputs before returning,
+  * so a call leaves no persisted RDD behind but the result's own blocks.
   */
 class CacheRetentionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -70,5 +73,79 @@ class CacheRetentionSpec extends AnyFunSuite {
   test("a repeated call on the same input returns the same rows") {
     for ((name, op) <- ops)
       assert(rows(op(3)) === rows(op(3)), name)
+  }
+
+  test("graph operators on an empty graph fail loud and leave no cached plan") {
+    val empty = Seq.empty[(Long, Long)].toDF("s", "d")
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "Hits.ranks" -> (() => Hits.ranks(empty, "s", "d")),
+      "Hits.ranks distributed" ->
+        (() => Hits.ranks(empty, "s", "d", driverThreshold = 0)),
+      "PageRank.ranks" -> (() => PageRank.ranks(empty, "s", "d")),
+      "PageRank.ranks distributed" ->
+        (() => PageRank.ranks(empty, "s", "d", driverThreshold = 0)))
+    spark.sharedState.cacheManager.clearCache()
+    for ((name, call) <- calls) {
+      val before = persistedIds()
+      intercept[IllegalArgumentException](call())
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name left a cached plan in the session")
+      assert((persistedIds() -- before).isEmpty,
+        s"$name left persisted RDDs behind")
+    }
+  }
+
+  private def persistedIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** A 12-vertex path (several propagation rounds) with a triangle fan at
+    * one end (a 2-core, a 3-truss and label ties), weights 1..n.
+    */
+  private lazy val graph: DataFrame =
+    ((1L until 12L).map(v => (v, v + 1)) ++
+      Seq((1L, 3L), (2L, 4L), (1L, 4L), (3L, 5L)))
+      .zipWithIndex.map { case ((a, b), i) => (a, b, i + 1L) }
+      .toDF("s", "d", "w")
+
+  /** The iterative operators, forced onto their distributed loops. */
+  private lazy val loops: Seq[(String, () => DataFrame)] = {
+    val source = Seq(1L).toDF("v")
+    Seq(
+      "ConnectedComponents.run" ->
+        (() => ConnectedComponents.run(graph, "s", "d", driverThreshold = 0)),
+      "KCore.peel" ->
+        (() => KCore.peel(graph, "s", "d", k = 2, rounds = 4, driverThreshold = 0)),
+      "PageRank.ranks" ->
+        (() => PageRank.ranks(graph, "s", "d", iterations = 3, driverThreshold = 0)),
+      "PageRank.ranksWeighted" -> (() => PageRank.ranksWeighted(graph, "s", "d",
+        "w", iterations = 3, driverThreshold = 0)),
+      "Hits.ranks" ->
+        (() => Hits.ranks(graph, "s", "d", iterations = 3, driverThreshold = 0)),
+      "ShortestPath.boundedPaths" -> (() => ShortestPath.boundedPaths(graph,
+        "s", "d", "w", source, rounds = 5, driverThreshold = 0)),
+      "LabelProp.communities" -> (() => LabelProp.communities(graph, "s", "d",
+        rounds = 3, driverThreshold = 0)),
+      "Bfs.kHopDistances" -> (() => Bfs.kHopDistances(graph, "s", "d",
+        source, "v", maxHops = 4, driverThreshold = 0)),
+      "MultiBfs.perSourceDistances" -> (() => MultiBfs.perSourceDistances(
+        graph, "s", "d", source, "v", maxHops = 4, driverThreshold = 0)),
+      "KTruss.peel" ->
+        (() => KTruss.peel(graph, "s", "d", k = 3, rounds = 3, driverThreshold = 0)),
+      "KTruss.fixpointState" -> (() =>
+        KTruss.fixpointState(graph, "s", "d", k = 3, driverThreshold = 0).edges))
+  }
+
+  test("distributed graph loops keep only the blocks behind their result") {
+    for ((name, call) <- loops) {
+      val before = persistedIds()
+      val out = call()
+      val kept = out.queryExecution.analyzed.collect {
+        case l: LogicalRDD => l.rdd.id
+      }.toSet
+      assert((persistedIds() -- before -- kept).isEmpty,
+        s"$name left intermediate RDDs persisted")
+      // every released frame is gone for good: the result must not read one
+      assert(rows(out).nonEmpty, s"$name returned nothing")
+    }
   }
 }
