@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.ops.Materialize
 
 /** Diagnostic main, two probes selected by SPARK_GRAFT_PROBE:
   *
@@ -121,17 +122,16 @@ object ScaleProbe {
                       time: (=> Unit) => Double): Unit = {
     import org.apache.spark.sql.functions._
     val r = sys.env.getOrElse("SPARK_GRAFT_PROBE_REP", "10").toLong
-    val docs = Tables.documents(spark, sfDir)
+    val docs = Materialize.eager(Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"),
         explode(sequence(lit(0L), lit(r - 1))).as("__r"))
       .select((col("doc_id") + col("__r") * 10000000L).as("doc_id"), col("text"))
-      .repartition(spark.sparkContext.defaultParallelism * 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(spark.sparkContext.defaultParallelism * 4))
     val nDocs = docs.count()
     val (pairs0, membership0) = graft.ops.MinHashLSH
       .exactNearDuplicatesCollapsed(docs, "doc_id", "text")
-    val pairs = pairs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val membership = membership0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pairs = Materialize.eager(pairs0)
+    val membership = Materialize.eager(membership0)
     // member-level graph: every content group is a clique; every canonical
     // near-dup pair fans out to members × members
     val within = membership.as("m1").join(membership.as("m2"),
@@ -144,9 +144,8 @@ object ScaleProbe {
       .join(membership.select(col("canonical_id").as("doc_b"),
         col("member_id").as("__mb")), "doc_b")
       .select(col("__ma").as("doc_a"), col("__mb").as("doc_b"))
-    val edges = within.unionAll(cross)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = Materialize.eager(within.unionAll(cross)
+      .repartition(spark.sparkContext.defaultParallelism))
     val nEdges = edges.count()
 
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
@@ -185,24 +184,22 @@ object ScaleProbe {
                        time: (=> Unit) => Double): Unit = {
     import org.apache.spark.sql.functions._
     val r = sys.env.getOrElse("SPARK_GRAFT_PROBE_REP", "10").toLong
-    val rep = Tables.documents(spark, sfDir)
+    val rep = Materialize.eager(Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"),
         explode(sequence(lit(0L), lit(r - 1))).as("__r"))
       .select((col("doc_id") + col("__r") * 10000000L).as("doc_id"),
         concat(col("text"), lit(" mut"), col("__r")).as("text"), col("__r"))
-      .repartition(spark.sparkContext.defaultParallelism * 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(spark.sparkContext.defaultParallelism * 4))
     val nDocs = rep.count()
 
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     // the store's projection is already materialized in a real pipeline —
     // build it outside the timed window
-    val store = graft.ops.SignatureStore
-      .signatures(rep.filter(col("__r") < r - 1), "doc_id", "text")
-      .localCheckpoint(true)
-    val batchDocs = rep.filter(col("__r") === r - 1).select("doc_id", "text")
-      .localCheckpoint(true)
+    val store = Materialize.eager(graft.ops.SignatureStore
+      .signatures(rep.filter(col("__r") < r - 1), "doc_id", "text"))
+    val batchDocs = Materialize.eager(
+      rep.filter(col("__r") === r - 1).select("doc_id", "text"))
     var incPairs = -1L
     val sigSec = time {
       graft.ops.SignatureStore.signatures(batchDocs, "doc_id", "text")
@@ -247,13 +244,12 @@ object ScaleProbe {
                        time: (=> Unit) => Double): Unit = {
     import org.apache.spark.sql.functions._
     val r = sys.env.getOrElse("SPARK_GRAFT_PROBE_REP", "10").toLong
-    val emb = Tables.embeddings(spark, sfDir)
+    val emb = Materialize.eager(Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"),
         explode(sequence(lit(0L), lit(r - 1))).as("__r"))
       .select((col("vec_id") + col("__r") * 10000000L).as("vec_id"),
         col("embedding"))
-      .repartition(spark.sparkContext.defaultParallelism * 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(spark.sparkContext.defaultParallelism * 4))
     val nVecs = emb.count()
     val queries = emb.filter(col("vec_id") < 20)
 
@@ -261,17 +257,15 @@ object ScaleProbe {
       df.write.format("noop").mode("overwrite").save()
     var broadcastOut: org.apache.spark.sql.DataFrame = null
     val broadcastSec = time {
-      broadcastOut = graft.ops.Knn.topKJoin(queries, emb,
-        "vec_id", "embedding", "vec_id", "embedding", k = 5)
-        .localCheckpoint(true)
+      broadcastOut = Materialize.eager(graft.ops.Knn.topKJoin(queries, emb,
+        "vec_id", "embedding", "vec_id", "embedding", k = 5))
       noop(broadcastOut)
     }
     var cellOut: org.apache.spark.sql.DataFrame = null
     val cellSec = time {
-      cellOut = graft.ops.Knn.cellTopKJoin(queries, emb,
+      cellOut = Materialize.eager(graft.ops.Knn.cellTopKJoin(queries, emb,
         "vec_id", "embedding", "vec_id", "embedding",
-        k = 5, kCells = 8, nProbe = 8, iters = 2)
-        .localCheckpoint(true)
+        k = 5, kCells = 8, nProbe = 8, iters = 2))
       noop(cellOut)
     }
     // symmetric multiset difference: zero ⇔ identical (query, id, cos) rows
@@ -295,7 +289,7 @@ object ScaleProbe {
     // own key space, so runs-per-key stay fixture-length while the key count
     // scales R× — no multi-GB staging write, and the explode is a narrow op
     // charged equally to every timed pass.
-    val rep = Tables.events(spark, sfDir)
+    val rep = Materialize.eager(Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("ts_us"), col("value"),
         col("event_type"),
         explode(sequence(lit(0L), lit(r - 1))).as("__r"))
@@ -308,8 +302,7 @@ object ScaleProbe {
       // first measured 100× quantile at 116 s for exactly this reason.
       // Fan out + materialize so each pass times the operator, not the
       // serialized generator.
-      .repartition(spark.sparkContext.defaultParallelism * 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(spark.sparkContext.defaultParallelism * 4))
     val nRows = rep.count()
 
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
@@ -344,11 +337,9 @@ object ScaleProbe {
     // must track joinBackward here; the naive forward frame
     // (currentRow→unboundedFollowing first()) rescans to run end per row,
     // O(n²) in the run length — the ADVICE-flagged stall this row pins.
-    val hot = Tables.events(spark, sfDir)
+    val hot = Materialize.eager(Tables.events(spark, sfDir)
       .select(lit(0L).as("user_id"), col("event_id"), col("ts_us"),
-        col("value"), col("event_type"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hot.count()
+        col("value"), col("event_type")))
     def hotSide(t: String) = hot.filter(col("event_type") === t)
     val hp = hotSide("purchase")
       .select(col("user_id"), col("event_id"), col("ts_us"), col("value"))
@@ -360,7 +351,7 @@ object ScaleProbe {
     val hotFwdSec = time(noop(graft.ops.AsOf.joinForward(hp, hv,
       keys = Seq("user_id"), leftTs = "ts_us", rightTs = "ts_us",
       valueCols = Seq("view_ts_us", "view_value"))))
-    hot.unpersist(blocking = false)
+    Materialize.release(hot)
 
     println(s"""{"metric":"window_probe","rep":$r,"rows":$nRows,""" +
       s""""lag_sec":$lagSec,"mavg_sec":$mavgSec,"sessionize_sec":$sessSec,""" +
@@ -384,20 +375,18 @@ object ScaleProbe {
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
-    val base = Tables.documents(spark, sfDir)
+    val base = Materialize.eager(Tables.documents(spark, sfDir)
       .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("toks"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(spark.sparkContext.defaultParallelism))
     val n1 = base.count()
     noop(graft.ops.SpanDedup.dedupSpans(base.limit(500), "doc_id", "toks", 8, 2)) // warm
     val oneX = time(noop(graft.ops.SpanDedup.dedupSpans(base, "doc_id", "toks", 8, 2)))
 
-    val rep = base
+    val rep = Materialize.eager(base
       .select(col("doc_id"), col("toks"),
         explode(sequence(lit(0L), lit(r - 1))).as("__r"))
       .select((col("doc_id") + col("__r") * 10000000L).as("doc_id"), col("toks"))
-      .repartition(spark.sparkContext.defaultParallelism * 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(spark.sparkContext.defaultParallelism * 4))
     val nR = rep.count()
     val rX = time(noop(graft.ops.SpanDedup.dedupSpans(rep, "doc_id", "toks", 8, 2)))
     // the broadcast common-span variant: one corpus shuffle instead of two
@@ -424,15 +413,13 @@ object ScaleProbe {
     val hourUs = 3600000000L
     val eraUs = 100L * 365 * 24 * hourUs // replicas in disjoint time eras
 
-    val ev = Tables.events(spark, sfDir)
+    val ev = Materialize.eager(Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts_us"), col("value"), col("event_type"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(spark.sparkContext.defaultParallelism))
     val pts1 = ev.select(col("event_id"), col("ts_us"), col("value"))
     val win1 = ev.filter(col("event_type") === "error")
       .select(col("event_id").as("win_id"), col("ts_us").as("lo_us"),
         (col("ts_us") + hourUs).as("hi_us"))
-    ev.count()
 
     def agg(j: org.apache.spark.sql.DataFrame) =
       j.groupBy(col("win_id")).agg(count(lit(1)).as("n"))
@@ -443,14 +430,13 @@ object ScaleProbe {
     val naive1x = time(noop(agg(win1.join(pts1,
       col("ts_us") >= col("lo_us") && col("ts_us") < col("hi_us")))))
 
-    val rep = ev
+    val rep = Materialize.eager(ev
       .select(col("event_id"), col("ts_us"), col("value"), col("event_type"),
         explode(sequence(lit(0L), lit(r - 1))).as("__r"))
       .select((col("event_id") + col("__r") * 10000000000L).as("event_id"),
         (col("ts_us") + col("__r") * eraUs).as("ts_us"),
         col("value"), col("event_type"))
-      .repartition(spark.sparkContext.defaultParallelism * 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(spark.sparkContext.defaultParallelism * 4))
     val nR = rep.count()
     val ptsR = rep.select(col("event_id"), col("ts_us"), col("value"))
     val winR = rep.filter(col("event_type") === "error")
@@ -1138,16 +1124,16 @@ object ScaleProbe {
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     val c = Tables.customer(spark, sfDir).filter(col("c_custkey") % 10 < 2)
-    val e0 = graft.ops.FuzzyJoin.editDistance1Pairs(c, "c_custkey", "c_name")
+    val e0 = Materialize.eager(
+      graft.ops.FuzzyJoin.editDistance1Pairs(c, "c_custkey", "c_name")
       .select(least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint()
-    val tri1 = graft.ops.Triangles.enumerate(e0, "a", "b").localCheckpoint()
-    val s1 = graft.ops.Triangles.edgeSupportOf(tri1).localCheckpoint()
+      .filter(col("a") =!= col("b")).distinct())
+    val tri1 = Materialize.eager(graft.ops.Triangles.enumerate(e0, "a", "b"))
+    val s1 = Materialize.eager(graft.ops.Triangles.edgeSupportOf(tri1))
     val removed = s1.filter(col("support") < 2).select(col("a"), col("b"))
-    val e1 = e0.join(s1.filter(col("support") >= 2), Seq("a", "b"),
-      "left_semi").localCheckpoint()
+    val e1 = Materialize.eager(e0.join(s1.filter(col("support") >= 2), Seq("a", "b"),
+      "left_semi"))
     def oldRound2() = graft.ops.Triangles.perEdgeSupport(e1, "a", "b")
       .filter(col("support") >= 2)
     def newRound2() = graft.ops.Triangles
@@ -1181,19 +1167,18 @@ object ScaleProbe {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val c = Tables.customer(spark, sfDir).filter(col("c_custkey") % 10 === 5)
-    val fuzzy = graft.ops.FuzzyJoin.editDistance1Pairs(c, "c_custkey", "c_name")
+    val fuzzy = Materialize.eager(
+      graft.ops.FuzzyJoin.editDistance1Pairs(c, "c_custkey", "c_name")
       .select(least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint()
+      .filter(col("a") =!= col("b")).distinct())
     // threshold 0 forces the distributed loop (the depth-vs-cost claim
     // is about THAT path); the default-threshold run measures the
     // round-12 driver peel on the same graph — the CC both-ways
     // convention for arguing the fallback threshold from a fact
     def run(nChain: Int, thresh: Long): (Int, Long, Double) = {
-      val e0 = fuzzy.unionByName(
-        graft.ops.KTruss.cascadeHarness(nChain, 2000000000L).toDF("a", "b"))
-        .localCheckpoint()
+      val e0 = Materialize.eager(fuzzy.unionByName(
+        graft.ops.KTruss.cascadeHarness(nChain, 2000000000L).toDF("a", "b")))
       // warm pass at a truncated cap so codegen/JIT is paid outside the
       // timed window without running the full peel
       graft.ops.KTruss.fixpointState(e0, "a", "b", 4, maxRounds = 2,

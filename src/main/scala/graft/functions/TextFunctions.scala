@@ -34,22 +34,6 @@ object TextFunctions {
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Type-token ratio (distinct/total tokens) — the lexical-diversity half of
-    * a quality score. Null-safe: empty text → null.
-    */
-  def typeTokenRatio(text: Column): Column = {
-    val t = tokens(text)
-    when(size(t) > 0,
-      round(size(array_distinct(t)).cast("double") / size(t).cast("double"), 6))
-  }
-
-  /** Mean token length in characters (spaces excluded). */
-  def meanTokenLength(text: Column): Column = {
-    val n = tokenCount(text)
-    when(n > 0,
-      round(length(regexp_replace(text, " ", "")).cast("double") / n.cast("double"), 6))
-  }
-
   // --- variants over an already-materialized token array -------------------
   // HOF lambdas (split+filter) are interpreted, and CollapseProject refuses
   // to inline a non-cheap expression referenced more than once — so project

@@ -80,34 +80,47 @@ object Bfs {
     // derivation every hop — and rounds grow with the graph, so the
     // round-9 runtime scan audit measured the corpus re-scan count
     // RISING with scale (3 scans at sf0.001 → 5 at sf0.01 on q124)
-    val e = Materialize.eager(edges.select(col(aCol).as("__a"), col(bCol).as("__b")))
-    try {
+    Materialize.scoped(edges.select(col(aCol).as("__a"), col(bCol).as("__b"))) { e =>
       // same id type on both frames: the driver map keys by JVM value
       if (driverThreshold > 0 &&
           sources.schema(vCol).dataType == e.schema("__a").dataType &&
           e.count() <= driverThreshold) {
         val srcRows = sources.select(col(vCol)).distinct().collect()
         val g = new DriverGraph.DenseGraph(e.collect(), srcRows)
-        return driverKHop(edges.sparkSession, g,
+        driverKHop(edges.sparkSession, g,
           e.schema("__a").dataType, vCol, maxHops)
-      }
-      var dist = Materialize.eager(sources.select(col(vCol).as("__v")).distinct()
-        .withColumn("dist", lit(0L)))
-      var frontier = dist
-      var h = 1L
-      while (h <= maxHops && !frontier.isEmpty) {
-        val reachedNow = Materialize.eager(frontier.join(e, col("__v") === col("__a"))
-          .select(col("__b").as("__v")).distinct()
-          .join(dist.select(col("__v")), Seq("__v"), "left_anti")
-          .withColumn("dist", lit(h)))
-        val grown = Materialize.eager(dist.unionByName(reachedNow))
-        Materialize.release(dist, frontier)
-        dist = grown
-        frontier = reachedNow
-        h += 1
-      }
-      if (frontier ne dist) Materialize.release(frontier)
-      dist.select(col("__v").as(vCol), col("dist"))
-    } finally Materialize.release(e)
+      } else
+        expand(e, sources.select(col(vCol).as("__v")).distinct()
+            .withColumn("dist", lit(0L)), Nil, maxHops)
+          .select(col("__v").as(vCol), col("dist"))
+    }
+  }
+
+  /** The distributed frontier expansion, shared with [[MultiBfs]] (whose
+    * `keys` = the source column, expanding every source at once): `seeds`
+    * holds (keys…, __v, dist = 0), `e` the pinned (__a → __b) edges. Hop h
+    * joins only the frontier — the (keys…, __v) first reached at hop h-1 —
+    * and keeps what no earlier hop reached; a drained frontier ends the
+    * loop. Returns the pinned (keys…, __v, dist) table.
+    */
+  private[ops] def expand(e: DataFrame, seeds: DataFrame, keys: Seq[String],
+                          maxHops: Int): DataFrame = {
+    val reached = keys :+ "__v"
+    var dist = Materialize.eager(seeds)
+    var frontier = dist
+    var h = 1L
+    while (h <= maxHops && !frontier.isEmpty) {
+      val reachedNow = Materialize.eager(frontier.join(e, col("__v") === col("__a"))
+        .select(keys.map(col) :+ col("__b").as("__v"): _*).distinct()
+        .join(dist.select(reached.map(col): _*), reached, "left_anti")
+        .withColumn("dist", lit(h)))
+      val grown = Materialize.eager(dist.unionByName(reachedNow))
+      Materialize.release(dist, frontier)
+      dist = grown
+      frontier = reachedNow
+      h += 1
+    }
+    if (frontier ne dist) Materialize.release(frontier)
+    dist
   }
 }

@@ -64,48 +64,43 @@ object ConnectedComponents {
     // would otherwise embed the caller's edge computation twice (near-dup
     // pair generation is expensive — measured 2× its cost inside q57
     // before this), whereas the mirror of a pinned frame is a block scan.
-    val e0 = Materialize.eager(edges.select(col(aCol).as("s"), col(bCol).as("d")))
-    val idType = e0.schema("s").dataType
-    val integralIds = idType == org.apache.spark.sql.types.LongType ||
-      idType == org.apache.spark.sql.types.IntegerType
-    try {
+    Materialize.scoped(edges.select(col(aCol).as("s"), col(bCol).as("d"))) { e0 =>
+      val idType = e0.schema("s").dataType
+      val integralIds = idType == org.apache.spark.sql.types.LongType ||
+        idType == org.apache.spark.sql.types.IntegerType
       if (integralIds && e0.count() <= driverThreshold)
-        return (runOnDriver(e0, idType), 0)
-      val sym = e0.unionAll(e0.select(col("d").as("s"), col("s").as("d")))
-      // Eager checkpoint per iteration, NOT persist: `jumped`
-      // references `next` twice (the pointer-jump self-join), so without
-      // lineage truncation the logical plan DOUBLES per round and Catalyst
-      // re-analysis goes exponential — execution would short-circuit at a
-      // cache, but the analyzer still walks the whole tree (first version
-      // of this loop hung a 64-vertex path graph). The checkpoint replaces
-      // each round's plan with its materialized blocks — the standard
-      // barrier for iterative DataFrame algorithms (same device as
-      // IncrementalIngest's read-overwrite barrier).
-      var labels = Materialize.eager(sym.select(col("s").as("v")).distinct()
-        .withColumn("comp", col("v")))
-      var iter = 0
-      var converged = false
-      while (iter < maxIter && !converged) {
-        val nbrMin = sym
-          .join(labels.select(col("v").as("d"), col("comp")), "d")
-          .groupBy(col("s")).agg(min(col("comp")).as("nmin"))
-        val next = labels
-          .join(nbrMin.withColumnRenamed("s", "v"), Seq("v"), "left")
-          .select(col("v"),
-            least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
-        val jumped = Materialize.eager(next.as("x")
-          .join(next.select(col("v").as("comp"), col("comp").as("cc")), Seq("comp"), "left")
-          .select(col("v"), coalesce(col("cc"), col("comp")).as("comp")))
-        converged = jumped
+        (runOnDriver(e0, idType), 0)
+      else {
+        val sym = e0.unionAll(e0.select(col("d").as("s"), col("s").as("d")))
+        // Eager checkpoint per iteration (Materialize.iterate), NOT
+        // persist: `jumped` references `next` twice (the pointer-jump
+        // self-join), so without lineage truncation the logical plan
+        // DOUBLES per round and Catalyst re-analysis goes exponential —
+        // execution would short-circuit at a cache, but the analyzer still
+        // walks the whole tree (first version of this loop hung a
+        // 64-vertex path graph). The checkpoint replaces each round's plan
+        // with its materialized blocks — the standard barrier for
+        // iterative DataFrame algorithms (same device as
+        // IncrementalIngest's read-overwrite barrier).
+        val changedNone = (labels: DataFrame, jumped: DataFrame) => jumped
           .join(labels.select(col("v"), col("comp").as("__prev")), "v")
           .filter(col("comp") =!= col("__prev"))
           .isEmpty
-        Materialize.release(labels)
-        labels = jumped
-        iter += 1
+        Materialize.iterate(sym.select(col("s").as("v")).distinct()
+            .withColumn("comp", col("v")), maxIter, changedNone) { labels =>
+          val nbrMin = sym
+            .join(labels.select(col("v").as("d"), col("comp")), "d")
+            .groupBy(col("s")).agg(min(col("comp")).as("nmin"))
+          val next = labels
+            .join(nbrMin.withColumnRenamed("s", "v"), Seq("v"), "left")
+            .select(col("v"),
+              least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
+          next.as("x")
+            .join(next.select(col("v").as("comp"), col("comp").as("cc")), Seq("comp"), "left")
+            .select(col("v"), coalesce(col("cc"), col("comp")).as("comp"))
+        }
       }
-      (labels, iter)
-    } finally Materialize.release(e0)
+    }
   }
 
   /** Union-find with path compression, smaller id stays root — so labels

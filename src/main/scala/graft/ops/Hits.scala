@@ -126,62 +126,55 @@ object Hits {
             driverThreshold: Long = defaultDriverThreshold): DataFrame = {
     require(iterations >= 1 && scale > 0,
       s"need iterations >= 1 and scale > 0, got $iterations, $scale")
-    val e = Materialize.eager(edges
+    Materialize.scoped(edges
       .select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .filter(col("s") =!= col("d")).distinct())
+      .filter(col("s") =!= col("d")).distinct()) { e =>
+      /** One half-step: raw = Σ over `joinKey` of the partner score along
+        * the edge, then rescale to max = `scale`. outKey is the grouped
+        * (receiving) endpoint. Zero-score vertices are simply ABSENT from
+        * the intermediate result — they contribute nothing to the next
+        * half-step's inner join, so the full vertex set (with coalesced
+        * zeros) is restored only once, in the final output join; carrying
+        * it through every half-step cost one extra join × 8 half-steps in
+        * the first cut of this operator.
+        */
+      def halfStep(scores: DataFrame, scoreCol: String,
+                   joinKey: String, outKey: String,
+                   outCol: String): DataFrame = {
+        val raw = e
+          .join(scores.select(col("v").as(joinKey), col(scoreCol)), joinKey)
+          .groupBy(col(outKey).as("v"))
+          .agg(sum(col(scoreCol).cast("decimal(38,0)")).as("__raw"))
+        val m = raw.agg(max(col("__raw")).as("__m"))
+        raw.crossJoin(m)
+          .select(col("v"), expr(s"(__raw * ${scale}L) div __m").as(outCol))
+      }
 
-    /** One half-step: raw = Σ over `joinKey` of the partner score along
-      * the edge, then rescale to max = `scale`. outKey is the grouped
-      * (receiving) endpoint. Zero-score vertices are simply ABSENT from
-      * the intermediate result — they contribute nothing to the next
-      * half-step's inner join, so the full vertex set (with coalesced
-      * zeros) is restored only once, in the final output join; carrying
-      * it through every half-step cost one extra join × 8 half-steps in
-      * the first cut of this operator.
-      */
-    def halfStep(scores: DataFrame, scoreCol: String,
-                 joinKey: String, outKey: String,
-                 outCol: String): DataFrame = {
-      val raw = e
-        .join(scores.select(col("v").as(joinKey), col(scoreCol)), joinKey)
-        .groupBy(col(outKey).as("v"))
-        .agg(sum(col(scoreCol).cast("decimal(38,0)")).as("__raw"))
-      val m = raw.agg(max(col("__raw")).as("__m"))
-      raw.crossJoin(m)
-        .select(col("v"), expr(s"(__raw * ${scale}L) div __m").as(outCol))
-    }
-
-    try {
       // loud-by-design on an empty graph: the max-normalization divides by
       // the largest raw score, which only exists when there is ≥ 1 edge.
       val nE = e.count()
       require(nE > 0, "HITS over an empty graph")
       if (driverThreshold > 0 && nE <= driverThreshold)
-        return driverRanks(edges.sparkSession,
+        driverRanks(edges.sparkSession,
           new DriverGraph.DenseGraph(e.collect()),
           e.schema("s").dataType, iterations, scale)
-      val verts = Materialize.eager(e.select(col("s").as("v"))
-        .union(e.select(col("d").as("v"))).distinct())
-      try {
-        var hub = Materialize.eager(verts.withColumn("hub", lit(scale)))
-        var auth: DataFrame = null
-        var iter = 0
-        while (iter < iterations) {
-          // intermediate auths feed exactly one consumer (the hub half-step
-          // of the same iteration), so only the LAST auth — referenced by
-          // both the final hub step and the output join — is checkpointed;
-          // hub checkpoints every iteration, keeping lineage depth at two
-          // half-steps. (Checkpointing both halves measured 3.8 s at sf0.1
-          // vs 2.6 s for this shape — eager materializations, not plans.)
-          auth = halfStep(hub, "hub", "s", "d", "auth")
-          if (iter == iterations - 1) auth = Materialize.eager(auth)
-          val nextHub =
-            Materialize.eager(halfStep(auth, "auth", "d", "s", "hub"))
-          Materialize.release(hub)
-          hub = nextHub
-          iter += 1
+      else Materialize.scoped(e.select(col("s").as("v"))
+          .union(e.select(col("d").as("v"))).distinct()) { verts =>
+        // intermediate auths feed exactly one consumer (the hub half-step
+        // of the same iteration), so only the LAST auth — referenced by
+        // both the final hub step and the output join — is checkpointed;
+        // hub checkpoints every iteration, keeping lineage depth at two
+        // half-steps. (Checkpointing both halves measured 3.8 s at sf0.1
+        // vs 2.6 s for this shape — eager materializations, not plans.)
+        val (hub0, _) = Materialize.iterate(
+            verts.withColumn("hub", lit(scale)), iterations - 1) { hub =>
+          halfStep(halfStep(hub, "hub", "s", "d", "auth"),
+            "auth", "d", "s", "hub")
         }
-        // materialized (|V| rows) BEFORE the finally releases e/verts — a
+        val auth = Materialize.eager(halfStep(hub0, "hub", "s", "d", "auth"))
+        val hub = Materialize.eager(halfStep(auth, "auth", "d", "s", "hub"))
+        Materialize.release(hub0)
+        // materialized (|V| rows) BEFORE the scopes release e/verts — a
         // lazy result over released parents fails at evaluation time
         val out = Materialize.eager(verts
           .join(auth, Seq("v"), "left")
@@ -191,7 +184,7 @@ object Hits {
             coalesce(col("hub"), lit(0L)).as("hub")))
         Materialize.release(auth, hub)
         out
-      } finally Materialize.release(verts)
-    } finally Materialize.release(e)
+      }
+    }
   }
 }

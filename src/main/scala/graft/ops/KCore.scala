@@ -116,36 +116,30 @@ object KCore {
     // bothDirections input is just a doubled multiset of the same
     // canonical edges, so the flag no longer changes the computation and
     // is kept only for caller compatibility.
-    val canon = Materialize.eager(edges
+    Materialize.scoped(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct())
-    val e = canon.union(canon.select(col("b").as("a"), col("a").as("b")))
-    try {
-      if (driverThreshold > 0 && 2L * canon.count() <= driverThreshold) {
-        val g = new DriverGraph.DenseGraph(canon.collect())
-        return driverPeel(edges.sparkSession, g,
+      .distinct()) { canon =>
+      if (driverThreshold > 0 && 2L * canon.count() <= driverThreshold)
+        driverPeel(edges.sparkSession, new DriverGraph.DenseGraph(canon.collect()),
           canon.schema("a").dataType, k, rounds)
-      }
-      def liveDegrees(live: DataFrame): DataFrame = e
-        .join(live.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
-        .join(live.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
-        .groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
-      var live = Materialize.eager(e.select(col("a").as("v")).distinct())
-      var r = 0
-      while (r < rounds) {
-        val next = Materialize.eager(
-          liveDegrees(live).filter(col("deg") >= k).select(col("v")))
+      else {
+        val e = canon.union(canon.select(col("b").as("a"), col("a").as("b")))
+        def liveDegrees(live: DataFrame): DataFrame = e
+          .join(live.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
+          .join(live.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
+          .groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
+        val (live, _) = Materialize.iterate(
+            e.select(col("a").as("v")).distinct(), rounds) { live =>
+          liveDegrees(live).filter(col("deg") >= k).select(col("v"))
+        }
+        // materialize the (≤ |V|-row) result BEFORE the scope releases
+        // canon — a lazy plan over a released canon fails at evaluation
+        val out = Materialize.eager(liveDegrees(live))
         Materialize.release(live)
-        live = next
-        r += 1
+        out
       }
-      // materialize the (≤ |V|-row) result BEFORE releasing canon — a
-      // lazy plan over a released canon fails at evaluation time
-      val out = Materialize.eager(liveDegrees(live))
-      Materialize.release(live)
-      out
-    } finally Materialize.release(canon)
+    }
   }
 }

@@ -494,9 +494,8 @@ object Knn {
     // accessors statically per side, so no per-scan array cast is needed.
     val base = emb.select(col(vecCol).as("__v"))
       .filter(col("__v").isNotNull)    // null-vector exclusion (see topKJoin)
-    val train = Materialize.eager(if (trainFraction < 1.0)
-      base.sample(withReplacement = false, trainFraction, seed = 42) else base)
-    try {
+    Materialize.scoped(if (trainFraction < 1.0)
+      base.sample(withReplacement = false, trainFraction, seed = 42) else base) { train =>
       // Farthest-point seeding, one collect job per seed. Measured against
       // a single-job hash-ordered seed batch: total training time was
       // UNCHANGED (the k-1 jobs are not the bottleneck on a pinned sample)
@@ -534,7 +533,7 @@ object Knn {
         it += 1
       }
       cents
-    } finally Materialize.release(train)
+    }
   }
 
   /** Adds the trained quantizer's cell id (`cellCol`) to every row — the

@@ -104,40 +104,37 @@ object LabelProp {
     // pin the edge projection once — the per-round join otherwise
     // re-runs the caller's edge derivation `rounds`+1 times (the round-9
     // measured scan audit's Bfs finding; same fix)
-    val e = Materialize.eager(edges.select(col(aCol).as("__a"), col(bCol).as("__b")))
-    try {
+    Materialize.scoped(edges.select(col(aCol).as("__a"), col(bCol).as("__b"))) { e =>
       val ordering = DriverGraph.sparkOrdering(e.schema("__a").dataType)
       if (driverThreshold > 0 && ordering.isDefined &&
-          e.count() <= driverThreshold) {
-        val g = new DriverGraph.DenseGraph(e.collect())
-        return driverCommunities(edges.sparkSession, g,
+          e.count() <= driverThreshold)
+        driverCommunities(edges.sparkSession,
+          new DriverGraph.DenseGraph(e.collect()),
           e.schema("__a").dataType, ordering.get, rounds)
           .select(col("v"), col("label"))
+      else {
+        val (labels, _) = Materialize.iterate(e.select(col("__a").as("__v"))
+            .union(e.select(col("__b")))
+            .distinct()
+            .withColumn("__lab", col("__v")), rounds) { labels =>
+          val nbr = e.join(labels, col("__a") === col("__v"))
+            .select(col("__b").as("__v"), col("__lab"))
+            .groupBy("__v", "__lab").agg(count(lit(1)).as("__c"))
+          // argmax in ONE combinable aggregate (max count, min label on
+          // ties) — the max + join-back + min form costs an extra exchange
+          // and join per round; MaxScoreMinKey folds it into the hash
+          // aggregate (semantics pinned identical by LabelPropSpec)
+          val adopted = nbr.groupBy("__v").agg(
+            graft.functions.ArgExtremum
+              .maxScoreMinKey(col("__c"), col("__lab")).as("__new"))
+          // a vertex with no in-neighbors keeps its label (only possible on
+          // directed input; a symmetrized graph always adopts)
+          labels.join(adopted, Seq("__v"), "left")
+            .select(col("__v"),
+              coalesce(col("__new"), col("__lab")).as("__lab"))
+        }
+        labels.select(col("__v").as("v"), col("__lab").as("label"))
       }
-      var labels = Materialize.eager(e.select(col("__a").as("__v"))
-        .union(e.select(col("__b")))
-        .distinct()
-        .withColumn("__lab", col("__v")))
-      for (_ <- 1 to rounds) {
-        val nbr = e.join(labels, col("__a") === col("__v"))
-          .select(col("__b").as("__v"), col("__lab"))
-          .groupBy("__v", "__lab").agg(count(lit(1)).as("__c"))
-        // argmax in ONE combinable aggregate (max count, min label on
-        // ties) — the max + join-back + min form costs an extra exchange
-        // and join per round; MaxScoreMinKey folds it into the hash
-        // aggregate (semantics pinned identical by LabelPropSpec)
-        val adopted = nbr.groupBy("__v").agg(
-          graft.functions.ArgExtremum
-            .maxScoreMinKey(col("__c"), col("__lab")).as("__new"))
-        // a vertex with no in-neighbors keeps its label (only possible on
-        // directed input; a symmetrized graph always adopts)
-        val next = Materialize.eager(labels.join(adopted, Seq("__v"), "left")
-          .select(col("__v"),
-            coalesce(col("__new"), col("__lab")).as("__lab")))
-        Materialize.release(labels)
-        labels = next
-      }
-      labels.select(col("__v").as("v"), col("__lab").as("label"))
-    } finally Materialize.release(e)
+    }
   }
 }

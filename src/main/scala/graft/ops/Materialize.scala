@@ -22,14 +22,56 @@ import org.apache.spark.sql.execution.LogicalRDD
   * mid-query loses its blocks; rerun the query.
   *
   * A frame that is only needed inside the call (a pinned edge list, a
-  * finished round of an iterative loop) is handed to [[release]] as soon
-  * as nothing reads it, so a long-lived session's block storage does not
-  * grow with every call until a GC happens.
+  * finished round of an iterative loop) is freed as soon as nothing reads
+  * it, so a long-lived session's block storage does not grow with every
+  * call until a GC happens. [[scoped]] frees a call-long pin and
+  * [[iterate]] frees each finished round, on success and on failure
+  * alike; [[release]] is left for the frames neither shape fits.
   */
 private[graft] object Materialize {
 
   /** Compute `df` now into block storage owned by the returned frame. */
   def eager(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+
+  /** Pins `df` with [[eager]] for the duration of `body` and releases the
+    * pin when `body` returns or throws. Whatever `body` returns must not
+    * lazily read the pin: return a driver-built or [[eager]] frame.
+    */
+  def scoped[A](df: DataFrame)(body: DataFrame => A): A = {
+    val pinned = eager(df)
+    try body(pinned) finally release(pinned)
+  }
+
+  /** Runs up to `rounds` rounds of `step` from `init`, pinning `init` and
+    * every round's output with [[eager]] (the lineage barrier that keeps an
+    * iterative plan constant-size). After each round `converged(prev, next)`
+    * reads both frames, then `prev` is released; a `true` ends the loop.
+    * Returns the last pinned frame and the number of rounds run. A round
+    * that throws releases every frame this call still holds.
+    */
+  def iterate(init: DataFrame, rounds: Int,
+              converged: (DataFrame, DataFrame) => Boolean = (_, _) => false)
+             (step: DataFrame => DataFrame): (DataFrame, Int) = {
+    var cur = eager(init)
+    var n = 0
+    var done = false
+    try {
+      while (n < rounds && !done) {
+        val next = eager(step(cur))
+        try done = converged(cur, next)
+        finally {
+          release(cur)
+          cur = next
+        }
+        n += 1
+      }
+      (cur, n)
+    } catch {
+      case t: Throwable =>
+        release(cur)
+        throw t
+    }
+  }
 
   /** [[eager]] without the job: the blocks are written by the first action
     * that scans the returned frame, for a loop whose own next action (a

@@ -150,9 +150,9 @@ object Mmr {
         .select(col("__q"), (-col("__w.__nid")).as("__id"),
           col("__w.__rel").as("__rel"), lit(step).as("step"))
 
-    var picked = Materialize.eager(pick(c.withColumn("__score", col("__rel")), 1))
-
-    for (step <- 2 to k) {
+    val steps = (2 to k).iterator
+    val (picked, _) = Materialize.iterate(
+        pick(c.withColumn("__score", col("__rel")), 1), k - 1) { picked =>
       val unpicked = c.join(picked.select(col("__q"), col("__id")),
         Seq("__q", "__id"), "left_anti")
       // max similarity of each unpicked candidate to the picked set
@@ -167,9 +167,7 @@ object Mmr {
         // candidates disjoint from every pick (no sim row) diversify freely
         .withColumn("__score",
           col("__rel") - coalesce(col("__maxsim"), lit(0L)))
-      val next = Materialize.eager(picked.unionByName(pick(scored, step)))
-      Materialize.release(picked)
-      picked = next
+      picked.unionByName(pick(scored, steps.next()))
     }
     picked.select(col("__q").as(qCol), col("__id").as(idCol),
       col("__rel").as(relCol), col("step"))

@@ -115,51 +115,44 @@ object PageRank {
     require(iterations >= 1 && dampNum > 0 && dampNum < dampDen,
       s"need iterations >= 1 and 0 < dampNum < dampDen, got " +
         s"$iterations, $dampNum/$dampDen")
-    val e = Materialize.eager(edges
+    Materialize.scoped(edges
       .select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .filter(col("s") =!= col("d")).distinct())
-    try {
+      .filter(col("s") =!= col("d")).distinct()) { e =>
       if (driverThreshold > 0 && e.count() <= driverThreshold)
-        return driverRanks(edges.sparkSession,
+        driverRanks(edges.sparkSession,
           new DriverGraph.DenseGraph(e.collect()),
           e.schema("s").dataType, iterations, dampNum, dampDen, scale)
-      val verts = Materialize.eager(e.select(col("s").as("v"))
-        .union(e.select(col("d").as("v"))).distinct())
-      val outDeg = Materialize.eager(
-        e.groupBy(col("s").as("v")).agg(count(lit(1)).as("__deg")))
-      try {
-        // N is the one driver scalar (bounded bookkeeping); p0/base are the
-        // same integer expressions the oracle derives from ITS count — equal
-        // because both count the same graph.
-        val n = verts.count()
-        require(n > 0, "PageRank over an empty graph")
-        val p0 = scale / n
-        val base = ((dampDen - dampNum) * p0) / dampDen
-        var pr = Materialize.eager(verts.withColumn("pr", lit(p0)))
-        var iter = 0
-        while (iter < iterations) {
-          val contribs = e
-            .join(pr.join(outDeg, "v")
-                .select(col("v").as("s"), expr("pr div __deg").as("__c")),
-              "s")
-            .groupBy(col("d").as("v")).agg(sum(col("__c")).as("__cin"))
-          val dangling = pr.join(outDeg, Seq("v"), "left_anti")
-            .agg(coalesce(sum(col("pr")), lit(0L)).as("__dang"))
-          val next = Materialize.eager(verts
-            .join(contribs, Seq("v"), "left")
-            .crossJoin(dangling)
-            .withColumn("__recv",
-              coalesce(col("__cin"), lit(0L)) + expr(s"__dang div ${n}L"))
-            .select(col("v"),
-              (lit(base) + expr(s"(${dampNum}L * __recv) div ${dampDen}L"))
-                .as("pr")))
-          Materialize.release(pr)
-          pr = next
-          iter += 1
+      else Materialize.scoped(e.select(col("s").as("v"))
+          .union(e.select(col("d").as("v"))).distinct()) { verts =>
+        Materialize.scoped(
+            e.groupBy(col("s").as("v")).agg(count(lit(1)).as("__deg"))) { outDeg =>
+          // N is the one driver scalar (bounded bookkeeping); p0/base are the
+          // same integer expressions the oracle derives from ITS count — equal
+          // because both count the same graph.
+          val n = verts.count()
+          require(n > 0, "PageRank over an empty graph")
+          val p0 = scale / n
+          val base = ((dampDen - dampNum) * p0) / dampDen
+          Materialize.iterate(verts.withColumn("pr", lit(p0)), iterations) { pr =>
+            val contribs = e
+              .join(pr.join(outDeg, "v")
+                  .select(col("v").as("s"), expr("pr div __deg").as("__c")),
+                "s")
+              .groupBy(col("d").as("v")).agg(sum(col("__c")).as("__cin"))
+            val dangling = pr.join(outDeg, Seq("v"), "left_anti")
+              .agg(coalesce(sum(col("pr")), lit(0L)).as("__dang"))
+            verts
+              .join(contribs, Seq("v"), "left")
+              .crossJoin(dangling)
+              .withColumn("__recv",
+                coalesce(col("__cin"), lit(0L)) + expr(s"__dang div ${n}L"))
+              .select(col("v"),
+                (lit(base) + expr(s"(${dampNum}L * __recv) div ${dampDen}L"))
+                  .as("pr"))
+          }._1
         }
-        pr
-      } finally Materialize.release(verts, outDeg)
-    } finally Materialize.release(e)
+      }
+    }
   }
 
   /** [[driverRanks]]' weighted twin: contribution per share row is
@@ -256,11 +249,10 @@ object PageRank {
     // cannot overflow for any int64 weight; `div` (IntegralDivide)
     // returns BIGINT and share ≤ shareScale, so the per-hop arithmetic
     // below stays pure long.
-    val shares = Materialize.eager(e0.join(outW, "s")
+    Materialize.scoped(e0.join(outW, "s")
       .select(col("s"), col("d"),
         expr(s"(CAST(w AS DECIMAL(38,0)) * ${shareScale}L) div __W")
-          .as("__sh")))
-    try {
+          .as("__sh"))) { shares =>
       // Driver fallback (see [[defaultDriverThreshold]]): the one-off
       // share normalization is distributed either way; below threshold
       // the hop recurrence — pure long arithmetic over the share list —
@@ -268,22 +260,18 @@ object PageRank {
       // collects the weighted edge list directly.
       if (driverThreshold > 0 && shares.count() <= driverThreshold) {
         val rows = shares.collect()
-        return driverRanksWeighted(edges.sparkSession,
+        driverRanksWeighted(edges.sparkSession,
           new DriverGraph.DenseGraph(rows), rows.map(_.getLong(2)),
           shares.schema("s").dataType, iterations, dampNum, dampDen,
           scale, shareScale)
-      }
-      val verts = Materialize.eager(shares.select(col("s").as("v"))
-        .union(shares.select(col("d").as("v"))).distinct())
-      try {
+      } else Materialize.scoped(shares.select(col("s").as("v"))
+          .union(shares.select(col("d").as("v"))).distinct()) { verts =>
         val n = verts.count()
         require(n > 0, "weighted PageRank over an empty graph")
         val p0 = scale / n
         val base = ((dampDen - dampNum) * p0) / dampDen
         val hasOut = shares.select(col("s").as("v")).distinct()
-        var pr = Materialize.eager(verts.withColumn("pr", lit(p0)))
-        var iter = 0
-        while (iter < iterations) {
+        Materialize.iterate(verts.withColumn("pr", lit(p0)), iterations) { pr =>
           val contribs = shares
             .join(pr.select(col("v").as("s"), col("pr")), "s")
             .select(col("d").as("v"),
@@ -291,20 +279,16 @@ object PageRank {
             .groupBy(col("v")).agg(sum(col("__c")).as("__cin"))
           val dangling = pr.join(hasOut, Seq("v"), "left_anti")
             .agg(coalesce(sum(col("pr")), lit(0L)).as("__dang"))
-          val next = Materialize.eager(verts
+          verts
             .join(contribs, Seq("v"), "left")
             .crossJoin(dangling)
             .withColumn("__recv",
               coalesce(col("__cin"), lit(0L)) + expr(s"__dang div ${n}L"))
             .select(col("v"),
               (lit(base) + expr(s"(${dampNum}L * __recv) div ${dampDen}L"))
-                .as("pr")))
-          Materialize.release(pr)
-          pr = next
-          iter += 1
-        }
-        pr
-      } finally Materialize.release(verts)
-    } finally Materialize.release(shares)
+                .as("pr"))
+        }._1
+      }
+    }
   }
 }

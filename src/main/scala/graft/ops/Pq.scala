@@ -93,9 +93,8 @@ object Pq {
     val dim = dimRow.head.getInt(0)
     require(dim % m == 0, s"vector dim $dim not divisible into $m subspaces")
     val subDim = dim / m
-    val train = Materialize.eager(if (trainFraction < 1.0)
-      base.sample(withReplacement = false, trainFraction, seed = 42) else base)
-    try {
+    Materialize.scoped(if (trainFraction < 1.0)
+      base.sample(withReplacement = false, trainFraction, seed = 42) else base) { train =>
       val seeds = train.distinct().orderBy(hash(col("__v")).asc).limit(ksub)
         .collect().map(_.getSeq[Double](0).toIndexedSeq)
       require(seeds.nonEmpty,
@@ -122,7 +121,7 @@ object Pq {
           cs.indices.map(c => means.getOrElse((s, c), cs(c))).toIndexedSeq }
       }
       Codebook(m, subDim, cents)
-    } finally Materialize.release(train)
+    }
   }
 
   /** (idCol, codes array<int> of length m) — the stored PQ representation. */

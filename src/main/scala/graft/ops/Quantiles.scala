@@ -63,7 +63,7 @@ object Quantiles {
     val nG = groupCols.length
 
     val sortCols = groupCols.map(col) :+ col("__v")
-    val narrow = Materialize.eager(df
+    Materialize.scoped(df
       .select((groupCols.map(col) :+ col(valueCol).cast("double").as("__v")): _*)
       .filter(col("__v").isNotNull)
       // The one full-data exchange: range partitioning spreads each group
@@ -79,10 +79,9 @@ object Quantiles {
       // source (guards rdd-index vs spark_partition_id divergence; a
       // recompute re-stamps __pid too, so the pin is the real defense
       // against re-sampled range boundaries).
-      .withColumn("__pid", spark_partition_id()))
-    val pidIdx = nG + 1
+      .withColumn("__pid", spark_partition_id())) { narrow =>
+      val pidIdx = nG + 1
 
-    try {
       // ---- pass 1: |partitions| × |groups| counts → driver ----
       val countRows: Array[Row] = narrow
         .groupBy(col("__pid") +: groupCols.map(col): _*)
@@ -188,7 +187,7 @@ object Quantiles {
             org.apache.spark.sql.types.LongType, nullable = false)))
       spark.createDataFrame(
         spark.sparkContext.parallelize(out, 1), schema)
-    } finally Materialize.release(narrow)
+    }
   }
 
   /** Per-group median + median-absolute-deviation in ONE source scan.
@@ -213,10 +212,9 @@ object Quantiles {
     */
   def medianAbsDev(df: DataFrame, groupCols: Seq[String], valueCol: String,
                    roundTo: Int = 6, partitions: Int = 0): DataFrame = {
-    val narrow = Materialize.eager(df
+    Materialize.scoped(df
       .select((groupCols.map(col) :+ col(valueCol).cast("double").as("__v")): _*)
-      .filter(col("__v").isNotNull))
-    try {
+      .filter(col("__v").isNotNull)) { narrow =>
       val med = exact(narrow, groupCols, "__v", Seq(0.5), partitions)
         .select(groupCols.map(col) :+
           round(element_at(col("quantiles"), 1), roundTo).as("med"): _*)
@@ -229,6 +227,6 @@ object Quantiles {
       // med and mad are both driver-built one-row-per-group frames by now;
       // the join is trivial and references nothing pinned.
       med.join(mad, groupCols.toSeq)
-    } finally Materialize.release(narrow)
+    }
   }
 }

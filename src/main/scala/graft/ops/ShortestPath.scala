@@ -57,57 +57,52 @@ object ShortestPath {
                    driverThreshold: Long = defaultDriverThreshold)
       : DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    val e = Materialize.eager(edges
+    Materialize.scoped(edges
       .select(col(srcCol).as("s"), col(dstCol).as("d"),
         col(weightCol).cast("long").as("w"))
-      .groupBy(col("s"), col("d")).agg(min(col("w")).as("w")))
-    try {
+      .groupBy(col("s"), col("d")).agg(min(col("w")).as("w"))) { e =>
       // fail loud rather than return a silently wrong bounded prefix
       val neg = e.filter(col("w") < 0).limit(1).count()
       require(neg == 0, "boundedPaths requires non-negative edge weights")
-      if (driverThreshold > 0 &&
-          source.schema("v").dataType == e.schema("s").dataType &&
-          e.count() <= driverThreshold) {
-        val srcVals = source.select(col("v")).limit(1 << 20).collect()
-        if (srcVals.length < (1 << 20)) {
-          val eRows = e.collect()
-          // dist map over raw vertex VALUES: Bellman–Ford needs no dense
-          // renumbering, and keys keep their exact JVM representation
-          var dist = scala.collection.mutable.HashMap.empty[Any, Long]
-          srcVals.foreach(r => dist(r.get(0)) = 0L)
-          var iter = 0
-          while (iter < rounds) {
-            val next = dist.clone()
-            eRows.foreach { r =>
-              dist.get(r.get(0)).foreach { ds =>
-                val cand = ds + r.getLong(2)
-                if (next.get(r.get(1)).forall(cand < _))
-                  next(r.get(1)) = cand
+      val onDriver: Option[DataFrame] =
+        if (driverThreshold > 0 &&
+            source.schema("v").dataType == e.schema("s").dataType &&
+            e.count() <= driverThreshold) {
+          val srcVals = source.select(col("v")).limit(1 << 20).collect()
+          if (srcVals.length < (1 << 20)) {
+            val eRows = e.collect()
+            // dist map over raw vertex VALUES: Bellman–Ford needs no dense
+            // renumbering, and keys keep their exact JVM representation
+            var dist = scala.collection.mutable.HashMap.empty[Any, Long]
+            srcVals.foreach(r => dist(r.get(0)) = 0L)
+            var iter = 0
+            while (iter < rounds) {
+              val next = dist.clone()
+              eRows.foreach { r =>
+                dist.get(r.get(0)).foreach { ds =>
+                  val cand = ds + r.getLong(2)
+                  if (next.get(r.get(1)).forall(cand < _))
+                    next(r.get(1)) = cand
+                }
               }
+              dist = next
+              iter += 1
             }
-            dist = next
-            iter += 1
-          }
-          return DriverGraph.vertexFrame(edges.sparkSession,
-            e.schema("s").dataType,
-            Seq("dist" -> org.apache.spark.sql.types.LongType),
-            dist.toSeq.map { case (v, d) =>
-              org.apache.spark.sql.Row(v, d) })
-        }
-      }
-      var dist = Materialize.eager(source.select(col("v"), lit(0L).as("dist")))
-      var iter = 0
-      while (iter < rounds) {
+            Some(DriverGraph.vertexFrame(edges.sparkSession,
+              e.schema("s").dataType,
+              Seq("dist" -> org.apache.spark.sql.types.LongType),
+              dist.toSeq.map { case (v, d) =>
+                org.apache.spark.sql.Row(v, d) }))
+          } else None
+        } else None
+      onDriver.getOrElse(Materialize.iterate(
+          source.select(col("v"), lit(0L).as("dist")), rounds) { dist =>
         val relaxed = dist.select(col("v").as("s"), col("dist"))
           .join(e, "s")
           .select(col("d").as("v"), (col("dist") + col("w")).as("dist"))
-        val next = Materialize.eager(dist.unionByName(relaxed)
-          .groupBy(col("v")).agg(min(col("dist")).as("dist")))
-        Materialize.release(dist)
-        dist = next
-        iter += 1
-      }
-      dist
-    } finally Materialize.release(e)
+        dist.unionByName(relaxed)
+          .groupBy(col("v")).agg(min(col("dist")).as("dist"))
+      }._1)
+    }
   }
 }

@@ -84,12 +84,12 @@ object PartitionedStore {
       // an eager checkpoint = the repo's read-then-overwrite-same-path write
       // barrier (IncrementalIngest precedent): rows are materialized on
       // executors before the partition they came from is replaced
-      val rows = Materialize.eager(spark.read.parquet(dir).filter(col("ym") === ym)
-        .repartitionByRange(want, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*))
-      try rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ym").parquet(dir)
-      finally Materialize.release(rows)
+      Materialize.scoped(spark.read.parquet(dir).filter(col("ym") === ym)
+          .repartitionByRange(want, sortCols.map(col): _*)
+          .sortWithinPartitions(sortCols.map(col): _*)) { rows =>
+        rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("ym").parquet(dir)
+      }
     }
     plan
   }

@@ -56,11 +56,10 @@ object BpeStream {
       batchId: Long,
       textCol: String,
       storeDir: String): Unit = {
-    val bp = Materialize.eager(batch
+    Materialize.scoped(batch
       .select(explode(graft.functions.TextFunctions
         .tokens(coalesce(col(textCol), lit("")))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt")))
-    try {
+      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))) { bp =>
       val merged =
         if (!Files.exists(Paths.get(storeDir))) bp
         else {
@@ -73,7 +72,7 @@ object BpeStream {
         }
       merged.withColumn("__v", lit(batchId))
         .write.mode("append").parquet(storeDir)
-    } finally Materialize.release(bp)
+    }
   }
 
   /** The live (word, count) table: keep-last per word. */
@@ -117,15 +116,14 @@ object BpeStream {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val df = Materialize.eager(batch.toDF())
-        try {
+        Materialize.scoped(batch.toDF()) { df =>
           processBatch(spark, df, id, textCol, storeDir)
           val (merges, _) = trainCurrent(spark, storeDir, rounds)
           df.select(col(idCol),
               encodeText(col(textCol), merges).as("enc"))
             .withColumn("__v", lit(id))
             .write.mode("append").parquet(encDir)
-        } finally Materialize.release(df)
+        }
       }
       .start()
 
@@ -205,8 +203,7 @@ object BpeStream {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val df = Materialize.eager(batch.toDF())
-        try {
+        Materialize.scoped(batch.toDF()) { df =>
           processBatch(spark, df, id, textCol, storeDir)
           val (merges, _) = trainCurrent(spark, storeDir, rounds)
           val m = merges.map(x => (x.symA, x.symB))
@@ -257,7 +254,7 @@ object BpeStream {
                 col("__batch_tok")).as("cum"))
             .withColumn("__v", lit(id))
             .write.mode("append").parquet(offDir)
-        } finally Materialize.release(df)
+        }
       }
       .start()
   }

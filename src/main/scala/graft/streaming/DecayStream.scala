@@ -75,13 +75,12 @@ object DecayStream {
       batchId: Long,
       keyCol: String,
       storeDir: String): Unit = {
-    val bp = Materialize.eager(batch
+    Materialize.scoped(batch
       .select(col(keyCol).as("__k"),
         expr("(ts div 1000) div 86400000000").as("__day"),
         floor(col("value") * 100).cast("long").as("__cents"))
       .groupBy(col("__k"), col("__day"))
-      .agg(sum(col("__cents")).as("__cents")))
-    try {
+      .agg(sum(col("__cents")).as("__cents"))) { bp =>
       val combined =
         if (!Files.exists(Paths.get(storeDir))) bp
         else {
@@ -104,7 +103,7 @@ object DecayStream {
           struct(col("__day"), col("__cents")))).as("__ledger"))
       merged.withColumn("__v", lit(batchId))
         .write.mode("append").parquet(storeDir)
-    } finally Materialize.release(bp)
+    }
   }
 
   /** Resolved per-key decayed scores, anchored at the store's global max

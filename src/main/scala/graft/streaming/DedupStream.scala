@@ -78,20 +78,20 @@ object DedupStream {
     // (twice — banding and verification) AND the store append, and the
     // source files of a streaming batch must not be re-read after the
     // micro-batch ends.
-    val sigs = Materialize.eager(
-      SignatureStore.signatures(batch, idCol, textCol, w, k))
-    try {
-      if (sigs.isEmpty) return
-      val store: DataFrame =
-        if (new java.io.File(storeDir).exists())
-          spark.read.parquet(storeDir)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], sigs.schema)
-      SignatureStore.incrementalPairs(store, sigs, k, rowsPerBand, threshold)
-        .write.mode("append").parquet(pairsDir)
-      // Only after the pairs are durably written does the batch join the
-      // store — a replayed batch re-reads the same store state.
-      sigs.write.mode("append").parquet(storeDir)
-    } finally Materialize.release(sigs)
+    Materialize.scoped(
+      SignatureStore.signatures(batch, idCol, textCol, w, k)) { sigs =>
+      if (!sigs.isEmpty) {
+        val store: DataFrame =
+          if (new java.io.File(storeDir).exists())
+            spark.read.parquet(storeDir)
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[Row], sigs.schema)
+        SignatureStore.incrementalPairs(store, sigs, k, rowsPerBand, threshold)
+          .write.mode("append").parquet(pairsDir)
+        // Only after the pairs are durably written does the batch join the
+        // store — a replayed batch re-reads the same store state.
+        sigs.write.mode("append").parquet(storeDir)
+      }
+    }
   }
 }

@@ -64,21 +64,21 @@ object EmbedDedupStream {
     // Materialize once: the batch feeds the pair join (banding + verify,
     // both sides) AND the store append; streaming source files must not
     // be re-read after the micro-batch ends.
-    val vecs = Materialize.eager(batch.select(batch(idCol), batch(vecCol))
-      .filter(batch(vecCol).isNotNull))
-    try {
-      if (vecs.isEmpty) return
-      val store: DataFrame =
-        if (new java.io.File(storeDir).exists())
-          spark.read.parquet(storeDir)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], vecs.schema)
-      graft.ops.Knn.srpIncrementalPairs(vecs, store, idCol, vecCol,
-          threshold, nPlanes, rowsPerBand)
-        .write.mode("append").parquet(pairsDir)
-      // Only after the pairs are durably written does the batch join the
-      // store — a replayed batch re-reads the same store state.
-      vecs.write.mode("append").parquet(storeDir)
-    } finally Materialize.release(vecs)
+    Materialize.scoped(batch.select(batch(idCol), batch(vecCol))
+      .filter(batch(vecCol).isNotNull)) { vecs =>
+      if (!vecs.isEmpty) {
+        val store: DataFrame =
+          if (new java.io.File(storeDir).exists())
+            spark.read.parquet(storeDir)
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[Row], vecs.schema)
+        graft.ops.Knn.srpIncrementalPairs(vecs, store, idCol, vecCol,
+            threshold, nPlanes, rowsPerBand)
+          .write.mode("append").parquet(pairsDir)
+        // Only after the pairs are durably written does the batch join the
+        // store — a replayed batch re-reads the same store state.
+        vecs.write.mode("append").parquet(storeDir)
+      }
+    }
   }
 }

@@ -81,8 +81,7 @@ object FitStream {
       batch: DataFrame,
       batchId: Long,
       storeDir: String): Unit = {
-    val bp = Materialize.eager(moments(features(batch)))
-    try {
+    Materialize.scoped(moments(features(batch))) { bp =>
       val merged =
         if (!Files.exists(Paths.get(storeDir))) bp
         else {
@@ -97,7 +96,7 @@ object FitStream {
         }
       merged.withColumn("__v", lit(batchId))
         .write.mode("append").parquet(storeDir)
-    } finally Materialize.release(bp)
+    }
   }
 
   /** The live per-language moment table: keep-last per lang. */

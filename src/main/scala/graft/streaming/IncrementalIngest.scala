@@ -59,16 +59,16 @@ object IncrementalIngest {
     // real scale: stage-and-swap or a snapshotting table format — the same
     // commit-then-delete discipline as the reference's cache loader,
     // crypto_data_pipeline_clickhouse.py:644-649.)
-    val staged = Materialize.eager(merged)
-    // dynamic overwrite as a per-write option, never on the session: a
-    // session-wide mode would make every later partitioned overwrite in the
-    // session (e.g. PartitionedStore.write rebuilding a table) keep the
-    // months its input does not cover
-    staged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ym")
-      .parquet(tableDir)
-    Materialize.release(staged)
+    Materialize.scoped(merged) { staged =>
+      // dynamic overwrite as a per-write option, never on the session: a
+      // session-wide mode would make every later partitioned overwrite in
+      // the session (e.g. PartitionedStore.write rebuilding a table) keep
+      // the months its input does not cover
+      staged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ym")
+        .parquet(tableDir)
+    }
   }
 
   /** One catch-up run: ingest all not-yet-processed files under `srcDir`

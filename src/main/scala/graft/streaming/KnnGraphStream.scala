@@ -79,38 +79,38 @@ object KnnGraphStream {
       k: Int = 5,
       kCells: Int = 4,
       iters: Int = 2): Unit = {
-    var pinned = List.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      val m = Materialize.eager(df)
-      pinned ::= m
-      m
+    def readOr(dir: String, like: DataFrame): DataFrame =
+      if (new java.io.File(dir).exists()) spark.read.parquet(dir)
+      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], like.schema)
+    Materialize.scoped(batch.select(batch(idCol), batch(vecCol))
+        .filter(batch(vecCol).isNotNull)) { vecs =>
+      if (!vecs.isEmpty) {
+        val store = readOr(storeDir, vecs)
+        Materialize.scoped(
+            vecs.join(store.select(col(idCol)), Seq(idCol), "left_anti")) { newVecs =>
+          // an empty newVecs is a full replay: both writes already landed
+          if (!newVecs.isEmpty) {
+            val all = store.unionByName(newVecs)
+            val eNew = topK(Knn.cellTopKJoin(newVecs, all, idCol, vecCol,
+              idCol, vecCol, k + 1, kCells, nProbe = kCells, iters = iters)
+              .filter(col("query_id") =!= col("vec_id")), k)
+            val eUpd = Knn.cellTopKJoin(store, newVecs, idCol, vecCol,
+              idCol, vecCol, k, kCells, nProbe = kCells, iters = iters)
+              .select(col("query_id").as("qa"), col("vec_id").as("cb"), col("cos"))
+            // eager read BEFORE the overwrite below (the IncrementalIngest
+            // read-overwrite barrier)
+            Materialize.scoped(readOr(graphDir, eUpd)) { oldGraph =>
+              val merged = topK(oldGraph.unionByName(eUpd)
+                .select(col("qa").as("query_id"), col("cb").as("vec_id"), col("cos")), k)
+              Materialize.scoped(merged.unionByName(eNew)) { newGraph =>
+                newGraph.write.mode("overwrite").parquet(graphDir)
+                newVecs.write.mode("append").parquet(storeDir)
+              }
+            }
+          }
+        }
+      }
     }
-    try {
-      val vecs = pin(batch.select(batch(idCol), batch(vecCol))
-        .filter(batch(vecCol).isNotNull))
-      if (vecs.isEmpty) return
-      def readOr(dir: String, like: DataFrame): DataFrame =
-        if (new java.io.File(dir).exists()) spark.read.parquet(dir)
-        else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], like.schema)
-      val store = readOr(storeDir, vecs)
-      val newVecs = pin(vecs.join(store.select(col(idCol)), Seq(idCol), "left_anti"))
-      if (newVecs.isEmpty) return    // full replay: both writes already landed
-      val all = store.unionByName(newVecs)
-      val eNew = topK(Knn.cellTopKJoin(newVecs, all, idCol, vecCol,
-        idCol, vecCol, k + 1, kCells, nProbe = kCells, iters = iters)
-        .filter(col("query_id") =!= col("vec_id")), k)
-      val eUpd = Knn.cellTopKJoin(store, newVecs, idCol, vecCol,
-        idCol, vecCol, k, kCells, nProbe = kCells, iters = iters)
-        .select(col("query_id").as("qa"), col("vec_id").as("cb"), col("cos"))
-      // eager read BEFORE the overwrite below (the IncrementalIngest
-      // read-overwrite barrier)
-      val oldGraph = pin(readOr(graphDir, eUpd))
-      val merged = topK(oldGraph.unionByName(eUpd)
-        .select(col("qa").as("query_id"), col("cb").as("vec_id"), col("cos")), k)
-      val newGraph = pin(merged.unionByName(eNew))
-      newGraph.write.mode("overwrite").parquet(graphDir)
-      newVecs.write.mode("append").parquet(storeDir)
-    } finally Materialize.release(pinned: _*)
   }
 
   /** Exact kNN graph over one vector frame — the batch-rebuild reference

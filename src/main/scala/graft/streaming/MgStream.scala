@@ -69,10 +69,9 @@ object MgStream {
     require(k >= 1, s"k must be >= 1, got $k")
     val keys = keyCols.map(col)
     // batch partial: exact (key, item) counts — map-side combinable
-    val bp = Materialize.eager(batch
+    Materialize.scoped(batch
       .groupBy(keys :+ col(itemCol).as("__item"): _*)
-      .agg(count(lit(1)).as("__cnt")))
-    try {
+      .agg(count(lit(1)).as("__cnt"))) { bp =>
       val combined =
         if (!Files.exists(Paths.get(storeDir))) bp
         else {
@@ -107,7 +106,7 @@ object MgStream {
               (col("__cnt") - col("__d")).as("__cnt"))))).as("__mg"))
       merged.withColumn("__v", lit(batchId))
         .write.mode("append").parquet(storeDir)
-    } finally Materialize.release(bp)
+    }
   }
 
   /** Resolved (key, item, count) counters — keep-last state, exploded. */

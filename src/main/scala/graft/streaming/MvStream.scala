@@ -97,9 +97,8 @@ object MvStream {
       valueCol: String,
       interval: String,
       mvDir: String): Unit = {
-    val bp = Materialize.eager(
-      partials(batch, keyCols, tsCol, tieBreak, valueCol, interval))
-    try {
+    Materialize.scoped(
+      partials(batch, keyCols, tsCol, tieBreak, valueCol, interval)) { bp =>
       val merged =
         if (!Files.exists(Paths.get(mvDir))) merge(bp, keyCols)
         else {
@@ -114,7 +113,7 @@ object MvStream {
         }
       merged.withColumn("__v", lit(batchId))
         .write.mode("append").parquet(mvDir)
-    } finally Materialize.release(bp)
+    }
   }
 
   /** The resolved, finalized view — same shape as `Resample.ohlcv`. */

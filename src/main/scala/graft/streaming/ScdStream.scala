@@ -73,13 +73,12 @@ object ScdStream {
       attrCols: Seq[String],
       dimDir: String): Unit = {
     val cols = keyCols ++ Seq(tsCol) ++ attrCols
-    val log0 = Materialize.eager(batch.select(cols.map(col): _*)
+    Materialize.scoped(batch.select(cols.map(col): _*)
       // same-instant duplicates within a batch: keep an arbitrary-but-
       // deterministic representative (min attr struct)
       .groupBy((keyCols :+ tsCol).map(col): _*)
       .agg(min(struct(attrCols.map(col): _*)).as("__a"))
-      .select((keyCols :+ tsCol).map(col) :+ col("__a.*"): _*))
-    try {
+      .select((keyCols :+ tsCol).map(col) :+ col("__a.*"): _*)) { log0 =>
       val log =
         if (!Files.exists(Paths.get(dimDir))) log0
         else {
@@ -102,7 +101,7 @@ object ScdStream {
       Scd.buildType2(log, keyCols, tsCol, attrCols)
         .withColumn("__v", lit(batchId))
         .write.mode("append").parquet(dimDir)
-    } finally Materialize.release(log0)
+    }
   }
 
   /** Keep-last-resolved dimension: one row per (key, valid_from), the

@@ -60,9 +60,8 @@ object SketchStream {
       keyCols: Seq[String],
       valueCol: String,
       storeDir: String): Unit = {
-    val bp = Materialize.eager(batch.groupBy(keyCols.map(col): _*)
-      .agg(hll_sketch_agg(col(valueCol)).as("__sk")))
-    try {
+    Materialize.scoped(batch.groupBy(keyCols.map(col): _*)
+      .agg(hll_sketch_agg(col(valueCol)).as("__sk"))) { bp =>
       val merged =
         if (!Files.exists(Paths.get(storeDir))) bp
         else {
@@ -76,7 +75,7 @@ object SketchStream {
         }
       merged.withColumn("__v", lit(batchId))
         .write.mode("append").parquet(storeDir)
-    } finally Materialize.release(bp)
+    }
   }
 
   /** Resolved estimates per key (keep-last sketch, then estimate). */

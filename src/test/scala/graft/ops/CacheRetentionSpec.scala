@@ -3,7 +3,8 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
-import graft.TestSpark
+import org.apache.spark.sql.functions.{array, least, lit}
+import graft.{Queries, TestSpark}
 
 /** Operators materialize their shared intermediates call-scoped (eager
   * local checkpoints freed with the result), never as session cache
@@ -132,7 +133,21 @@ class CacheRetentionSpec extends AnyFunSuite {
       "KTruss.peel" ->
         (() => KTruss.peel(graph, "s", "d", k = 3, rounds = 3, driverThreshold = 0)),
       "KTruss.fixpointState" -> (() =>
-        KTruss.fixpointState(graph, "s", "d", k = 3, driverThreshold = 0).edges))
+        KTruss.fixpointState(graph, "s", "d", k = 3, driverThreshold = 0).edges),
+      "Mmr.diversify" -> { () =>
+        // each edge's source is a query, its neighbours the candidates
+        val cands = graph.select($"s".as("q"), $"d".as("id"), $"w".as("rel"))
+        val sims = cands.as("a").join(cands.as("b"), "q")
+          .filter($"a.id" =!= $"b.id")
+          .select($"q", $"a.id".as("id"), $"b.id".as("id_b"),
+            ($"a.rel" * $"b.rel" % 7).as("sim"))
+        Mmr.diversify(cands, sims, "q", "id", "rel", "id_b", "sim", k = 3,
+          driverThreshold = 0)
+      },
+      "GreedyCover.select" -> (() => GreedyCover.select(
+        graph.select(($"s" % 3).as("g"), $"d".as("id"),
+          array($"s".cast("string"), ($"w" % 4).cast("string")).as("toks")),
+        "g", "id", "toks", k = 3)))
   }
 
   test("distributed graph loops keep only the blocks behind their result") {
@@ -146,6 +161,75 @@ class CacheRetentionSpec extends AnyFunSuite {
         s"$name left intermediate RDDs persisted")
       // every released frame is gone for good: the result must not read one
       assert(rows(out).nonEmpty, s"$name returned nothing")
+    }
+  }
+
+  /** A frame over fresh blocks, so a pin taken of it is a new RDD. */
+  private def numbers(n: Int): DataFrame = spark.range(n).toDF("x")
+
+  test("Materialize.iterate stops at the round cap and reports the rounds run") {
+    val before = persistedIds()
+    val (out, n) = Materialize.iterate(numbers(3), rounds = 4) { df =>
+      df.select(($"x" + 1).as("x"))
+    }
+    assert(n === 4)
+    assert(out.as[Long].collect().sorted === Array(4L, 5L, 6L))
+    Materialize.release(out)
+    assert((persistedIds() -- before).isEmpty, "a round stayed pinned")
+  }
+
+  test("Materialize.iterate stops at convergence, after reading both rounds") {
+    val before = persistedIds()
+    // min(x + 1, 5) reaches its fixpoint {5} after 5 rounds; the 6th
+    // round is the one that shows no change
+    val unchanged = (prev: DataFrame, next: DataFrame) =>
+      prev.exceptAll(next).isEmpty && next.exceptAll(prev).isEmpty
+    val (out, n) = Materialize.iterate(numbers(1), rounds = 25, unchanged) { df =>
+      df.select(least($"x" + 1, lit(5L)).as("x"))
+    }
+    assert(n === 6)
+    assert(out.as[Long].collect() === Array(5L))
+    Materialize.release(out)
+    assert((persistedIds() -- before).isEmpty, "a round stayed pinned")
+  }
+
+  test("Materialize.iterate releases every round when a step throws") {
+    val before = persistedIds()
+    var round = 0
+    val err = intercept[IllegalStateException] {
+      Materialize.iterate(numbers(3), rounds = 5) { df =>
+        round += 1
+        if (round == 2) throw new IllegalStateException("round 2 fails")
+        df.select(($"x" * 2).as("x"))
+      }
+    }
+    assert(err.getMessage === "round 2 fails")
+    assert((persistedIds() -- before).isEmpty,
+      "a failed iterate left persisted RDDs behind")
+  }
+
+  test("Materialize.scoped releases its pin when the body throws") {
+    val before = persistedIds()
+    var seen: DataFrame = null
+    intercept[IllegalStateException] {
+      Materialize.scoped(numbers(3)) { pinned =>
+        seen = pinned
+        assert(pinned.count() === 3L)
+        throw new IllegalStateException("body fails")
+      }
+    }
+    assert(seen != null)
+    assert((persistedIds() -- before).isEmpty,
+      "a failed scope left its pin persisted")
+  }
+
+  test("q104, q177 and q186 leave no CacheManager entries") {
+    spark.sharedState.cacheManager.clearCache()
+    for (name <- Seq("q104_ivf_recall", "q177_pq_recall", "q186_trunc_recall")) {
+      val out = Queries.byName(name).fn(spark, "/root/testdata/sf0.001")
+      assert(out.collect().nonEmpty, s"$name returned nothing")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name left a cached plan in the session")
     }
   }
 }

@@ -14,12 +14,53 @@ cross-type coercion). Any DECIMAL column reaching an output is flagged —
 decimal math belongs INSIDE queries; final output columns must be
 hash-stable types (string / long / double / bool).
 """
-import sys, json, glob, math, datetime, decimal
+import sys, os, json, glob, math, datetime, decimal, threading, time
 import duckdb
 import pyarrow.parquet as pq
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+# Fixed resource caps: an oracle that cannot finish inside them raises a
+# DuckDB error, which the per-query `except` reports as FAIL (never a skip).
+# Without them DuckDB sizes itself to the host and spills without bound —
+# one iterative-graph oracle at sf0.01 filled the disk that way.
+DUCKDB_MEMORY_LIMIT = "3GB"
+MAX_TEMP_GB = 4
+
+
+class SpillGuard:
+    """Interrupts the running query once the temp directory passes the cap.
+
+    DuckDB 1.0 does not enforce `max_temp_directory_size` on every spill: a
+    sort under a 200 MB cap wrote 2.9 GB, and q180_hits under a 1 GB cap
+    wrote ~18 GB before the disk filled. The interrupted query raises, so
+    it is reported as FAIL like any other oracle error.
+    """
+
+    def __init__(self, con, temp_dir, cap_bytes):
+        self.con, self.temp_dir, self.cap = con, temp_dir, cap_bytes
+        self.tripped = False
+        threading.Thread(target=self._watch, daemon=True).start()
+
+    def _size(self):
+        total = 0
+        try:
+            for e in os.scandir(self.temp_dir):
+                try:
+                    total += e.stat().st_size
+                except FileNotFoundError:  # freed while scanning
+                    pass
+        except FileNotFoundError:  # no spill yet
+            pass
+        return total
+
+    def _watch(self):
+        while True:
+            if not self.tripped and self._size() > self.cap:
+                self.tripped = True
+                self.con.interrupt()
+            time.sleep(0.1)
 
 
 def cell_key(v):
@@ -95,7 +136,13 @@ def bad_type_cols(con, sql):
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
+    temp_dir = f"{out_dir}/.duckdb_tmp"
+    con = duckdb.connect(config={
+        "memory_limit": DUCKDB_MEMORY_LIMIT,
+        "temp_directory": temp_dir,
+        "max_temp_directory_size": f"{MAX_TEMP_GB}GB",
+    })
+    guard = SpillGuard(con, temp_dir, MAX_TEMP_GB << 30)
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
@@ -106,11 +153,14 @@ def main():
             print(f"FAIL {name}: no spark output")
             n_fail += 1
             continue
+        guard.tripped = False
         try:
             btc = bad_type_cols(con, sql)
             s_cols, s_rows = canon(*read_spark(files))
             d_cols, d_rows = canon(*run_oracle(con, sql))
         except Exception as e:
+            if guard.tripped:
+                e = f"spilled over {MAX_TEMP_GB} GB, interrupted ({e})"
             print(f"FAIL {name}: {e}")
             n_fail += 1
             continue
