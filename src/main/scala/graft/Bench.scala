@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
@@ -37,27 +36,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Shuffle/spill on tmpfs: this VM's disk has multi-second write stalls
-    // that made identical runs swing 5-10x; RAM-backed local dirs remove it.
-    new java.io.File("/dev/shm/spark-local").mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Compute-dense stages (pair generation, LSH verify, tiled cosine)
-      // shuffle KBs at test SF; AQE's default 1 MB minPartitionSize floor
-      // coalesces them below the core count and serializes the compute.
-      // 256k measured best across the 4- and 32-core profiles (64k splinters
-      // light stages into scheduling overhead at 32 threads; 1 MB starves
-      // 4 cores). At real SF (MB-GB shuffles) the floor is inert either way.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "256k"))
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // that made identical runs swing 5-10x (Graft.localSession).
+    val spark = Graft.localSession(Graft.cpus)
 
     // Warm-up on the smoke scale: JIT, codegen, and FS metadata once, so the
     // per-query numbers below measure the plans, not cold-start overhead.
@@ -83,10 +64,10 @@ object Bench {
     val loadStart = loadavg()
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // Optional comma-separated substring filter for targeted profiling runs.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSeq)
+    // Targeted profiling runs: Graft.selected (SPARK_GRAFT_ONLY prefixes).
+    val only = Graft.only
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.contains)) }
+      .filter { case (n, _) => Graft.selected(n) }
     val results = names.map { case (name, fn) =>
       val times = (0 until reps).map { _ =>
         // guide §1.5: label jobs per query (queries with internal phases
@@ -168,7 +149,7 @@ object Bench {
     // merge-clean record — a contended or merge-refused run must leave the
     // committed record untouched (round 10's driver run overwrote the quiet
     // record in place; this is the structural fix). Filtered runs
-    // (SPARK_GRAFT_BENCH_ONLY) are targeted profiling — they clobber
+    // (SPARK_GRAFT_ONLY) are targeted profiling — they clobber
     // neither file unless OUT names a scratch path explicitly.
     val explicitOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
     val gateOk = only.isEmpty && !contended && mergeSkipped.isEmpty

@@ -22,7 +22,12 @@ object Graft {
       .appName(appName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      // see Bench.scala: tiny-byte compute-dense stages must stay parallel
+      // Compute-dense stages (pair generation, LSH verify, tiled cosine)
+      // shuffle KBs at test SF; AQE's default 1 MB minPartitionSize floor
+      // coalesces them below the core count and serializes the compute.
+      // 256k measured best across the 4- and 32-core profiles (64k
+      // splinters light stages into scheduling overhead at 32 threads;
+      // 1 MB starves 4 cores). At real SF the floor is inert either way.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "256k"))
       .withExtensions(new GraftExtensions)
@@ -45,4 +50,16 @@ object Graft {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Local cores for the diagnostic mains (`SPARK_GRAFT_CPUS`, default 4). */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The mains' one query filter: `SPARK_GRAFT_ONLY=q90,q104` keeps the
+    * queries whose name starts with one of the comma-separated prefixes;
+    * unset keeps every query.
+    */
+  def only: Option[Seq[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+
+  def selected(name: String): Boolean = only.forall(_.exists(name.startsWith))
 }

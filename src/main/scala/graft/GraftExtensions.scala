@@ -1,17 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.functions.HashExpressions
+import graft.functions.{BoundedTopK, HashExpressions, MaxScoreMinKey,
+  StringExpressions, ZOrderFunctions}
 import graft.ops.MinHashLSH
 
 /** SparkSessionExtensions entry point: registers the engine's compiled
   * expressions as SQL functions, so the `spark.sql` surface (S9) reaches
   * them too:
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   val spark = Graft.localSession()  // any builder: .withExtensions(new GraftExtensions)
   *   spark.sql("SELECT simhash_fingerprint(tokens) FROM docs")
   *
   * No optimizer rules or strategies are injected — SURVEY.md §4: every
@@ -19,107 +21,53 @@ import graft.ops.MinHashLSH
   * code stays at the expression level.
   */
 object GraftExtensions {
-  /** Same registrations against an already-built (classic) session — for
-    * notebooks/tests that can't pass extensions at build time. Idempotent:
-    * re-invocation (every q43 run) is a no-op instead of a re-register that
-    * warns `replaced a previously registered function` into the log.
-    */
-  /** Names THIS object registered, per session — idempotence is inferred
-    * from our own bookkeeping, never from mere name existence: a session
-    * that already had an unrelated UDF named e.g. `cosine_sim` must not be
-    * silently treated as "graft already registered" (graft's ops would run
-    * against foreign semantics). Weak keys: sessions die, entries follow.
-    */
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-        scala.collection.mutable.Set[String]]())
 
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = org.apache.spark.sql.classic.GraftExprColumn.functionRegistry(spark)
-    val mine = registered.synchronized {
-      var s = registered.get(spark)
-      if (s == null) { s = scala.collection.mutable.Set.empty[String]; registered.put(spark, s) }
-      s
-    }
-    // Same positional-args guard as the extensions class: fail with the
-    // usage string instead of a bare IndexOutOfBoundsException.
-    def arity(args: Seq[Expression], n: Int, usage: String): Unit =
-      if (args.length != n) throw new IllegalArgumentException(
-        s"wrong argument count for $usage: expected $n, got ${args.length}")
-    def once(name: String)(builder: Seq[Expression] => Expression): Unit =
-      if (mine.contains(name)) ()                    // our earlier call — no-op
-      else if (reg.functionExists(FunctionIdentifier(name)))
-        System.err.println(s"[graft] WARNING: not registering '$name' — the " +
-          "session already has a function with that name (not graft's); " +
-          s"SQL calls to $name will use the existing definition")
-      else {
-        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-        mine += name
-      }
-    once("simhash_fingerprint")(args => {
-      arity(args, 1, "simhash_fingerprint(tokens)")
-      HashExpressions.SimHashFingerprint(args.head)
-    })
-    once("minhash_signature")(args => {
-      arity(args, 2, "minhash_signature(units, k)")
-      val k = args(1) match {
-        case Literal(v: Int, _) => v
-        case o => throw new IllegalArgumentException(s"k must be a literal, got $o")
-      }
+  /** The SQL functions, one row each: (name, usage, builder). Both the
+    * extension class and [[registerAll]] install exactly this table.
+    */
+  private[graft] val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    fn("simhash_fingerprint", "(tokens)", "60-bit SimHash of a string array")(
+      a => HashExpressions.SimHashFingerprint(a.head)),
+    fn("minhash_signature", "(units, k)", "k-wide MinHash signature") { a =>
+      val k = intArg(a(1), "k")
       require(k >= 1 && k <= MinHashLSH.A.length,
         s"k must be in [1, ${MinHashLSH.A.length}], got $k")
-      HashExpressions.MinHashSignature(args.head, k,
+      HashExpressions.MinHashSignature(a.head, k,
         MinHashLSH.A.take(k), MinHashLSH.B.take(k))
-    })
-    once("cosine_sim")(args => {
-      arity(args, 2, "cosine_sim(a, b)")
-      HashExpressions.CosineSim(args(0), args(1))
-    })
-    once("hash60_array")(args => {
-      arity(args, 1, "hash60_array(units)")
-      HashExpressions.Hash60Array(args.head)
-    })
-    once("srp_signature")(args => {
-      arity(args, 2, "srp_signature(vec, nPlanes)")
-      val n = args(1) match {
-        case Literal(v: Int, _) => v
-        case o => throw new IllegalArgumentException(s"nPlanes must be a literal, got $o")
-      }
-      HashExpressions.SrpSignature(args.head, n)
-    })
-    once("zorder2")(args => {
-      arity(args, 2, "zorder2(x, y)")
-      graft.functions.ZOrderFunctions.InterleaveBits(args(0), args(1))
-    })
-    once("damerau_levenshtein")(args => {
-      arity(args, 2, "damerau_levenshtein(a, b)")
-      graft.functions.StringExpressions.DamerauLevenshtein(args(0), args(1))
-    })
-    once("topk_pairs")(args => {
-      arity(args, 3, "topk_pairs(score, id, k)")
-      val k = args(2) match {
-        case Literal(v: Int, _) => v
-        case o => throw new IllegalArgumentException(s"k must be a literal, got $o")
-      }
-      graft.functions.BoundedTopK(
-        org.apache.spark.sql.catalyst.expressions.Cast(args(0),
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.catalyst.expressions.Cast(args(1),
-          org.apache.spark.sql.types.LongType), k)
-    })
-    once("argmax_minkey")(args => {
-      arity(args, 2, "argmax_minkey(score, key)")
-      graft.functions.MaxScoreMinKey(args(0), args(1))
+    },
+    fn("cosine_sim", "(a, b)", "cosine similarity of two float arrays")(
+      a => HashExpressions.CosineSim(a(0), a(1))),
+    fn("hash60_array", "(units)", "per-element 60-bit md5-prefix hashes")(
+      a => HashExpressions.Hash60Array(a.head)),
+    fn("srp_signature", "(vec, nPlanes)", "signed-random-projection bits")(
+      a => HashExpressions.SrpSignature(a.head, intArg(a(1), "nPlanes"))),
+    fn("zorder2", "(x, y)",
+      "62-bit Morton interleave of two integral coordinates")(
+      a => ZOrderFunctions.InterleaveBits(a(0), a(1))),
+    fn("damerau_levenshtein", "(a, b)",
+      "full Damerau-Levenshtein distance (unrestricted transpositions)")(
+      a => StringExpressions.DamerauLevenshtein(a(0), a(1))),
+    fn("topk_pairs", "(score, id, k)", "k best (score desc, id asc) pairs")(
+      a => BoundedTopK(Cast(a(0), DoubleType), Cast(a(1), LongType),
+        intArg(a(2), "k"))),
+    fn("argmax_minkey", "(score, key)",
+      "key at the max score, smallest key on ties")(
+      a => MaxScoreMinKey(a(0), a(1))))
+
+  /** One row: the usage string and a builder that checks arity first —
+    * `args(i)` on a short Seq throws a bare IndexOutOfBoundsException with
+    * no hint at the expected signature.
+    */
+  private def fn(name: String, params: String, doc: String)(
+      build: Seq[Expression] => Expression)
+      : (String, String, Seq[Expression] => Expression) = {
+    val n = params.count(_ == ',') + 1
+    (name, s"_FUNC_$params - $doc", args => {
+      if (args.length != n) throw new IllegalArgumentException(
+        s"wrong argument count for $name$params: expected $n, got ${args.length}")
+      build(args)
     })
   }
-}
-
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[HashExpressions.type].getName, null, name, usage,
-      "", "", "", "", "", "", "scala_udf")
 
   private def intArg(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v
@@ -127,95 +75,43 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       s"$what must be an integer literal, got $other")
   }
 
-  /** Positional-args guard: `args(i)` on a short Seq throws a bare
-    * IndexOutOfBoundsException with no hint at the expected signature, so
-    * every registration checks arity first and fails with the usage string.
+  /** Every graft registration carries this class name in its
+    * ExpressionInfo — how [[registerAll]] tells its own functions (from an
+    * earlier call or from the extension) from a foreign one of the same name.
     */
-  private def arity(args: Seq[Expression], n: Int, usage: String): Unit =
-    if (args.length != n) throw new IllegalArgumentException(
-      s"wrong argument count for $usage: expected $n, got ${args.length}")
+  private val marker = classOf[GraftExtensions].getName
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("simhash_fingerprint"),
-      info("simhash_fingerprint", "_FUNC_(tokens) - 60-bit SimHash of a string array"),
-      (args: Seq[Expression]) => {
-        arity(args, 1, "simhash_fingerprint(tokens)")
-        HashExpressions.SimHashFingerprint(args.head)
-      }))
+  private[graft] def info(name: String, usage: String): ExpressionInfo =
+    new ExpressionInfo(marker, null, name, usage,
+      "", "", "", "", "", "", "scala_udf")
 
-    ext.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      info("minhash_signature", "_FUNC_(units, k) - k-wide MinHash signature"),
-      (args: Seq[Expression]) => {
-        arity(args, 2, "minhash_signature(units, k)")
-        val k = intArg(args(1), "k")
-        require(k >= 1 && k <= MinHashLSH.A.length,
-          s"k must be in [1, ${MinHashLSH.A.length}], got $k")
-        HashExpressions.MinHashSignature(args.head, k,
-          MinHashLSH.A.take(k), MinHashLSH.B.take(k))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "_FUNC_(a, b) - cosine similarity of two float arrays"),
-      (args: Seq[Expression]) => {
-        arity(args, 2, "cosine_sim(a, b)")
-        HashExpressions.CosineSim(args(0), args(1))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("hash60_array"),
-      info("hash60_array", "_FUNC_(units) - per-element 60-bit md5-prefix hashes"),
-      (args: Seq[Expression]) => {
-        arity(args, 1, "hash60_array(units)")
-        HashExpressions.Hash60Array(args.head)
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("srp_signature"),
-      info("srp_signature", "_FUNC_(vec, nPlanes) - signed-random-projection bits"),
-      (args: Seq[Expression]) => {
-        arity(args, 2, "srp_signature(vec, nPlanes)")
-        HashExpressions.SrpSignature(args.head, intArg(args(1), "nPlanes"))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("zorder2"),
-      info("zorder2", "_FUNC_(x, y) - 62-bit Morton interleave of two integral coordinates"),
-      (args: Seq[Expression]) => {
-        arity(args, 2, "zorder2(x, y)")
-        graft.functions.ZOrderFunctions.InterleaveBits(args(0), args(1))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("damerau_levenshtein"),
-      info("damerau_levenshtein",
-        "_FUNC_(a, b) - full Damerau-Levenshtein distance (unrestricted transpositions)"),
-      (args: Seq[Expression]) => {
-        arity(args, 2, "damerau_levenshtein(a, b)")
-        graft.functions.StringExpressions.DamerauLevenshtein(args(0), args(1))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("topk_pairs"),
-      info("topk_pairs", "_FUNC_(score, id, k) - k best (score desc, id asc) pairs"),
-      (args: Seq[Expression]) => {
-        arity(args, 3, "topk_pairs(score, id, k)")
-        graft.functions.BoundedTopK(
-          org.apache.spark.sql.catalyst.expressions.Cast(args(0),
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.catalyst.expressions.Cast(args(1),
-            org.apache.spark.sql.types.LongType), intArg(args(2), "k"))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("argmax_minkey"),
-      info("argmax_minkey",
-        "_FUNC_(score, key) - key at the max score, smallest key on ties"),
-      (args: Seq[Expression]) => {
-        arity(args, 2, "argmax_minkey(score, key)")
-        graft.functions.MaxScoreMinKey(args(0), args(1))
-      }))
+  /** Same registrations against an already-built (classic) session — for
+    * notebooks/tests that can't pass extensions at build time. Idempotent:
+    * a function graft already installed (an earlier call, every q43 run,
+    * or the extension) is left as it is. A session that already has an
+    * unrelated function named e.g. `cosine_sim` keeps it, with a warning:
+    * graft never replaces foreign semantics.
+    */
+  def registerAll(spark: SparkSession): Unit = synchronized {
+    val reg = org.apache.spark.sql.classic.GraftExprColumn.functionRegistry(spark)
+    functions.foreach { case (name, usage, builder) =>
+      val id = FunctionIdentifier(name)
+      reg.lookupFunction(id) match {
+        case Some(i) if i.getClassName == marker => ()
+        case Some(_) =>
+          System.err.println(s"[graft] WARNING: not registering '$name' — the " +
+            "session already has a function with that name (not graft's); " +
+            s"SQL calls to $name will use the existing definition")
+        case None => reg.registerFunction(id, info(name, usage), builder)
+      }
+    }
   }
+}
+
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, usage, builder) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), GraftExtensions.info(name, usage), builder))
+    }
 }

@@ -1,41 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Measurement tool (guide §1.1/§7.2): writes `.explain("formatted")` for
-  * every declared query (or a SPARK_GRAFT_BENCH_ONLY-style subset) to a
-  * directory, one `<query>.txt` per query — the plan evidence the round
-  * deliverables commit under `plans/<round>/`. Plans are derived, never
-  * executed, so a full dump is seconds, not a bench run.
+  * every declared query (or the `SPARK_GRAFT_ONLY` name-prefix subset, the
+  * filter every main shares) to a directory, one `<query>.txt` per query —
+  * the plan evidence the round deliverables commit under `plans/<round>/`.
+  * Plans are derived, never executed, so a full dump is seconds, not a
+  * bench run.
   *
-  *   SPARK_GRAFT_SF_DIR=<dir> [SPARK_GRAFT_PLAN_ONLY=q114,q220] \
+  *   SPARK_GRAFT_SF_DIR=<dir> [SPARK_GRAFT_ONLY=q114,q220] \
   *     tools/run.sh graft.PlanDump <outDir>
   *
-  * Same session shape as Bench (shuffle width = cores, AQE on) so the
-  * initial plans match what the bench executes.
+  * The session is `Graft.localSession` with `SPARK_GRAFT_CPUS` cores, the
+  * one Bench and Verify open, so the initial plans match what they execute.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/plans")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     new java.io.File(outDir).mkdirs()
-    new java.io.File("/dev/shm/spark-local").mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "256k"))
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val only = sys.env.get("SPARK_GRAFT_PLAN_ONLY").map(_.split(',').toSeq)
+    val spark = Graft.localSession(Graft.cpus)
     SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.contains)) }
+      .filter { case (n, _) => Graft.selected(n) }
       .foreach { case (name, fn) =>
         val txt =
           try fn(spark, sfDir).queryExecution

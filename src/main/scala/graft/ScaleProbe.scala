@@ -28,18 +28,7 @@ import graft.ops.Materialize
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    new java.io.File("/dev/shm/spark-local").mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "256k"))
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession(Graft.cpus)
 
     def time[A](f: => A): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -57,7 +46,6 @@ object ScaleProbe {
       case "fam7" => fam7Probe(spark, sfDir, time(_)); spark.stop(); return
       case "fam8" => fam8Probe(spark, sfDir, time(_)); spark.stop(); return
       case "degen" => degenProbe(spark); spark.stop(); return
-      case "scans" => scanAudit(spark, sfDir); spark.stop(); return
       case "scansrt" => runtimeScanAudit(spark, sfDir); spark.stop(); return
       case "shuffle" => shuffleAudit(spark, sfDir); spark.stop(); return
       case "fuzzy" => fuzzyProbe(spark, sfDir, time(_)); spark.stop(); return
@@ -450,124 +438,84 @@ object ScaleProbe {
       s""""bucket_rx_sec":$bucketRx,"sf":"$sfDir"}""")
   }
 
+  /** MEASURED scan-count audit (`scansrt`): [[Meter]] counts the parquet
+    * scans each query actually EXECUTED — caches count their build once,
+    * reused exchanges/subqueries count nothing, zero-file scans count
+    * nothing. Flag rule: any table read more than SPARK_GRAFT_SCAN_MAX
+    * (default 2) times per materialization is a repeated-corpus-pass
+    * suspect (at 100 TB each extra scan is a full corpus pass).
+    * Scalar-collecting builders run their bounded driver aggregates at the
+    * probe SF — use sf0.001.
+    */
+  private def runtimeScanAudit(spark: SparkSession, sfDir: String): Unit = {
+    val maxOk = sys.env.getOrElse("SPARK_GRAFT_SCAN_MAX", "2").toInt
+    var flagged = 0
+    def show(c: Map[String, Int]) =
+      c.toSeq.sortBy(-_._2).map { case (t, n) => s"$t=$n" }.mkString(",")
+    audit(spark, sfDir, "runtime_scan_audit") { (name, r, verbose) =>
+      val bad = r.scans.filter(_._2 > maxOk)
+      if (verbose) println(s"SCANS $name: ${show(r.scans)}")
+      if (bad.nonEmpty) {
+        flagged += 1
+        println(s"FLAG $name: ${bad.map { case (t, c) => s"$t=$c" }
+          .mkString(",")} (all: ${show(r.scans)})")
+      }
+    } (s""""flagged":$flagged,"max_ok":$maxOk""")
+  }
+
+  /** Runtime shuffle / spill audit (`shuffle`; see [[Meter]] for what each
+    * task metric means at 100 TB). Flags: any spill; or shuffleWrite >
+    * RATIO_MAX × input AND shuffleWrite above an absolute floor (default
+    * 64 MB — KB-scale shuffles are noise).
+    */
+  private def shuffleAudit(spark: SparkSession, sfDir: String): Unit = {
+    val ratioMax = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_RATIO", "3.0").toDouble
+    val floor = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_FLOOR",
+      (64L * 1024 * 1024).toString).toLong
+    var flagged = 0
+    var spilled = 0
+    audit(spark, sfDir, "runtime_shuffle_audit") { (name, r, verbose) =>
+      val s = r.tasks
+      if (verbose) println(s"SHUF $name: ${s.pretty}")
+      if (s.memSpill > 0 || s.diskSpill > 0) {
+        spilled += 1; println(s"SPILL $name: ${s.pretty}")
+      }
+      if (s.shuffleWrite > floor && s.ratio > ratioMax) {
+        flagged += 1; println(s"FLAG $name: ${s.pretty}")
+      }
+    } (s""""flagged":$flagged,"spilled":$spilled,"ratio_max":$ratioMax,""" +
+      s""""floor_bytes":$floor""")
+  }
+
+  /** The audit loop `scansrt` and `shuffle` share: one [[Meter.measure]]
+    * per query that [[Graft.selected]] keeps, `report`ed with the
+    * SPARK_GRAFT_VERBOSE=1 switch (print every query's reading, so the
+    * SCALING triage can rank them); a query that throws prints `ERR`; the
+    * cache is cleared between queries; `summary` (read after the loop)
+    * fills the final JSON line.
+    */
+  private def audit(spark: SparkSession, sfDir: String, metric: String)(
+      report: (String, Meter.Reading, Boolean) => Unit)(summary: => String): Unit = {
+    val verbose = sys.env.get("SPARK_GRAFT_VERBOSE").contains("1")
+    Queries.all.filter(q => Graft.selected(q.name)).foreach { q =>
+      try {
+        report(q.name, Meter.measure(spark)(q.fn(spark, sfDir)), verbose)
+        spark.sharedState.cacheManager.clearCache()
+      } catch {
+        case e: Exception =>
+          println(s"ERR ${q.name}: ${e.getClass.getSimpleName}")
+      }
+    }
+    println(s"""{"metric":"$metric","queries":${Queries.all.size},""" +
+      s"""$summary,"sf":"$sfDir"}""")
+  }
+
   /** Degenerate-content robustness sweep — fixtures + sweep live in
     * [[DegenFixtures]] (shared with the CI DegenSweepSpec, which is the
     * enforcing copy; this probe form prints the JSON line for SCALING.md
     * runs and honors SPARK_GRAFT_DEGEN_EMPTY=1 for the zero-row
     * variant).
     */
-  /** Scan-count audit over every declared query's physical plan: count
-    * parquet scans per base table and flag any query reading the same
-    * table more than `SPARK_GRAFT_SCAN_MAX` (default 2) times — the
-    * repeated-corpus-scan class the q326/q331/q336 round-8 fixes closed
-    * (a lazy frame consumed by N branches re-runs its whole subtree N
-    * times; at 100 TB each extra scan is a full corpus pass). Pinned
-    * (localCheckpoint) subtrees execute once during the BUILD and then
-    * vanish from the final plan, so what this audit counts is exactly
-    * the residual per-action scan cost. Scalar-collecting builders run
-    * their bounded driver aggregates at the probe SF — use sf0.001.
-    */
-  private def scanAudit(spark: SparkSession, sfDir: String): Unit = {
-    val tables = Seq("documents", "embeddings", "lineitem", "orders",
-      "customer", "supplier", "part", "nation", "region", "events")
-    val maxOk = sys.env.getOrElse("SPARK_GRAFT_SCAN_MAX", "2").toInt
-    var flagged = 0
-    Queries.all.foreach { q =>
-      try {
-        val plan = q.fn(spark, sfDir).queryExecution.executedPlan.toString
-        val counts = tables.map(t =>
-          t -> s"$t\\.parquet".r.findAllIn(plan).length)
-          .filter(_._2 > 0)
-        val bad = counts.filter(_._2 > maxOk)
-        if (bad.nonEmpty) {
-          flagged += 1
-          println(s"""FLAG ${q.name}: ${bad.map { case (t, c) => s"$t=$c" }
-            .mkString(",")} (all: ${counts.map { case (t, c) => s"$t=$c" }
-            .mkString(",")})""")
-        }
-      } catch {
-        case e: Exception =>
-          println(s"ERR ${q.name}: ${e.getClass.getSimpleName}")
-      }
-    }
-    println(s"""{"metric":"scan_audit","queries":${Queries.all.size},""" +
-      s""""flagged":$flagged,"max_ok":$maxOk,"sf":"$sfDir"}""")
-  }
-
-  /** MEASURED scan-count audit (`scansrt`): every query is fully
-    * materialized through the noop sink and [[ScanAudit]] counts the
-    * parquet scans that actually EXECUTED — caches count their build once,
-    * reused exchanges/subqueries count nothing, zero-file scans count
-    * nothing. This replaces the plan-TEXT triage the round-8 audit needed
-    * (persist-backed lineage prints but doesn't re-read). Same flag rule:
-    * any table read more than SPARK_GRAFT_SCAN_MAX (default 2) times per
-    * materialization is a repeated-corpus-pass suspect.
-    */
-  private def runtimeScanAudit(spark: SparkSession, sfDir: String): Unit = {
-    val maxOk = sys.env.getOrElse("SPARK_GRAFT_SCAN_MAX", "2").toInt
-    val only = sys.env.get("SPARK_GRAFT_SCAN_ONLY").map(_.split(',').toSet)
-    var flagged = 0
-    Queries.all.foreach { q =>
-      if (only.forall(_.contains(q.name))) {
-        try {
-          val counts = ScanAudit.measuredScans(spark)(q.fn(spark, sfDir))
-          val bad = counts.filter(_._2 > maxOk)
-          if (sys.env.get("SPARK_GRAFT_SCAN_VERBOSE").contains("1"))
-            println(s"""SCANS ${q.name}: ${counts.toSeq.sortBy(-_._2)
-              .map { case (t, c) => s"$t=$c" }.mkString(",")}""")
-          if (bad.nonEmpty) {
-            flagged += 1
-            println(s"""FLAG ${q.name}: ${bad.map { case (t, c) => s"$t=$c" }
-              .mkString(",")} (all: ${counts.toSeq.sortBy(-_._2)
-              .map { case (t, c) => s"$t=$c" }.mkString(",")})""")
-          }
-          spark.sharedState.cacheManager.clearCache()
-        } catch {
-          case e: Exception =>
-            println(s"ERR ${q.name}: ${e.getClass.getSimpleName}")
-        }
-      }
-    }
-    println(s"""{"metric":"runtime_scan_audit","queries":${Queries.all.size},""" +
-      s""""flagged":$flagged,"max_ok":$maxOk,"sf":"$sfDir"}""")
-  }
-
-  /** Runtime shuffle / spill audit over the whole query surface (see
-    * [[ShuffleAudit]] for what each metric means at 100 TB). Flags:
-    * any spill; or shuffleWrite > RATIO_MAX × input AND shuffleWrite above
-    * an absolute floor (default 64 MB — KB-scale shuffles are noise).
-    * SPARK_GRAFT_SHUFFLE_VERBOSE=1 prints every query's stats so the
-    * committed SCALING triage can rank by absolute shuffle bytes.
-    */
-  private def shuffleAudit(spark: SparkSession, sfDir: String): Unit = {
-    val ratioMax = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_RATIO", "3.0").toDouble
-    val floor = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_FLOOR",
-      (64L * 1024 * 1024).toString).toLong
-    val only = sys.env.get("SPARK_GRAFT_SHUFFLE_ONLY").map(_.split(',').toSet)
-    val verbose = sys.env.get("SPARK_GRAFT_SHUFFLE_VERBOSE").contains("1")
-    var flagged = 0
-    var spilled = 0
-    Queries.all.foreach { q =>
-      if (only.forall(_.contains(q.name))) {
-        try {
-          val s = ShuffleAudit.measured(spark)(q.fn(spark, sfDir))
-          val spill = s.memSpill > 0 || s.diskSpill > 0
-          val hot = s.shuffleWrite > floor && s.ratio > ratioMax
-          if (verbose) println(s"SHUF ${q.name}: ${s.pretty}")
-          if (spill) { spilled += 1; println(s"SPILL ${q.name}: ${s.pretty}") }
-          if (hot) { flagged += 1; println(s"FLAG ${q.name}: ${s.pretty}") }
-          spark.sharedState.cacheManager.clearCache()
-        } catch {
-          case e: Exception =>
-            println(s"ERR ${q.name}: ${e.getClass.getSimpleName}")
-        }
-      }
-    }
-    println(s"""{"metric":"runtime_shuffle_audit","queries":${Queries.all.size},""" +
-      s""""flagged":$flagged,"spilled":$spilled,"ratio_max":$ratioMax,""" +
-      s""""floor_bytes":$floor,"sf":"$sfDir"}""")
-  }
-
   private def degenProbe(spark: SparkSession): Unit = {
     val dir = "/dev/shm/graft_degen"
     if (sys.env.get("SPARK_GRAFT_DEGEN_EMPTY").contains("1"))

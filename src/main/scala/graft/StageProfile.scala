@@ -1,10 +1,5 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tool (guide §1/§7): runs ONE declared query and prints its
   * job/stage timeline — where the wall-clock goes (which stage, how much
   * executor time vs scheduling gap, shuffle bytes per stage), the
@@ -14,99 +9,46 @@ import org.apache.spark.sql.SparkSession
   *   SPARK_GRAFT_SF_DIR=<dir> SPARK_GRAFT_CPUS=32 \
   *     tools/run.sh graft.StageProfile q355_ktruss_fixpoint [reps]
   *
-  * Output per rep: total seconds, then one line per job (start offset,
-  * duration, gap since previous job's end = driver/planning time) and one
-  * line per stage ≥ 1 ms (duration, task count, executor run time,
-  * shuffle read/write, input bytes). Session shape matches Bench.
+  * Output per rep (one [[Meter.measure]] each): total seconds, then one
+  * line per job (start offset, duration, gap since previous job's end =
+  * driver/planning time) and the 20 longest stages (duration, task count,
+  * executor run time, shuffle read/write, input bytes). The session is
+  * Bench's (`Graft.localSession`, `SPARK_GRAFT_CPUS` cores, default 4).
   */
 object StageProfile {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("query name required"))
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    new java.io.File("/dev/shm/spark-local").mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "256k"))
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession(Graft.cpus)
     val fn = SparkEntry.queries(name)
-
-    final case class Job(id: Int, t0: Long, desc: String, var t1: Long = 0L)
-    final case class Stg(id: Int, name: String, var tasks: Int = 0,
-                         var runMs: Long = 0L, var shR: Long = 0L,
-                         var shW: Long = 0L, var in: Long = 0L,
-                         var sub: Long = 0L, var done: Long = 0L)
-    val jobs = TrieMap.empty[Int, Job]
-    val stgs = TrieMap.empty[Int, Stg]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        // job description (setJobDescription / phase label) > call site:
-        // broadcast-future jobs all share the CompletableFuture call site
-        jobs(e.jobId) = Job(e.jobId, e.time,
-          Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .orElse(e.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n')))
-            .getOrElse(""))
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.get(e.jobId).foreach(_.t1 = e.time)
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
-        val i = e.stageInfo
-        stgs(i.stageId) = Stg(i.stageId, i.name,
-          sub = i.submissionTime.getOrElse(0L))
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val i = e.stageInfo
-        stgs.get(i.stageId).foreach { s =>
-          s.done = i.completionTime.getOrElse(0L)
-          s.tasks = i.numTasks
-          s.runMs = i.taskMetrics.executorRunTime
-          s.shR = i.taskMetrics.shuffleReadMetrics.totalBytesRead
-          s.shW = i.taskMetrics.shuffleWriteMetrics.bytesWritten
-          s.in = i.taskMetrics.inputMetrics.bytesRead
-        }
-      }
-    }
 
     // warm-up (JIT/codegen), unprofiled
     try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     catch { case e: Throwable => System.err.println(s"warmup: ${e.getMessage}") }
 
     (1 to reps).foreach { rep =>
-      jobs.clear(); stgs.clear()
-      spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val r = Meter.measure(spark)(fn(spark, sfDir))
       val total = (System.nanoTime() - t0) / 1e9
-      // drain the bus so late onStageCompleted events land
-      org.apache.spark.GraftSparkInternals.drainListenerBus(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(listener)
-      val js = jobs.values.toSeq.sortBy(_.t0)
-      val base = js.headOption.map(_.t0).getOrElse(0L)
-      println(f"== $name rep $rep: $total%.3f s, ${js.size} jobs, " +
-        s"${stgs.size} stages ==")
+      val base = r.jobs.headOption.map(_.start).getOrElse(0L)
+      println(f"== $name rep $rep: $total%.3f s, ${r.jobs.size} jobs, " +
+        s"${r.stages.size} stages ==")
       var prevEnd = base
-      js.foreach { j =>
-        val gap = j.t0 - prevEnd
-        println(f"  job ${j.id}%3d +${(j.t0 - base) / 1e3}%7.3f s " +
-          f"dur ${(j.t1 - j.t0) / 1e3}%7.3f s gap ${gap / 1e3}%7.3f s " +
+      r.jobs.foreach { j =>
+        val gap = j.start - prevEnd
+        println(f"  job ${j.id}%3d +${(j.start - base) / 1e3}%7.3f s " +
+          f"dur ${(j.end - j.start) / 1e3}%7.3f s gap ${gap / 1e3}%7.3f s " +
           s" ${j.desc.take(70)}")
-        prevEnd = math.max(prevEnd, j.t1)
+        prevEnd = math.max(prevEnd, j.end)
       }
-      val hot = stgs.values.toSeq.filter(s => s.done > s.sub)
-        .sortBy(s => -(s.done - s.sub)).take(20)
+      val hot = r.stages.filter(s => s.completed > s.submitted)
+        .sortBy(s => -(s.completed - s.submitted)).take(20)
       hot.foreach { s =>
-        println(f"  stage ${s.id}%4d dur ${(s.done - s.sub) / 1e3}%7.3f s " +
+        println(f"  stage ${s.id}%4d dur ${(s.completed - s.submitted) / 1e3}%7.3f s " +
           f"tasks ${s.tasks}%3d run ${s.runMs / 1e3}%7.3f s " +
-          f"shR ${s.shR / 1024}%8d K shW ${s.shW / 1024}%8d K " +
-          f"in ${s.in / 1024}%8d K  ${s.name.take(60)}%s")
+          f"shR ${s.shuffleRead / 1024}%8d K shW ${s.shuffleWrite / 1024}%8d K " +
+          f"in ${s.input / 1024}%8d K  ${s.name.take(60)}%s")
       }
     }
     spark.stop()

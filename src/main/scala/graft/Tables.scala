@@ -64,7 +64,7 @@ object Tables {
     * repartition would be pure overhead at scale.
     *
     * PER-QUERY OPT-IN (round 13): round 12 applied this to every read
-    * of 7 tables and the full-surface A/B (SPARK_GRAFT_SCAN_SPREAD=0,
+    * of 7 tables and the full-surface A/B (spread off vs on,
     * sf0.1/32 cores, 3-rep mins) measured a per-query geomean of 0.90
     * AGAINST the blanket spread: ~54 fused-compute-heavy queries win
     * big (q274 3.15→0.57, q119 2.18→0.53, q99 1.85→0.70, q01
@@ -74,13 +74,11 @@ object Tables {
     * ReadSchema (q84 needs 2 lineitem columns, the spread dragged in
     * the 2-column key too). So the readers take `spread = true` only
     * at the measured winner call sites; the default read plans exactly
-    * what Spark would plan. `SPARK_GRAFT_SCAN_SPREAD=0` still forces
-    * it off globally (A/B hook).
+    * what Spark would plan.
     */
   private def spread(spark: SparkSession, df: DataFrame, p: String,
                      keys: Seq[String], on: Boolean): DataFrame = {
     if (!on) return df
-    if (sys.env.get("SPARK_GRAFT_SCAN_SPREAD").contains("0")) return df
     val cores = spark.sparkContext.defaultParallelism
     val (rowGroups, rows) = parquetLayout(spark, p)
     if (rowGroups < cores && rows >= 32L * cores)

@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    new java.io.File("/dev/shm/spark-local").mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench: keep tiny-byte compute-dense shuffle stages parallel
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "256k"))
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession(Graft.cpus)
     new java.io.File(outDir).mkdirs()
     // Queries are independent and mostly small: run them on a driver-side
     // pool so Spark's scheduler interleaves their jobs (fair use of cores
@@ -26,12 +13,9 @@ object Verify {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
-    // Local-iteration filter: SPARK_GRAFT_ONLY=q90,q104 runs just those
-    // (prefix match on the name). Unset (the driver) = all queries.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    // Local-iteration filter: Graft.selected (SPARK_GRAFT_ONLY prefixes).
     val selected = SparkEntry.queries.toSeq.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith)) }
+      Graft.selected(name) }
     val futures = selected.map { case (name, fn) =>
       scala.concurrent.Future {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** MEASURED scan-count regression guard — the runtime companion to
-  * PlanSpec's plan-text pin check. [[ScanAudit.measuredScans]] materializes
+  * PlanSpec's plan-text pin check. [[Meter.measure]] materializes
   * each query inside a QueryExecutionListener window, so checkpoint-pin
   * builds, cache builds, and bounded driver bookkeeping all contribute the
   * parquet scans they actually executed. The bounds below are the values
@@ -59,8 +59,8 @@ class RuntimeScanSpec extends AnyFunSuite {
 
   bounds.foreach { case (name, table, bound) =>
     test(s"$name executes <= $bound $table scans per materialization") {
-      val counts = ScanAudit.measuredScans(spark)(
-        Queries.byName(name).fn(spark, sf))
+      val counts = Meter.measure(spark)(
+        Queries.byName(name).fn(spark, sf)).scans
       val got = counts.getOrElse(table, 0)
       assert(got <= bound,
         s"$name measured $table=$got > $bound (all: $counts)")
@@ -108,8 +108,8 @@ class RuntimeScanSpec extends AnyFunSuite {
   triaged.groupBy(_._2).foreach { case (table, rows) =>
     test(s"triaged $table family holds its measured scan counts") {
       rows.foreach { case (name, _, bound) =>
-        val counts = ScanAudit.measuredScans(spark)(
-          Queries.byName(name).fn(spark, sf))
+        val counts = Meter.measure(spark)(
+          Queries.byName(name).fn(spark, sf)).scans
         val got = counts.getOrElse(table, 0)
         assert(got <= bound,
           s"$name measured $table=$got > $bound (all: $counts)")

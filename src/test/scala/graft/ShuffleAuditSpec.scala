@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** MEASURED shuffle / spill regression guard — the task-metric companion
-  * to [[RuntimeScanSpec]]. [[ShuffleAudit.measured]] materializes each
+  * to [[RuntimeScanSpec]]. [[Meter.measure]] materializes each
   * query inside a SparkListener window and sums per-task metrics, so every
   * stage (checkpoint-pin builds included) contributes what it actually
   * shuffled and spilled. Two properties are pinned on the audit's top
@@ -52,7 +52,7 @@ class ShuffleAuditSpec extends AnyFunSuite {
 
   bounds.foreach { case (name, maxShuffle) =>
     test(s"$name: zero spill, shuffleWrite <= ${maxShuffle >> 20} MB") {
-      val s = ShuffleAudit.measured(spark)(Queries.byName(name).fn(spark, sf))
+      val s = Meter.measure(spark)(Queries.byName(name).fn(spark, sf)).tasks
       assert(s.memSpill == 0 && s.diskSpill == 0,
         s"$name spilled: ${s.pretty}")
       assert(s.shuffleWrite <= maxShuffle,

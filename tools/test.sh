@@ -2,7 +2,8 @@
 # Run ScalaTest suites directly (clean stdout, no sbt shell).
 # Usage: tools/test.sh [SuiteClass ...]   (no args = discover all under graft)
 set -e
-CS=$(find /root/.cache/coursier -name '*_2.13-3.2.19.jar' -o -name 'scalatest-compatible-3.2.19.jar' -o -name 'scala-xml_2.13-*.jar' 2>/dev/null | tr '\n' ':')
+CS=$(find "$HOME/.cache/coursier" -name '*_2.13-3.2.19.jar' -o -name 'scalatest-compatible-3.2.19.jar' -o -name 'scala-xml_2.13-*.jar' \
+  -o -name 'scalacheck_2.13-1.18.0.jar' -o -name 'test-interface-1.0.jar' 2>/dev/null | tr '\n' ':')
 CP="/root/repo/target/scala-2.13/test-classes:/root/repo/target/scala-2.13/classes:/opt/spark/jars/*:$CS"
 ADDOPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
