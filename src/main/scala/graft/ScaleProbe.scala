@@ -70,9 +70,11 @@ object ScaleProbe {
       pairs.write.format("noop").mode("overwrite").save()
       membership.write.format("noop").mode("overwrite").save()
     }
+    // the exact pair pass is forced distributed (driverThreshold = 0) here
+    // and below: these probes describe it at scale (SCALING.md)
     val exactCollapsed = time {
       val (pairs, membership) = graft.ops.MinHashLSH
-        .exactNearDuplicatesCollapsed(docs, "doc_id", "text")
+        .exactNearDuplicatesCollapsed(docs, "doc_id", "text", driverThreshold = 0L)
       pairs.write.format("noop").mode("overwrite").save()
       membership.write.format("noop").mode("overwrite").save()
     }
@@ -80,7 +82,7 @@ object ScaleProbe {
     // connected components → membership expand (every doc labeled)
     val groups = time {
       val (pairs, membership) = graft.ops.MinHashLSH
-        .exactNearDuplicatesCollapsed(docs, "doc_id", "text")
+        .exactNearDuplicatesCollapsed(docs, "doc_id", "text", driverThreshold = 0L)
       val comp = graft.ops.ConnectedComponents.run(pairs, "doc_a", "doc_b")
       membership
         .join(comp.withColumnRenamed("v", "canonical_id"),
@@ -104,7 +106,8 @@ object ScaleProbe {
     * over it with the distributed path FORCED (driverThreshold = 0),
     * recording rounds-to-convergence (each round shuffles O(E) edge-label
     * pairs). The driver union-find path runs on the same graph as the
-    * correctness cross-check and the small-graph baseline.
+    * correctness cross-check and the small-graph baseline. The pair pass
+    * that builds the graph is forced distributed too.
     */
   private def ccProbe(spark: SparkSession, sfDir: String,
                       time: (=> Unit) => Double): Unit = {
@@ -117,7 +120,7 @@ object ScaleProbe {
       .repartition(spark.sparkContext.defaultParallelism * 4))
     val nDocs = docs.count()
     val (pairs0, membership0) = graft.ops.MinHashLSH
-      .exactNearDuplicatesCollapsed(docs, "doc_id", "text")
+      .exactNearDuplicatesCollapsed(docs, "doc_id", "text", driverThreshold = 0L)
     val pairs = Materialize.eager(pairs0)
     val membership = Materialize.eager(membership0)
     // member-level graph: every content group is a clique; every canonical

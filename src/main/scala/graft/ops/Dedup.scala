@@ -113,13 +113,26 @@ object Dedup {
     * document; keep min(doc_id) per group downstream and the corpus is
     * deduplicated. 10× dup-heavy probe: 3.1 s where the naive banded pass
     * takes 103.6 s (SCALING.md).
+    *
+    * Both inner passes choose their execution by input size: the pair pass
+    * builds its inverted index on the driver while the canonical docs'
+    * shingle postings and pair emissions are at most `driverThreshold`
+    * ([[MinHashLSH.exactNearDuplicates]]), and connected components
+    * solves on the driver while the pair graph has at most
+    * `driverThreshold` edges. Either falls back to its distributed form
+    * above the bound; `driverThreshold = 0` forces both distributed.
     */
   def nearDupGroups(
       df: DataFrame, idCol: String, textCol: String,
-      w: Int = 3, threshold: Double = 0.5, maxDf: Int = 256): DataFrame = {
+      w: Int = 3, threshold: Double = 0.5, maxDf: Int = 256,
+      driverThreshold: Long = 1L << 20): DataFrame = {
     val (pairs, membership) = MinHashLSH.exactNearDuplicatesCollapsed(
-      df, idCol, textCol, w, threshold, maxDf)
-    val comp = ConnectedComponents.run(pairs, "doc_a", "doc_b")
+      df, idCol, textCol, w, threshold, maxDf, driverThreshold)
+    // neither CC path's result reads `pairs` lazily, so the pair pass's
+    // own pin (the distributed postings) can go as soon as CC returns
+    val comp =
+      try ConnectedComponents.run(pairs, "doc_a", "doc_b", driverThreshold = driverThreshold)
+      finally Materialize.release(pairs)
     membership
       .join(comp.withColumnRenamed("v", "canonical_id"),
         Seq("canonical_id"), "left")

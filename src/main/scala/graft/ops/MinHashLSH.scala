@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.functions.{TextFunctions => TF}
 
 /** MinHash + LSH near-duplicate detection over document shingles — the
@@ -87,10 +88,24 @@ object MinHashLSH {
     signatureFromHashes(unitHashes(units), k)
 
   /** Exact n-gram-Jaccard near-duplicate pairs via the inverted index:
-    * group docs per 60-bit shingle hash, emit each posting's C(g,2) ordered
-    * pairs in-task, count shared shingles per pair, verify the Jaccard
-    * threshold on full set sizes. One shuffle of postings + one of the
-    * half-size pair stream — never a self-join of the exploded table.
+    * group docs per 60-bit shingle hash, count the shingles each pair of
+    * docs shares, verify the Jaccard threshold on the per-doc set sizes —
+    * never a self-join of the exploded table.
+    *
+    * Hybrid execution. The per-doc shingle-hash sets are computed once and
+    * pinned for the call; one aggregate reads their total posting count
+    * (one (shingle, doc) entry per element of a doc's set). When that
+    * total is at most `driverThreshold`, the ids are non-null, distinct
+    * longs, and the candidate emissions Σ C(df, 2) over the postings that
+    * survive the df-cut are at most `driverThreshold` too, the sets are
+    * collected and the inverted index runs on the driver: dense doc
+    * ordinals, postings in primitive arrays, and one counter array reused
+    * per doc for its overlaps (ScanCount, Li et al., ICDE 2008). Otherwise
+    * the distributed pass below runs over the same pinned sets: one
+    * shuffle of postings (`CappedList`) and one of the half-size pair
+    * stream. Both paths hand (doc_a, doc_b, common, na, nb) to the same
+    * Jaccard expression, so their rows are identical (spec-pinned); set
+    * `driverThreshold = 0` to force the distributed path.
     *
     * `maxDf` is the skew bound: a shingle posted by g docs emits C(g,2)
     * pairs inside ONE task, so an ultra-common shingle (boilerplate, stop
@@ -112,12 +127,33 @@ object MinHashLSH {
       textCol: String,
       w: Int = 3,
       threshold: Double = 0.5,
-      maxDf: Int = 256): DataFrame = {
+      maxDf: Int = 256,
+      driverThreshold: Long = 1L << 20): DataFrame = {
+    require(maxDf >= 0, s"maxDf=$maxDf must be >= 0")
     val par = df.sparkSession.sparkContext.defaultParallelism
     val hashed = df.repartition(par).select(col(idCol).as("__id"),
         graft.functions.HashExpressions
           .shingleHash60Array(TF.tokens(col(textCol)), w).as("__th"))
-    val e = hashed.select(col("__id"), explode(col("__th")).as("__h"))
+    // every candidate source below reads the sets more than once (the
+    // posting count, then the collect or the posting stream), and the
+    // returned plan reads only a driver-built or eager frame
+    Materialize.scoped(hashed) { sets =>
+      val candidates =
+        candidatesOnDriver(sets, threshold, maxDf, driverThreshold)
+          .getOrElse(distributedCandidates(sets, maxDf))
+      candidates
+        .withColumn("jaccard", round(col("common").cast("double") /
+          (col("na") + col("nb") - col("common")).cast("double"), 6))
+        .filter(col("jaccard") >= threshold)
+        .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    }
+  }
+
+  /** (doc_a, doc_b, common, na, nb) for every pair sharing a retained
+    * shingle, from a distributed inverted index over `sets` (__id, __th).
+    */
+  private def distributedCandidates(sets: DataFrame, maxDf: Int): DataFrame = {
+    val e = sets.select(col("__id"), explode(col("__th")).as("__h"))
     // Postings + df-cut in ONE pass of the posting stream (round-12,
     // guide §2.3/§2.4): CappedList bounds the aggregation buffer of an
     // over-cap shingle at maxDf+1 ids — the same skew valve the former
@@ -130,9 +166,8 @@ object MinHashLSH {
     // Postings are materialized eagerly (Materialize): their three
     // consumers (sz, the pair stream, and the sz broadcast builds) are
     // submitted as CONCURRENT broadcast-future jobs, and a lazy postings
-    // subtree makes each of them re-run the shingle+md5+grouping pass
-    // against the parquet scan (profiled at q61: three overlapping stages
-    // each reading the full documents input).
+    // subtree makes each of them re-run the explode and grouping pass.
+    // The eager pin also outlives the caller's release of `sets`.
     val postings = Materialize.eager(e.groupBy(col("__h"))
       .agg(graft.functions.CappedList.cappedList(col("__id"),
           // maxDf = Int.MaxValue means "cut off": clamp instead of overflow
@@ -148,17 +183,181 @@ object MinHashLSH {
     // below lose nobody
     val sz = postings.select(explode(col("ds")).as("__id"))
       .groupBy(col("__id")).agg(count(lit(1)).as("__n"))
-    val pairs = postings
+    postings
       .select(explode(graft.functions.HashExpressions.orderedPairs(col("ds"))).as("p"))
       .groupBy(col("p.doc_a"), col("p.doc_b"))
       .agg(count(lit(1)).as("common"))
-    pairs
       .join(sz.select(col("__id").as("doc_a"), col("__n").as("na")), "doc_a")
       .join(sz.select(col("__id").as("doc_b"), col("__n").as("nb")), "doc_b")
-      .withColumn("jaccard", round(col("common").cast("double") /
-        (col("na") + col("nb") - col("common")).cast("double"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+  }
+
+  /** The candidates of [[distributedCandidates]] as a local frame built on
+    * the driver, or None when `sets` exceeds either bound or its ids are
+    * not distinct non-null longs (dense ordinals need distinct ids; null
+    * and repeated ids keep the distributed path's handling). Pairs that
+    * cannot reach `threshold` are dropped early; the margin keeps every
+    * pair whose ROUNDED jaccard could.
+    */
+  private def candidatesOnDriver(sets: DataFrame, threshold: Double,
+                                 maxDf: Int, bound: Long): Option[DataFrame] = {
+    if (bound <= 0 || sets.schema("__id").dataType != LongType) return None
+    val spark = sets.sparkSession
+    import spark.implicits._
+    // the postings must also fit the index's int-indexed arrays
+    val total = sets.agg(sum(size(col("__th")))).head()
+    if (!total.isNullAt(0) && total.getLong(0) > math.min(bound, 1L << 29)) return None
+    val docs = sets.as[(java.lang.Long, Array[Long])].collect()
+    if (docs.exists(_._1 == null)) return None
+    // ordinal = rank of the id, so ordinal order is id order
+    val ids = docs.map(_._1.longValue)
+    java.util.Arrays.sort(ids)
+    if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
+    val byOrdinal = new Array[Array[Long]](docs.length)
+    docs.foreach { case (id, set) => byOrdinal(java.util.Arrays.binarySearch(ids, id)) = set }
+    val index = new ShingleIndex(byOrdinal, maxDf)
+    if (index.emissions > bound) return None
+    Some(index.pairs(threshold - 1e-6)
+      .map { case (a, b, c, na, nb) => (ids(a), ids(b), c, na, nb) }
+      .toSeq.toDF("doc_a", "doc_b", "common", "na", "nb"))
+  }
+
+  /** Driver-side inverted index over per-doc shingle-hash sets, docs
+    * identified by their index in `sets`. A shingle posted by more than
+    * `maxDf` docs is cut: it leaves the postings and every doc's
+    * retained-set size. Flat primitive arrays throughout; the loops live
+    * in methods, not the constructor, since HotSpot leaves a constructor's
+    * loops interpreted (measured 10-16× slower here).
+    */
+  private final class ShingleIndex(sets: Array[Array[Long]], maxDf: Int) {
+    private val n = sets.length
+    // doc d's entries are docStart(d) until docStart(d + 1) of `sid`
+    private val docStart = sets.scanLeft(0)(_ + _.length)
+    // each entry's shingle as a dense id (first-seen order), and per id
+    // its document frequency; ids below `distinct` are in use
+    private val sid = new Array[Int](docStart(n))
+    private val df = new Array[Int](docStart(n))
+    private val distinct = internShingles()
+    // shingle s posts start(s) until start(s + 1) of `postings`: the
+    // retained shingles' docs, ascending; `setSize` is each doc's
+    // post-cut set size
+    private val start = postingStarts()
+    private val setSize = new Array[Int](n)
+    private val postings = fillPostings()
+
+    private def retained(s: Int): Boolean = df(s) <= maxDf
+
+    /** Fills `sid` and `df` through an open-addressing table of capacity
+      * a power of two at least twice the entries (slots hold id + 1, 0 =
+      * empty); returns the number of distinct shingles.
+      */
+    private def internShingles(): Int = {
+      var cap = 2
+      while (cap < 2 * sid.length) cap <<= 1
+      val mask = cap - 1
+      val keys = new Array[Long](cap)
+      val slots = new Array[Int](cap)
+      var u = 0
+      var d = 0
+      while (d < n) {
+        val set = sets(d)
+        var j = 0
+        while (j < set.length) {
+          val h = set(j)
+          // the hashes are md5 prefixes: their low bits are uniform
+          var i = (h ^ (h >>> 32)).toInt & mask
+          while (slots(i) != 0 && keys(i) != h) i = (i + 1) & mask
+          if (slots(i) == 0) { keys(i) = h; u += 1; slots(i) = u }
+          val q = docStart(d) + j
+          sid(q) = slots(i) - 1
+          df(sid(q)) += 1
+          j += 1
+        }
+        d += 1
+      }
+      u
+    }
+
+    private def postingStarts(): Array[Int] = {
+      val st = new Array[Int](distinct + 1)
+      var s = 0
+      while (s < distinct) {
+        st(s + 1) = st(s) + (if (retained(s)) df(s) else 0); s += 1
+      }
+      st
+    }
+
+    private def fillPostings(): Array[Int] = {
+      val post = new Array[Int](start(distinct))
+      val fill = start.clone()
+      var d = 0
+      while (d < n) {
+        var q = docStart(d)
+        while (q < docStart(d + 1)) {
+          val s = sid(q)
+          if (retained(s)) { post(fill(s)) = d; fill(s) += 1; setSize(d) += 1 }
+          q += 1
+        }
+        d += 1
+      }
+      post
+    }
+
+    /** Σ C(df, 2) over retained shingles: the pair emissions a full pass
+      * makes, each once per shared shingle.
+      */
+    def emissions: Long = {
+      var e = 0L
+      var s = 0
+      while (s < distinct) {
+        val g = (start(s + 1) - start(s)).toLong
+        e += g * (g - 1) / 2; s += 1
+      }
+      e
+    }
+
+    /** (a, b, common, na, nb) for every doc pair a < b sharing a retained
+      * shingle with common / (na + nb - common) >= floor (ScanCount). Docs
+      * are visited in order and each posting is doc-ascending, so at doc d
+      * a posting's later entries start right after its cursor: each shared
+      * shingle is counted once.
+      */
+    def pairs(floor: Double): Array[(Int, Int, Long, Long, Long)] = {
+      val out = scala.collection.mutable.ArrayBuilder.make[(Int, Int, Long, Long, Long)]
+      val cursor = start.clone()
+      val common = new Array[Int](n)
+      val touched = new Array[Int](n)
+      var d = 0
+      while (d < n) {
+        var nt = 0
+        var q = docStart(d)
+        while (q < docStart(d + 1)) {
+          val s = sid(q)
+          if (retained(s)) {
+            cursor(s) += 1
+            var k = cursor(s)
+            while (k < start(s + 1)) {
+              val o = postings(k)
+              if (common(o) == 0) { touched(nt) = o; nt += 1 }
+              common(o) += 1
+              k += 1
+            }
+          }
+          q += 1
+        }
+        val na = setSize(d).toLong
+        var t = 0
+        while (t < nt) {
+          val o = touched(t)
+          val c = common(o).toLong
+          val nb = setSize(o).toLong
+          if (c.toDouble / (na + nb - c).toDouble >= floor) out += ((d, o, c, na, nb))
+          common(o) = 0
+          t += 1
+        }
+        d += 1
+      }
+      out.result()
+    }
   }
 
   /** Near-dup detection for corpora with large EXACT-duplicate groups — the
@@ -193,7 +392,8 @@ object MinHashLSH {
   /** Collapse-first form of [[exactNearDuplicates]] — the inverted-index
     * pass suffers the same g² blowup on duplicate groups (every posting
     * carries all g copies: measured 10×-replicated sf0.1 takes it from
-    * ~1.5 s to ~350 s; collapsed it is ~10 s).
+    * ~1.5 s to ~350 s; collapsed it is ~10 s). `driverThreshold` is the
+    * pair pass's (0 forces its distributed path).
     */
   def exactNearDuplicatesCollapsed(
       df: DataFrame,
@@ -201,9 +401,11 @@ object MinHashLSH {
       textCol: String,
       w: Int = 3,
       threshold: Double = 0.5,
-      maxDf: Int = 256): (DataFrame, DataFrame) = {
+      maxDf: Int = 256,
+      driverThreshold: Long = 1L << 20): (DataFrame, DataFrame) = {
     val (canonicalDocs, membership) = Dedup.collapseByContent(df, Seq(textCol), idCol)
-    (exactNearDuplicates(canonicalDocs, idCol, textCol, w, threshold, maxDf),
+    (exactNearDuplicates(canonicalDocs, idCol, textCol, w, threshold, maxDf,
+        driverThreshold),
       membership)
   }
 

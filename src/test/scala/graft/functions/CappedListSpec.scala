@@ -52,18 +52,22 @@ class CappedListSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "a b c x y"), (2L, "a b c x z"), (3L, "a b c q r"),
       (4L, "q r s t u")).toDF("doc_id", "text")
-    def pairsAt(maxDf: Int): Map[(Long, Long), Double] =
+    def pairsAt(maxDf: Int, driverThreshold: Long): Map[(Long, Long), Double] =
       graft.ops.MinHashLSH
         .exactNearDuplicates(docs, "doc_id", "text", w = 3,
-          threshold = 0.2, maxDf = maxDf)
+          threshold = 0.2, maxDf = maxDf, driverThreshold = driverThreshold)
         .as[(Long, Long, Double)].collect()
         .map { case (a, b, j) => (a, b) -> j }.toMap
-    // no cut: plain exact Jaccard on 3-shingles
-    val loose = pairsAt(256)
-    assert(loose.contains((1L, 2L)) && loose((1L, 2L)) > 0.3)
-    // cut at 2: "a b c" (df 3) dropped from numerators AND denominators
-    val cut = pairsAt(2)
-    assert(cut !== loose)
-    assert(!cut.contains((1L, 3L)))
+    // the default path indexes this corpus on the driver; 0 forces the
+    // distributed CappedList postings build
+    for (dt <- Seq(1L << 20, 0L)) {
+      // no cut: plain exact Jaccard on 3-shingles
+      val loose = pairsAt(256, dt)
+      assert(loose.contains((1L, 2L)) && loose((1L, 2L)) > 0.3)
+      // cut at 2: "a b c" (df 3) dropped from numerators AND denominators
+      val cut = pairsAt(2, dt)
+      assert(cut !== loose)
+      assert(!cut.contains((1L, 3L)))
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{array, least, lit}
+import org.apache.spark.sql.functions.{array, least, lit, map}
 import graft.{Queries, TestSpark}
 
 /** Operators materialize their shared intermediates call-scoped (eager
@@ -43,8 +43,12 @@ class CacheRetentionSpec extends AnyFunSuite {
   /** Each operator as one call on the input of a seed. */
   private val ops: Seq[(String, Int => DataFrame)] = Seq(
     "Dedup.nearDupGroups" -> (s => Dedup.nearDupGroups(corpus(s), "doc_id", "text")),
+    "Dedup.nearDupGroups distributed" ->
+      (s => Dedup.nearDupGroups(corpus(s), "doc_id", "text", driverThreshold = 0)),
     "MinHashLSH.exactNearDuplicates" ->
       (s => MinHashLSH.exactNearDuplicates(corpus(s), "doc_id", "text")),
+    "MinHashLSH.exactNearDuplicates distributed" -> (s =>
+      MinHashLSH.exactNearDuplicates(corpus(s), "doc_id", "text", driverThreshold = 0)),
     "MinHashLSH.nearDuplicates" ->
       (s => MinHashLSH.nearDuplicates(corpus(s), "doc_id", "text")),
     "PrefixSum.withRunningSum" ->
@@ -161,6 +165,34 @@ class CacheRetentionSpec extends AnyFunSuite {
         s"$name left intermediate RDDs persisted")
       // every released frame is gone for good: the result must not read one
       assert(rows(out).nonEmpty, s"$name returned nothing")
+    }
+  }
+
+  test("exact near-dup passes keep only the blocks behind their result") {
+    val nearDup = ops.filter { case (name, _) =>
+      name.startsWith("Dedup.nearDupGroups") || name.startsWith("MinHashLSH.exactNearDuplicates")
+    }
+    for ((name, op) <- nearDup) {
+      val before = persistedIds()
+      val out = op(4)
+      val kept = out.queryExecution.analyzed.collect {
+        case l: LogicalRDD => l.rdd.id
+      }.toSet
+      assert((persistedIds() -- before -- kept).isEmpty,
+        s"$name left intermediate RDDs persisted")
+      assert(rows(out).nonEmpty, s"$name returned nothing")
+    }
+  }
+
+  test("exactNearDuplicates releases its pinned shingle sets when a step throws") {
+    // map-typed ids pass the hashing pin, then fail the postings sort
+    val bad = corpus(5).select(map($"doc_id", $"text").as("doc_id"), $"text")
+    for (driverThreshold <- Seq(1L << 20, 0L)) {
+      val before = persistedIds()
+      intercept[org.apache.spark.sql.AnalysisException](MinHashLSH
+        .exactNearDuplicates(bad, "doc_id", "text", driverThreshold = driverThreshold))
+      assert((persistedIds() -- before).isEmpty,
+        s"a failed pass at driverThreshold $driverThreshold left its pin persisted")
     }
   }
 

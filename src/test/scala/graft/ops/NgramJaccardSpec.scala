@@ -13,9 +13,14 @@ class NgramJaccardSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def pairs(df: org.apache.spark.sql.DataFrame, maxDf: Int) =
+  /** The pass's two paths: the default (these corpora fit the driver-side
+    * index) and the forced distributed one; each case runs at both.
+    */
+  private val paths = Seq(1L << 20, 0L)
+
+  private def pairs(df: org.apache.spark.sql.DataFrame, maxDf: Int, driverThreshold: Long) =
     MinHashLSH.exactNearDuplicates(df, "doc_id", "text",
-        w = 3, threshold = 0.5, maxDf = maxDf)
+        w = 3, threshold = 0.5, maxDf = maxDf, driverThreshold = driverThreshold)
       .select($"doc_a", $"doc_b", $"jaccard")
       .as[(Long, Long, Double)].collect().toSet
 
@@ -25,7 +30,8 @@ class NgramJaccardSpec extends AnyFunSuite {
       .select(explode(TF.hash60Array(TF.shingles($"text", 3))).as("h"))
       .groupBy($"h").count().agg(max($"count")).head.getLong(0)
     assert(maxDf < 256, s"fixture max df $maxDf defeats the inertness claim")
-    assert(pairs(docs, 256) === pairs(docs, Int.MaxValue))
+    for (dt <- paths)
+      assert(pairs(docs, 256, dt) === pairs(docs, Int.MaxValue, dt))
   }
 
   test("df-cut drops only pairs whose sole overlap is an over-cap shingle") {
@@ -34,11 +40,13 @@ class NgramJaccardSpec extends AnyFunSuite {
     val boiler = (0L until 6L).map(i => (i, "alpha beta gamma"))
     val near = Seq((100L, "p q r s t u"), (101L, "p q r s t v"))
     val docs = (boiler ++ near).toDF("doc_id", "text")
-    val capped = pairs(docs, maxDf = 4)
-    assert(capped.map(p => (p._1, p._2)) === Set((100L, 101L)))
-    assert(capped.head._3 === 0.6) // 3 shared of 5 distinct shingles
-    // uncapped: the boilerplate C(6,2)=15 identical pairs reappear
-    assert(pairs(docs, Int.MaxValue).size === 16)
+    for (dt <- paths) {
+      val capped = pairs(docs, maxDf = 4, dt)
+      assert(capped.map(p => (p._1, p._2)) === Set((100L, 101L)))
+      assert(capped.head._3 === 0.6) // 3 shared of 5 distinct shingles
+      // uncapped: the boilerplate C(6,2)=15 identical pairs reappear
+      assert(pairs(docs, Int.MaxValue, dt).size === 16)
+    }
   }
 
   test("pairs sharing an over-cap shingle get exact post-cut jaccard, not a deflated one") {
@@ -52,11 +60,13 @@ class NgramJaccardSpec extends AnyFunSuite {
     val near = Seq((100L, "alpha beta gamma p q r s"),
       (101L, "alpha beta gamma p q r t"))
     val docs = (boiler ++ near).toDF("doc_id", "text")
-    val capped = pairs(docs, maxDf = 4)
-    assert(capped === Set((100L, 101L, 0.6)))
-    // uncapped, same pair scores full-set jaccard 4/6
-    val un = pairs(docs, Int.MaxValue)
-    assert(un.contains((100L, 101L, 0.666667)))
+    for (dt <- paths) {
+      val capped = pairs(docs, maxDf = 4, dt)
+      assert(capped === Set((100L, 101L, 0.6)))
+      // uncapped, same pair scores full-set jaccard 4/6
+      val un = pairs(docs, Int.MaxValue, dt)
+      assert(un.contains((100L, 101L, 0.666667)))
+    }
   }
 
   test("collapse-first near-dup: canonical pairs + full membership on a dup-heavy corpus") {
@@ -79,11 +89,13 @@ class NgramJaccardSpec extends AnyFunSuite {
     assert(m.filter(_._1 == 0L).map(_._2).sorted.toSeq
       === (0 until 10).map(_ * 10L))
     // the exact inverted-index collapsed pass agrees with the LSH one here
-    val (exactPairs, m2) = MinHashLSH.exactNearDuplicatesCollapsed(
-      docs, "doc_id", "text", w = 3, threshold = 0.5)
-    assert(exactPairs.select($"doc_a", $"doc_b").as[(Long, Long)]
-      .collect().toSeq === Seq((0L, 1L)))
-    assert(m2.count() === 30)
+    for (dt <- paths) {
+      val (exactPairs, m2) = MinHashLSH.exactNearDuplicatesCollapsed(
+        docs, "doc_id", "text", w = 3, threshold = 0.5, driverThreshold = dt)
+      assert(exactPairs.select($"doc_a", $"doc_b").as[(Long, Long)]
+        .collect().toSeq === Seq((0L, 1L)))
+      assert(m2.count() === 30)
+    }
     // and the simhash family exposes the same collapse-first contract
     val (shPairs, m3) = SimHash.nearDuplicatesCollapsed(docs, "doc_id", "text")
     assert(m3.count() === 30)
