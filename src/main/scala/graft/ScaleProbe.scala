@@ -78,20 +78,11 @@ object ScaleProbe {
       pairs.write.format("noop").mode("overwrite").save()
       membership.write.format("noop").mode("overwrite").save()
     }
-    // the q61 composition end-to-end: collapse → pairs on canonicals →
-    // connected components → membership expand (every doc labeled)
+    // the q61 grouping end-to-end (every doc labeled), forced distributed
     val groups = time {
-      val (pairs, membership) = graft.ops.MinHashLSH
-        .exactNearDuplicatesCollapsed(docs, "doc_id", "text", driverThreshold = 0L)
-      val comp = graft.ops.ConnectedComponents.run(pairs, "doc_a", "doc_b")
-      membership
-        .join(comp.withColumnRenamed("v", "canonical_id"),
-          Seq("canonical_id"), "left")
-        .select(org.apache.spark.sql.functions.col("member_id"),
-          org.apache.spark.sql.functions.coalesce(
-            org.apache.spark.sql.functions.col("comp"),
-            org.apache.spark.sql.functions.col("canonical_id")).as("group_id"))
-        .write.format("noop").mode("overwrite").save()
+      val out = graft.ops.Dedup.nearDupGroups(docs, "doc_id", "text", driverThreshold = 0L)
+      out.write.format("noop").mode("overwrite").save()
+      Materialize.release(out)
     }
     println(s"""{"metric":"dup_collapse_probe","docs":$nDocs,""" +
       s""""naive_sec":$naive,"collapsed_sec":$collapsed,""" +

@@ -103,15 +103,22 @@ object ConnectedComponents {
     }
   }
 
-  /** Union-find with path compression, smaller id stays root — so labels
-    * are the component minimum, bit-identical to the distributed path.
-    */
+  /** Labels every vertex of `e0` (s, d) on the driver, through [[components]]. */
   private def runOnDriver(e0: DataFrame,
                           idType: org.apache.spark.sql.types.DataType): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
     val pairs = e0.select(col("s").cast("long"), col("d").cast("long"))
       .as[(Long, Long)].collect()
+    components(pairs).toSeq.sortBy(_._1).toDF("v", "comp")
+      .select(col("v").cast(idType).as("v"), col("comp").cast(idType).as("comp"))
+  }
+
+  /** Each vertex of the undirected edges `pairs` mapped to its component's
+    * smallest vertex: union-find with path compression, the smaller id
+    * staying root — so labels are bit-identical to the distributed path's.
+    */
+  private[ops] def components(pairs: Array[(Long, Long)]): scala.collection.Map[Long, Long] = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -127,8 +134,7 @@ object ConnectedComponents {
         if (ra < rb) parent(rb) = ra else parent(ra) = rb
       }
     }
-    val out = parent.keys.toSeq.sorted.map(v => (v, find(v)))
-    out.toDF("v", "comp")
-      .select(col("v").cast(idType).as("v"), col("comp").cast(idType).as("comp"))
+    parent.keys.toArray.foreach(find)
+    parent
   }
 }

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Last-write-wins dedup — the engine's identity operator.
   *
@@ -60,12 +61,16 @@ object Dedup {
     * silently skips NULLs entirely).
     */
   def exactByContent(df: DataFrame, contentCols: Seq[String], keeper: String): DataFrame = {
-    val fp = md5(to_json(struct(contentCols.map(col): _*)))
+    val fp = fingerprint(contentCols)
     val payload = struct(df.columns.map(col): _*)
     df.groupBy(fp.as("__fp"))
       .agg(min_by(payload, col(keeper)).as("__keep"))
       .select("__keep.*")
   }
+
+  /** The content fingerprint of [[exactByContent]]. */
+  private def fingerprint(contentCols: Seq[String]): Column =
+    md5(to_json(struct(contentCols.map(col): _*)))
 
   /** Exact-duplicate collapse that KEEPS the group structure: one
     * representative row per distinct content (minimum `idCol` — so
@@ -83,27 +88,27 @@ object Dedup {
     */
   def collapseByContent(
       df: DataFrame, contentCols: Seq[String], idCol: String): (DataFrame, DataFrame) = {
-    val fp = md5(to_json(struct(contentCols.map(col): _*)))
-    // pin the (id, fingerprint) frame — 40 bytes/doc: canon, membership,
-    // and the canonical-row semi-join each re-scanned the source corpus
-    // when this was left lazy (round-9 measured scan audit: q61's grouping
-    // pipeline read documents 4×, now 2 — this pin and the canonical-text
-    // fetch)
-    val withFp = Materialize.eager(
-      df.select(col(idCol).as("member_id"), fp.as("__fp")))
-    // pin canon too (round-13): it has TWO lazy consumers — the
-    // membership join and the canonical-row semi-join — so the group-min
-    // aggregate over withFp ran twice (profiled at q117: two ~3.3 s-task-
-    // time stages computing identical ~3.6k rows); one row per distinct
-    // content, so the materialization is tiny
-    val canon = Materialize.eager(withFp.groupBy(col("__fp"))
-      .agg(min(col("member_id")).as("canonical_id")))
-    val membership = withFp.join(canon, "__fp")
-      .select(col("canonical_id"), col("member_id"))
+    // pin the membership (16 bytes/doc): it is returned, and it also
+    // yields the canonical ids of the semi-join below, so a lazy one would
+    // read the source corpus twice
+    val membership = Materialize.eager(withCanonical(
+        df.select(col(idCol).as("__id"), fingerprint(contentCols).as("__fp")))
+      .select(col("canonical_id"), col("__id").as("member_id")))
     val canonicalRows = df.join(
-      canon.select(col("canonical_id").as(idCol)), Seq(idCol), "left_semi")
+      membership.filter(col("member_id") === col("canonical_id"))
+        .select(col("member_id").as(idCol)), Seq(idCol), "left_semi")
     (canonicalRows, membership)
   }
+
+  /** The collapse step of [[collapseByContent]] and [[nearDupGroups]]:
+    * `frame` (`__id`, `__fp`, …) plus `canonical_id`, the smallest `__id`
+    * among the rows sharing the row's fingerprint `__fp`. A window over the
+    * fingerprint, so every row carries its canonical id without a join
+    * back; rows already hash-partitioned by `__fp` are not shuffled again.
+    */
+  private def withCanonical(frame: DataFrame): DataFrame =
+    frame.withColumn("canonical_id",
+      min(col("__id")).over(Window.partitionBy(col("__fp"))))
 
   /** The COMPLETE near-duplicate grouping pipeline in one call — what a
     * corpus dedup actually runs (q61): collapse exact duplicates, generate
@@ -114,29 +119,99 @@ object Dedup {
     * deduplicated. 10× dup-heavy probe: 3.1 s where the naive banded pass
     * takes 103.6 s (SCALING.md).
     *
-    * Both inner passes choose their execution by input size: the pair pass
-    * builds its inverted index on the driver while the canonical docs'
-    * shingle postings and pair emissions are at most `driverThreshold`
-    * ([[MinHashLSH.exactNearDuplicates]]), and connected components
-    * solves on the driver while the pair graph has at most
-    * `driverThreshold` edges. Either falls back to its distributed form
-    * above the bound; `driverThreshold = 0` forces both distributed.
+    * The corpus is read ONCE, and only canonical docs are hashed: the
+    * rows are hash-partitioned by the content fingerprint of
+    * [[collapseByContent]], so each one learns its canonical id (the
+    * smallest id of its content) in the same pass, and a canonical row's
+    * shingle set ([[MinHashLSH.exactNearDuplicates]]') is computed there.
+    * (id, canonical id, set or null) is pinned for the call, and the pin's
+    * own job observes the row count and the posting total. While both are
+    * at most `driverThreshold`, the ids are distinct non-null longs and
+    * the canonical docs' pair emissions Σ C(df, 2) are at most
+    * `driverThreshold` too, the rest runs on the driver: the exact pair
+    * pass's inverted index over the canonical sets, the same Jaccard
+    * expression on a local frame (evaluated without a job), the union-find
+    * of [[ConnectedComponents]] and the expansion; the result is a local
+    * frame. Otherwise the pair pass over the pinned canonical sets,
+    * [[ConnectedComponents.run]] and the expansion run distributed, the
+    * pair pass and components each still choosing their own path by size,
+    * and the result is pinned before the call's pin is released. Both
+    * paths return identical rows (spec-pinned); `driverThreshold = 0`
+    * forces every step distributed. Each distinct content lands whole in
+    * one task, so one very large exact-duplicate group is one long task.
     */
   def nearDupGroups(
       df: DataFrame, idCol: String, textCol: String,
       w: Int = 3, threshold: Double = 0.5, maxDf: Int = 256,
       driverThreshold: Long = 1L << 20): DataFrame = {
-    val (pairs, membership) = MinHashLSH.exactNearDuplicatesCollapsed(
-      df, idCol, textCol, w, threshold, maxDf, driverThreshold)
+    require(maxDf >= 0, s"maxDf=$maxDf must be >= 0")
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    val hashed = withCanonical(df.select(col(idCol).as("__id"),
+          fingerprint(Seq(textCol)).as("__fp"), col(textCol).as("__text"))
+        .repartition(par, col("__fp")))
+      .select(col("__id"), col("canonical_id"),
+        when(col("__id") === col("canonical_id"),
+          MinHashLSH.shingleSets(col("__text"), w)).as("__th"))
+    Materialize.scopedObserving(hashed, count(lit(1)), MinHashLSH.postingTotal) {
+      (docs, seen) =>
+        val postings = seen.getLong(1)
+        // exact copies hold no set, so the rows are bounded on their own
+        val driver =
+          if (seen.getLong(0) <= driverThreshold &&
+              MinHashLSH.postingsFit(postings, driverThreshold) &&
+              docs.schema("__id").dataType == LongType)
+            groupsOnDriver(docs, idCol, threshold, maxDf, driverThreshold)
+          else None
+        driver.getOrElse(
+          groupsDistributed(docs, postings, idCol, threshold, maxDf, driverThreshold))
+    }
+  }
+
+  /** [[nearDupGroups]] on the driver over the pinned (__id, canonical_id,
+    * __th) rows, or None when the ids are not distinct non-null longs or
+    * the canonical docs' pair emissions exceed `bound`.
+    */
+  private def groupsOnDriver(docs: DataFrame, idCol: String, threshold: Double,
+                             maxDf: Int, bound: Long): Option[DataFrame] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val rows = docs.as[(java.lang.Long, java.lang.Long, Array[Long])].collect()
+    MinHashLSH.sortedDistinct(rows.map(_._1)).flatMap { _ =>
+      val canonical = rows.filter(_._3 != null).sortBy(_._1.longValue)
+      MinHashLSH.indexCandidates(spark, canonical.map(_._1.longValue),
+          canonical.map(_._3), threshold, maxDf, bound).map { candidates =>
+        val comp = ConnectedComponents.components(
+          MinHashLSH.jaccardPairs(candidates, threshold)
+            .select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect())
+        val groups = rows.map { case (id, c, _) => Row(id, comp.getOrElse(c, c.longValue)) }
+        spark.createDataFrame(java.util.Arrays.asList(groups: _*), StructType(Seq(
+          StructField(idCol, LongType, docs.schema("__id").nullable),
+          StructField("group_id", LongType))))
+      }
+    }
+  }
+
+  /** [[nearDupGroups]] distributed over the pinned (__id, canonical_id,
+    * __th) rows holding `postings` postings: the exact pair pass over the
+    * canonical sets, [[ConnectedComponents.run]], the expansion through
+    * canonical_id. The result is pinned, so it outlives the caller's
+    * release of `docs`.
+    */
+  private def groupsDistributed(docs: DataFrame, postings: Long, idCol: String,
+                                threshold: Double, maxDf: Int,
+                                driverThreshold: Long): DataFrame = {
+    val pairs = MinHashLSH.exactPairs(
+      docs.filter(col("__th").isNotNull).select(col("__id"), col("__th")),
+      postings, threshold, maxDf, driverThreshold)
     // neither CC path's result reads `pairs` lazily, so the pair pass's
     // own pin (the distributed postings) can go as soon as CC returns
     val comp =
       try ConnectedComponents.run(pairs, "doc_a", "doc_b", driverThreshold = driverThreshold)
       finally Materialize.release(pairs)
-    membership
-      .join(comp.withColumnRenamed("v", "canonical_id"),
-        Seq("canonical_id"), "left")
-      .select(col("member_id").as(idCol),
-        coalesce(col("comp"), col("canonical_id")).as("group_id"))
+    try Materialize.eager(docs
+        .join(comp.withColumnRenamed("v", "canonical_id"), Seq("canonical_id"), "left")
+        .select(col("__id").as(idCol),
+          coalesce(col("comp"), col("canonical_id")).as("group_id")))
+    finally Materialize.release(comp)
   }
 }

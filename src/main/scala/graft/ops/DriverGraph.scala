@@ -46,16 +46,20 @@ private[ops] object DriverGraph {
     }
     val src = new Array[Int](rows.length)
     val dst = new Array[Int](rows.length)
-    locally {
+    internEdges(rows)
+    val extra: Array[Int] = extraVerts.map(r => id(r.get(0)))
+    val vals: Array[Any] = valsBuf.toArray
+    def nVerts: Int = vals.length
+    def nEdges: Int = src.length
+
+    // a method, not the constructor body: HotSpot leaves a constructor's
+    // loops interpreted (and `rows` stays a parameter, not a field)
+    private def internEdges(rows: Array[org.apache.spark.sql.Row]): Unit = {
       var i = 0
       while (i < rows.length) {
         src(i) = id(rows(i).get(0)); dst(i) = id(rows(i).get(1)); i += 1
       }
     }
-    val extra: Array[Int] = extraVerts.map(r => id(r.get(0)))
-    val vals: Array[Any] = valsBuf.toArray
-    def nVerts: Int = vals.length
-    def nEdges: Int = src.length
   }
 
   /** Value comparison consistent with Spark's ordering for the id types

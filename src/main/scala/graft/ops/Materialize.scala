@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Call-scoped materialization of intermediates — the one place in
@@ -40,6 +40,18 @@ private[graft] object Materialize {
   def scoped[A](df: DataFrame)(body: DataFrame => A): A = {
     val pinned = eager(df)
     try body(pinned) finally release(pinned)
+  }
+
+  /** [[scoped]] that also hands `body` the aggregates `metrics` over
+    * `df`'s rows, in order. `Dataset.observe` computes them inside the
+    * pin's own job, so reading them costs no second pass over the pin.
+    */
+  def scopedObserving[A](df: DataFrame, metrics: Column*)
+                        (body: (DataFrame, Row) => A): A = {
+    val observed = df.observe("__pin", metrics.head, metrics.tail: _*)
+    scoped(observed) { pinned =>
+      body(pinned, observed.queryExecution.observedMetrics("__pin"))
+    }
   }
 
   /** Runs up to `rounds` rounds of `step` from `init`, pinning `init` and

@@ -93,8 +93,9 @@ object MinHashLSH {
     * never a self-join of the exploded table.
     *
     * Hybrid execution. The per-doc shingle-hash sets are computed once and
-    * pinned for the call; one aggregate reads their total posting count
-    * (one (shingle, doc) entry per element of a doc's set). When that
+    * pinned for the call; the pin's own job also observes their total
+    * posting count (one (shingle, doc) entry per element of a doc's set),
+    * so no second pass over the sets reads it. When that
     * total is at most `driverThreshold`, the ids are non-null, distinct
     * longs, and the candidate emissions Σ C(df, 2) over the postings that
     * survive the df-cut are at most `driverThreshold` too, the sets are
@@ -131,23 +132,56 @@ object MinHashLSH {
       driverThreshold: Long = 1L << 20): DataFrame = {
     require(maxDf >= 0, s"maxDf=$maxDf must be >= 0")
     val par = df.sparkSession.sparkContext.defaultParallelism
-    val hashed = df.repartition(par).select(col(idCol).as("__id"),
-        graft.functions.HashExpressions
-          .shingleHash60Array(TF.tokens(col(textCol)), w).as("__th"))
-    // every candidate source below reads the sets more than once (the
-    // posting count, then the collect or the posting stream), and the
-    // returned plan reads only a driver-built or eager frame
-    Materialize.scoped(hashed) { sets =>
-      val candidates =
-        candidatesOnDriver(sets, threshold, maxDf, driverThreshold)
-          .getOrElse(distributedCandidates(sets, maxDf))
-      candidates
-        .withColumn("jaccard", round(col("common").cast("double") /
-          (col("na") + col("nb") - col("common")).cast("double"), 6))
-        .filter(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    // the posting total picks the candidate source before either reads
+    // the sets, so one job pins and counts them; the returned plan reads
+    // only a driver-built or eager frame
+    Materialize.scopedObserving(df.repartition(par).select(col(idCol).as("__id"),
+        shingleSets(col(textCol), w).as("__th")), postingTotal) { (sets, seen) =>
+      exactPairs(sets, seen.getLong(0), threshold, maxDf, driverThreshold)
     }
   }
+
+  /** The fused shingle+hash set of a text column: the sorted distinct
+    * 60-bit hashes of its `w`-token shingles, never null. A text shorter
+    * than `w` tokens, an empty or null one included, is one whole-text
+    * shingle.
+    */
+  private[ops] def shingleSets(text: Column, w: Int): Column =
+    graft.functions.HashExpressions.shingleHash60Array(TF.tokens(text), w)
+
+  /** The pair pass of [[exactNearDuplicates]] over hashed sets (__id, __th
+    * = [[shingleSets]]) holding `postings` postings. `sets` is read once
+    * or twice, so it should be pinned or a cheap view of a pin.
+    */
+  private[ops] def exactPairs(sets: DataFrame, postings: Long, threshold: Double,
+                              maxDf: Int, driverThreshold: Long): DataFrame = {
+    val driver =
+      if (postingsFit(postings, driverThreshold) && sets.schema("__id").dataType == LongType)
+        candidatesOnDriver(sets, threshold, maxDf, driverThreshold)
+      else None
+    jaccardPairs(driver.getOrElse(distributedCandidates(sets, maxDf)), threshold)
+  }
+
+  /** The (shingle, doc) postings of sets (__th; a null set holds none):
+    * the aggregate to observe.
+    */
+  private[ops] def postingTotal: Column = coalesce(sum(array_size(col("__th"))), lit(0L))
+
+  /** Whether `postings` is at most `bound` and fits the driver index's
+    * int-indexed arrays. A `bound` of 0 fits nothing.
+    */
+  private[ops] def postingsFit(postings: Long, bound: Long): Boolean =
+    bound > 0 && postings <= math.min(bound, 1L << 29)
+
+  /** The exact-Jaccard filter both candidate sources feed: (doc_a, doc_b,
+    * common, na, nb) to (doc_a, doc_b, jaccard) at or above `threshold`.
+    */
+  private[ops] def jaccardPairs(candidates: DataFrame, threshold: Double): DataFrame =
+    candidates
+      .withColumn("jaccard", round(col("common").cast("double") /
+        (col("na") + col("nb") - col("common")).cast("double"), 6))
+      .filter(col("jaccard") >= threshold)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
 
   /** (doc_a, doc_b, common, na, nb) for every pair sharing a retained
     * shingle, from a distributed inverted index over `sets` (__id, __th).
@@ -192,31 +226,45 @@ object MinHashLSH {
   }
 
   /** The candidates of [[distributedCandidates]] as a local frame built on
-    * the driver, or None when `sets` exceeds either bound or its ids are
-    * not distinct non-null longs (dense ordinals need distinct ids; null
-    * and repeated ids keep the distributed path's handling). Pairs that
-    * cannot reach `threshold` are dropped early; the margin keeps every
-    * pair whose ROUNDED jaccard could.
+    * the driver, or None when the pair emissions exceed `bound` or the ids
+    * are not distinct non-null longs (dense ordinals need distinct ids;
+    * null and repeated ids keep the distributed path's handling).
     */
   private def candidatesOnDriver(sets: DataFrame, threshold: Double,
                                  maxDf: Int, bound: Long): Option[DataFrame] = {
-    if (bound <= 0 || sets.schema("__id").dataType != LongType) return None
     val spark = sets.sparkSession
     import spark.implicits._
-    // the postings must also fit the index's int-indexed arrays
-    val total = sets.agg(sum(size(col("__th")))).head()
-    if (!total.isNullAt(0) && total.getLong(0) > math.min(bound, 1L << 29)) return None
     val docs = sets.as[(java.lang.Long, Array[Long])].collect()
-    if (docs.exists(_._1 == null)) return None
-    // ordinal = rank of the id, so ordinal order is id order
-    val ids = docs.map(_._1.longValue)
-    java.util.Arrays.sort(ids)
-    if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
-    val byOrdinal = new Array[Array[Long]](docs.length)
-    docs.foreach { case (id, set) => byOrdinal(java.util.Arrays.binarySearch(ids, id)) = set }
-    val index = new ShingleIndex(byOrdinal, maxDf)
-    if (index.emissions > bound) return None
-    Some(index.pairs(threshold - 1e-6)
+    sortedDistinct(docs.map(_._1)).flatMap { ids =>
+      val byOrdinal = new Array[Array[Long]](docs.length)
+      docs.foreach { case (id, set) => byOrdinal(java.util.Arrays.binarySearch(ids, id)) = set }
+      indexCandidates(spark, ids, byOrdinal, threshold, maxDf, bound)
+    }
+  }
+
+  /** `ids` ascending, or None when one is null or repeats. */
+  private[ops] def sortedDistinct(ids: Array[java.lang.Long]): Option[Array[Long]] = {
+    if (ids.contains(null)) return None
+    val sorted = ids.map(_.longValue)
+    java.util.Arrays.sort(sorted)
+    if ((1 until sorted.length).exists(i => sorted(i) == sorted(i - 1))) None
+    else Some(sorted)
+  }
+
+  /** The (doc_a, doc_b, common, na, nb) candidates of a [[ShingleIndex]]
+    * over doc `ids(i)`'s set `sets(i)`, ids ascending, as a local frame; or
+    * None when the index's pair emissions exceed `bound`. Pairs that cannot
+    * reach `threshold` are dropped early; the margin keeps every pair whose
+    * ROUNDED jaccard could.
+    */
+  private[ops] def indexCandidates(
+      spark: org.apache.spark.sql.SparkSession, ids: Array[Long],
+      sets: Array[Array[Long]], threshold: Double, maxDf: Int,
+      bound: Long): Option[DataFrame] = {
+    import spark.implicits._
+    val index = new ShingleIndex(sets, maxDf)
+    if (index.emissions > bound) None
+    else Some(index.pairs(threshold - 1e-6)
       .map { case (a, b, c, na, nb) => (ids(a), ids(b), c, na, nb) }
       .toSeq.toDF("doc_a", "doc_b", "common", "na", "nb"))
   }
@@ -442,8 +490,7 @@ object MinHashLSH {
     // signature AND the exact verification merge below. Bit-identical to
     // the HOF reference — pinned by spec.
     val hashed = df.repartition(par).select(col(idCol).as("__id"),
-        graft.functions.HashExpressions
-          .shingleHash60Array(TF.tokens(col(textCol)), w).as("__th"))
+        shingleSets(col(textCol), w).as("__th"))
       .select(col("__id"), size(col("__th")).as("__n"), col("__th"))
     // The banded self-join + the two verification joins would otherwise
     // re-evaluate the hashing subtree once per reference — materialize it

@@ -3,7 +3,7 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{array, least, lit, map}
+import org.apache.spark.sql.functions.{array, concat, least, lit, map}
 import graft.{Queries, TestSpark}
 
 /** Operators materialize their shared intermediates call-scoped (eager
@@ -193,6 +193,20 @@ class CacheRetentionSpec extends AnyFunSuite {
         .exactNearDuplicates(bad, "doc_id", "text", driverThreshold = driverThreshold))
       assert((persistedIds() -- before).isEmpty,
         s"a failed pass at driverThreshold $driverThreshold left its pin persisted")
+    }
+  }
+
+  test("nearDupGroups releases its pinned corpus when a step throws") {
+    // string ids pass the pin (the canonical min and the hashing), then
+    // fail in the pair pass, whose pairs carry long ids
+    val bad = corpus(6).select(concat(lit("d"), $"doc_id").as("doc_id"), $"text")
+    for (driverThreshold <- Seq(1L << 20, 0L)) {
+      val before = persistedIds()
+      val e = intercept[Exception](Dedup
+        .nearDupGroups(bad, "doc_id", "text", driverThreshold = driverThreshold))
+      assert(e.getMessage.contains("CAST_INVALID_INPUT"), e.getMessage)
+      assert((persistedIds() -- before).isEmpty,
+        s"a failed grouping at driverThreshold $driverThreshold left its pin persisted")
     }
   }
 
