@@ -126,7 +126,7 @@ object Dedup {
     * shingle set ([[MinHashLSH.exactNearDuplicates]]') is computed there.
     * (id, canonical id, set or null) is pinned for the call, and the pin's
     * own job observes the row count and the posting total. While both are
-    * at most `driverThreshold`, the ids are distinct non-null longs and
+    * at most `driverThreshold`, the ids are distinct and non-null and
     * the canonical docs' pair emissions Σ C(df, 2) are at most
     * `driverThreshold` too, the rest runs on the driver: the exact pair
     * pass's inverted index over the canonical sets, the same Jaccard
@@ -139,36 +139,37 @@ object Dedup {
     * paths return identical rows (spec-pinned); `driverThreshold = 0`
     * forces every step distributed. Each distinct content lands whole in
     * one task, so one very large exact-duplicate group is one long task.
+    * Ids follow [[MinHashLSH.exactNearDuplicates]]' contract: long or int,
+    * checked before the pin; `group_id` has the id's type.
     */
   def nearDupGroups(
       df: DataFrame, idCol: String, textCol: String,
       w: Int = 3, threshold: Double = 0.5, maxDf: Int = 256,
       driverThreshold: Long = 1L << 20): DataFrame = {
     require(maxDf >= 0, s"maxDf=$maxDf must be >= 0")
+    val ids = MinHashLSH.idType(df, idCol)
     val par = df.sparkSession.sparkContext.defaultParallelism
-    val hashed = withCanonical(df.select(col(idCol).as("__id"),
+    val hashed = withCanonical(df.select(col(idCol).cast(LongType).as("__id"),
           fingerprint(Seq(textCol)).as("__fp"), col(textCol).as("__text"))
         .repartition(par, col("__fp")))
       .select(col("__id"), col("canonical_id"),
         when(col("__id") === col("canonical_id"),
           MinHashLSH.shingleSets(col("__text"), w)).as("__th"))
-    Materialize.scopedObserving(hashed, count(lit(1)), MinHashLSH.postingTotal) {
-      (docs, seen) =>
-        val postings = seen.getLong(1)
-        // exact copies hold no set, so the rows are bounded on their own
-        val driver =
-          if (seen.getLong(0) <= driverThreshold &&
-              MinHashLSH.postingsFit(postings, driverThreshold) &&
-              docs.schema("__id").dataType == LongType)
-            groupsOnDriver(docs, idCol, threshold, maxDf, driverThreshold)
-          else None
-        driver.getOrElse(
-          groupsDistributed(docs, postings, idCol, threshold, maxDf, driverThreshold))
-    }
+    MinHashLSH.withIdType(Materialize.scopedObserving(hashed, count(lit(1)),
+        MinHashLSH.postingTotal) { (docs, seen) =>
+      val postings = seen.getLong(1)
+      // exact copies hold no set, so the rows are bounded on their own
+      val driver =
+        if (seen.getLong(0) <= driverThreshold && MinHashLSH.postingsFit(postings, driverThreshold))
+          groupsOnDriver(docs, idCol, threshold, maxDf, driverThreshold)
+        else None
+      driver.getOrElse(
+        groupsDistributed(docs, postings, idCol, threshold, maxDf, driverThreshold))
+    }, ids, idCol, "group_id")
   }
 
   /** [[nearDupGroups]] on the driver over the pinned (__id, canonical_id,
-    * __th) rows, or None when the ids are not distinct non-null longs or
+    * __th) rows, or None when the ids are not distinct and non-null or
     * the canonical docs' pair emissions exceed `bound`.
     */
   private def groupsOnDriver(docs: DataFrame, idCol: String, threshold: Double,

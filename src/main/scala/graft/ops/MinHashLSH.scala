@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 import graft.functions.{TextFunctions => TF}
 
 /** MinHash + LSH near-duplicate detection over document shingles — the
@@ -96,8 +96,8 @@ object MinHashLSH {
     * pinned for the call; the pin's own job also observes their total
     * posting count (one (shingle, doc) entry per element of a doc's set),
     * so no second pass over the sets reads it. When that
-    * total is at most `driverThreshold`, the ids are non-null, distinct
-    * longs, and the candidate emissions Σ C(df, 2) over the postings that
+    * total is at most `driverThreshold`, the ids are non-null and
+    * distinct, and the candidate emissions Σ C(df, 2) over the postings that
     * survive the df-cut are at most `driverThreshold` too, the sets are
     * collected and the inverted index runs on the driver: dense doc
     * ordinals, postings in primitive arrays, and one counter array reused
@@ -121,6 +121,10 @@ object MinHashLSH {
     * standard df-cut vocabulary of all-pairs similarity search, not a
     * silent downward bias on full-set Jaccard. A pair whose only overlap
     * was over-cap shingles disappears (its retained overlap is 0).
+    *
+    * Ids are long or int ([[idType]]); int ids run widened to long and
+    * come back as int. Any other id type fails with an
+    * `IllegalArgumentException` before anything runs.
     */
   def exactNearDuplicates(
       df: DataFrame,
@@ -131,15 +135,33 @@ object MinHashLSH {
       maxDf: Int = 256,
       driverThreshold: Long = 1L << 20): DataFrame = {
     require(maxDf >= 0, s"maxDf=$maxDf must be >= 0")
+    val ids = idType(df, idCol)
     val par = df.sparkSession.sparkContext.defaultParallelism
     // the posting total picks the candidate source before either reads
     // the sets, so one job pins and counts them; the returned plan reads
     // only a driver-built or eager frame
-    Materialize.scopedObserving(df.repartition(par).select(col(idCol).as("__id"),
-        shingleSets(col(textCol), w).as("__th")), postingTotal) { (sets, seen) =>
+    withIdType(Materialize.scopedObserving(df.repartition(par).select(
+        col(idCol).cast(LongType).as("__id"), shingleSets(col(textCol), w).as("__th")),
+        postingTotal) { (sets, seen) =>
       exactPairs(sets, seen.getLong(0), threshold, maxDf, driverThreshold)
-    }
+    }, ids, "doc_a", "doc_b")
   }
+
+  /** The id contract of the exact passes ([[exactNearDuplicates]],
+    * [[exactNearDuplicatesCollapsed]], [[Dedup.nearDupGroups]]), checked
+    * at entry before anything is pinned: long ids, or int ids, which run
+    * widened to long. Returns the caller's id type for [[withIdType]].
+    */
+  private[ops] def idType(df: DataFrame, idCol: String): DataType = {
+    val t = df.select(col(idCol)).schema.head.dataType
+    require(t == LongType || t == IntegerType,
+      s"id column $idCol is ${t.simpleString}; the exact near-dup passes take int or long ids")
+    t
+  }
+
+  /** `df` with its long id columns `cols` cast back to the caller's `ids`. */
+  private[ops] def withIdType(df: DataFrame, ids: DataType, cols: String*): DataFrame =
+    if (ids == LongType) df else df.withColumns(cols.map(c => c -> col(c).cast(ids)).toMap)
 
   /** The fused shingle+hash set of a text column: the sorted distinct
     * 60-bit hashes of its `w`-token shingles, never null. A text shorter
@@ -156,7 +178,7 @@ object MinHashLSH {
   private[ops] def exactPairs(sets: DataFrame, postings: Long, threshold: Double,
                               maxDf: Int, driverThreshold: Long): DataFrame = {
     val driver =
-      if (postingsFit(postings, driverThreshold) && sets.schema("__id").dataType == LongType)
+      if (postingsFit(postings, driverThreshold))
         candidatesOnDriver(sets, threshold, maxDf, driverThreshold)
       else None
     jaccardPairs(driver.getOrElse(distributedCandidates(sets, maxDf)), threshold)
@@ -227,7 +249,7 @@ object MinHashLSH {
 
   /** The candidates of [[distributedCandidates]] as a local frame built on
     * the driver, or None when the pair emissions exceed `bound` or the ids
-    * are not distinct non-null longs (dense ordinals need distinct ids;
+    * are not distinct and non-null (dense ordinals need distinct ids;
     * null and repeated ids keep the distributed path's handling).
     */
   private def candidatesOnDriver(sets: DataFrame, threshold: Double,
@@ -451,6 +473,7 @@ object MinHashLSH {
       threshold: Double = 0.5,
       maxDf: Int = 256,
       driverThreshold: Long = 1L << 20): (DataFrame, DataFrame) = {
+    idType(df, idCol) // before collapseByContent pins its membership
     val (canonicalDocs, membership) = Dedup.collapseByContent(df, Seq(textCol), idCol)
     (exactNearDuplicates(canonicalDocs, idCol, textCol, w, threshold, maxDf,
         driverThreshold),

@@ -1,5 +1,12 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,6 +25,32 @@ import graft.ops.Materialize
   *    min/max stats on the sort keys — the same skipping effect.
   *  - `LowCardinality(String)` (`:445-448`) → parquet dictionary encoding,
   *    automatic.
+  *  - ClickHouse keeps each table's part list in memory, so a query never
+  *    rediscovers the table → [[read]] holds one store handle per
+  *    (session, table): the relation the first `spark.read.parquet`
+  *    resolved, with its schema and file index. Later reads build their
+  *    plans over it, so a query pays no file listing, partition inference
+  *    or schema-inference job.
+  *
+  * A handle is checked on every read by ONE `listStatus` of the table
+  * root: the names and modification times of its visible entries (the
+  * `ym=` directories of a partitioned table, the files of a flat one) and
+  * of `_SUCCESS` form its stamp, taken before the relation is resolved.
+  * Any difference re-resolves the table. Every writer that replaces a
+  * month (a new `ym=` directory), adds or drops one, or commits a job at
+  * the root (`_SUCCESS`) changes the stamp: this store's `write`,
+  * `compact` and `writeClustered`, `IncrementalIngest.upsertBatch` and
+  * outside writers alike. The limit: a file system without directory
+  * modification times, such as an object store, shows a commit only
+  * through `_SUCCESS`. A month replaced in place (dynamic partition
+  * overwrite) leaves the root `_SUCCESS` as it was, so the two writers
+  * that do that, `compact` and `IncrementalIngest.upsertBatch`, also drop
+  * the handles on their table themselves ([[forget]]); an outside writer
+  * of that kind on such a store goes unseen.
+  *
+  * A handle holds no cached data: it registers no `CacheManager` entry and
+  * persists no RDD. There is at most one per (session, qualified path),
+  * and the handles of a session go when its `SparkContext` stops.
   *
   * At 100 TB: month × key-hash gives bounded file counts; the sorted layout
   * makes point/range reads on (key, time) touch O(1) row groups.
@@ -43,9 +76,75 @@ object PartitionedStore {
       .parquet(dir)
   }
 
-  /** Read it back; month-range predicates prune directories automatically. */
+  /** Read it back through the session's store handle; month-range
+    * predicates prune directories automatically. A missing table fails as
+    * `spark.read.parquet` does.
+    */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    readIfExists(spark, dir).getOrElse(spark.read.parquet(dir))
+
+  /** [[read]], or None when nothing exists at `dir`. */
+  private[graft] def readIfExists(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val (fs, root) = qualified(spark, dir)
+    val key = (spark, root.toString)
+    stamp(fs, root) match {
+      case None =>
+        handles.synchronized(handles.remove(key))
+        None
+      case Some(now) =>
+        handles.synchronized(handles.get(key)).filter(_.stamp == now).map(_.table)
+          .orElse {
+            val table = spark.read.parquet(dir)
+            hold(key, Handle(now, table))
+            Some(table)
+          }
+    }
+  }
+
+  /** Drops every session's handle on the table at `dir`: for a writer
+    * whose commit the root listing may not show (see the object's doc).
+    */
+  private[graft] def forget(spark: SparkSession, dir: String): Unit = {
+    val root = qualified(spark, dir)._2.toString
+    handles.synchronized(handles.filterInPlace((k, _) => k._2 != root))
+  }
+
+  private def qualified(spark: SparkSession, dir: String): (FileSystem, Path) = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs, fs.makeQualified(root))
+  }
+
+  /** A resolved table and the root listing it was resolved after. */
+  private final case class Handle(stamp: Map[String, Long], table: DataFrame)
+
+  /** The handles, guarded by itself. */
+  private val handles = mutable.Map.empty[(SparkSession, String), Handle]
+  /** The contexts that drop their sessions' handles when they stop: a
+    * held table references its session, so only that eviction lets a
+    * stopped session go.
+    */
+  private val watched = new java.util.WeakHashMap[SparkContext, java.lang.Boolean]
+
+  private def hold(key: (SparkSession, String), handle: Handle): Unit = {
+    val sc = key._1.sparkContext
+    handles.synchronized {
+      handles(key) = handle
+      if (watched.put(sc, true) == null) sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+          handles.synchronized(handles.filterInPlace((k, _) => !k._1.sparkContext.isStopped))
+      })
+    }
+  }
+
+  /** Name → modification time of `root`'s visible entries and `_SUCCESS`
+    * (one listing), or None when `root` does not exist.
+    */
+  private def stamp(fs: FileSystem, root: Path): Option[Map[String, Long]] =
+    try Some(fs.listStatus(root).iterator.map(s => s.getPath.getName -> s.getModificationTime)
+      .filter { case (n, _) => n == "_SUCCESS" || !(n.startsWith("_") || n.startsWith(".")) }
+      .toMap)
+    catch { case _: FileNotFoundException => None }
 
   /** Compact the small files continuous ingest accumulates — the
     * maintenance op every streaming-written table needs (each micro-batch
@@ -84,11 +183,12 @@ object PartitionedStore {
       // an eager checkpoint = the repo's read-then-overwrite-same-path write
       // barrier (IncrementalIngest precedent): rows are materialized on
       // executors before the partition they came from is replaced
-      Materialize.scoped(spark.read.parquet(dir).filter(col("ym") === ym)
+      Materialize.scoped(read(spark, dir).filter(col("ym") === ym)
           .repartitionByRange(want, sortCols.map(col): _*)
           .sortWithinPartitions(sortCols.map(col): _*)) { rows =>
-        rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        try rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy("ym").parquet(dir)
+        finally forget(spark, dir)
       }
     }
     plan

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.{Dedup, Materialize}
+import graft.sources.PartitionedStore
 
 /** Incremental ingest: the Spark-native restatement of the reference's
   * scheduler loop + checkpoint + upsert storage (SURVEY.md §2.10 T1–T5):
@@ -27,9 +28,10 @@ import graft.ops.{Dedup, Materialize}
   */
 object IncrementalIngest {
 
-  /** Merge `batch` into the partitioned parquet table at `tableDir`,
-    * keep-last per `keys` ordered by `version`. Only partitions present in
-    * the batch are rewritten.
+  /** Merge `batch` into the partitioned parquet table at `tableDir` (a
+    * path or URI of any Hadoop file system), keep-last per `keys` ordered
+    * by `version`. Only partitions present in the batch are rewritten. The
+    * table is read through [[PartitionedStore.read]]'s store handle.
     */
   def upsertBatch(
       spark: SparkSession,
@@ -42,13 +44,12 @@ object IncrementalIngest {
     val yms = withYm.select("ym").distinct().collect().map(_.getString(0)).toSeq
     if (yms.isEmpty) return
 
-    val existing: DataFrame =
-      if (new java.io.File(tableDir).exists())
-        spark.read.parquet(tableDir)
-          .filter(col("ym").isin(yms: _*))
-          .select(withYm.columns.map(col): _*)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], withYm.schema)
+    // the table through the session's store handle, checked against its
+    // root listing (PartitionedStore.read); no table at all, through any
+    // file system, is an empty one
+    val existing: DataFrame = PartitionedStore.readIfExists(spark, tableDir)
+      .map(_.filter(col("ym").isin(yms: _*)).select(withYm.columns.map(col): _*))
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], withYm.schema))
 
     val merged = Dedup.keepLast(existing.unionByName(withYm), keys, version)
     // The write overwrites partitions the plan just READ, so the merged
@@ -58,16 +59,20 @@ object IncrementalIngest {
     // write can only read the checkpointed blocks, never the inputs. (At
     // real scale: stage-and-swap or a snapshotting table format — the same
     // commit-then-delete discipline as the reference's cache loader,
-    // crypto_data_pipeline_clickhouse.py:644-649.)
+    // crypto_data_pipeline_clickhouse.py:644-649.) The rewrite puts new
+    // ym= directories in place but leaves the root _SUCCESS alone, so it
+    // drops the table's store handles itself: where directories carry no
+    // modification time (an object store) the root listing cannot show it.
     Materialize.scoped(merged) { staged =>
       // dynamic overwrite as a per-write option, never on the session: a
       // session-wide mode would make every later partitioned overwrite in
       // the session (e.g. PartitionedStore.write rebuilding a table) keep
       // the months its input does not cover
-      staged.write.mode("overwrite")
+      try staged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("ym")
         .parquet(tableDir)
+      finally PartitionedStore.forget(spark, tableDir)
     }
   }
 

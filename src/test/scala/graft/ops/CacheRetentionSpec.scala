@@ -2,8 +2,10 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{array, concat, least, lit, map}
+import org.apache.spark.sql.functions.{array, least, lit}
 import graft.{Queries, TestSpark}
 
 /** Operators materialize their shared intermediates call-scoped (eager
@@ -184,27 +186,36 @@ class CacheRetentionSpec extends AnyFunSuite {
     }
   }
 
+  /** The fault [[failingAfterPin]] injects. */
+  private final class PinReadFault extends RuntimeException("a step read the pin")
+
+  /** Runs `body` with an optimizer rule that throws on any plan reading a
+    * pinned frame: the first step of a pass after its pin fails.
+    */
+  private def failingAfterPin[A](body: => A): A = {
+    object FailOnPinRead extends Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan =
+        if (plan.exists(_.isInstanceOf[LogicalRDD])) throw new PinReadFault else plan
+    }
+    spark.experimental.extraOptimizations = Seq(FailOnPinRead)
+    try body finally spark.experimental.extraOptimizations = Nil
+  }
+
   test("exactNearDuplicates releases its pinned shingle sets when a step throws") {
-    // map-typed ids pass the hashing pin, then fail the postings sort
-    val bad = corpus(5).select(map($"doc_id", $"text").as("doc_id"), $"text")
     for (driverThreshold <- Seq(1L << 20, 0L)) {
       val before = persistedIds()
-      intercept[org.apache.spark.sql.AnalysisException](MinHashLSH
-        .exactNearDuplicates(bad, "doc_id", "text", driverThreshold = driverThreshold))
+      intercept[PinReadFault](failingAfterPin(MinHashLSH
+        .exactNearDuplicates(corpus(5), "doc_id", "text", driverThreshold = driverThreshold)))
       assert((persistedIds() -- before).isEmpty,
         s"a failed pass at driverThreshold $driverThreshold left its pin persisted")
     }
   }
 
   test("nearDupGroups releases its pinned corpus when a step throws") {
-    // string ids pass the pin (the canonical min and the hashing), then
-    // fail in the pair pass, whose pairs carry long ids
-    val bad = corpus(6).select(concat(lit("d"), $"doc_id").as("doc_id"), $"text")
     for (driverThreshold <- Seq(1L << 20, 0L)) {
       val before = persistedIds()
-      val e = intercept[Exception](Dedup
-        .nearDupGroups(bad, "doc_id", "text", driverThreshold = driverThreshold))
-      assert(e.getMessage.contains("CAST_INVALID_INPUT"), e.getMessage)
+      intercept[PinReadFault](failingAfterPin(Dedup
+        .nearDupGroups(corpus(6), "doc_id", "text", driverThreshold = driverThreshold)))
       assert((persistedIds() -- before).isEmpty,
         s"a failed grouping at driverThreshold $driverThreshold left its pin persisted")
     }

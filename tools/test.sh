@@ -19,6 +19,9 @@ if [ $# -eq 0 ]; then
 else
   for s in "$@"; do ARGS="$ARGS -s $s"; done
 fi
-exec java -cp "$CP" $ADDOPENS -Xmx"${SPARK_DRIVER_MEM:-24g}" \
+# heap: SPARK_DRIVER_MEM, else half the machine's memory clamped to 2-8g
+# (the same formula as the tier-1 command in ROADMAP.md)
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
+exec java -cp "$CP" $ADDOPENS -Xmx"$HEAP" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   org.scalatest.tools.Runner -o $ARGS
